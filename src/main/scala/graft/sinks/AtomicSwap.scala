@@ -67,6 +67,22 @@ object AtomicSwap {
       df.write.mode(SaveMode.Overwrite).parquet(staging)
     }
 
+  /** Keyed merge into the store at `livePath`: drop every row whose `key`
+    * is in `dirtyKeys`, append `fresh`, swap. The dirty keys are explicit,
+    * not derived from `fresh`, because a dirty key may have no fresh rows
+    * (a document rewritten to zero tokens must still lose its postings).
+    * Idempotent per batch: re-merging the same rows yields the same store.
+    */
+  def upsertByKey(spark: SparkSession, livePath: String, fresh: DataFrame,
+                  dirtyKeys: DataFrame, key: String): Unit = {
+    recover(spark, livePath)
+    val merged =
+      if (!fs(spark, livePath).exists(new org.apache.hadoop.fs.Path(livePath))) fresh
+      else spark.read.parquet(livePath).join(dirtyKeys, Seq(key), "left_anti")
+        .unionByName(fresh)
+    replace(spark, merged, livePath)
+  }
+
   /** The ONE copy of the build-or-serve guard every store builder shares:
     * materialize `df` at `path` iff nothing lives there yet, return the
     * path. Callers memoizing paths in a ConcurrentHashMap must resolve any

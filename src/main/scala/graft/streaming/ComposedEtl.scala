@@ -1,39 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's loop updates EVERY index per round from one change
   * detection (etl/main.py:357-385: each iteration runs all pipelines back
-  * to back before sleeping) — this is that tick composed across the three
-  * maintained stores this engine serves queries from:
-  *
-  *   1. detect dirty ids ONCE from the watermarked change feed,
-  *   2. rebuild the full documents for the dirty ids → doc store
-  *      ([[IncrementalDocPipeline.upsertDocs]]),
-  *   3. re-index their postings → postings store
-  *      ([[IncrementalPostings.upsert]]),
-  *   4. re-assign their embeddings cell-wise → vector store
-  *      ([[IncrementalVectors.upsert]]),
-  *   5. commit ONE watermark, after ALL three sinks.
-  *
-  * Consistency model (the reason the watermark is singular and last): each
-  * store's upsert is idempotent and individually crash-safe (staged rename
-  * swaps, ghost-safe merges), so the composed tick needs no cross-store
-  * transaction — a crash between any two stages leaves the watermark
-  * unadvanced, the next tick re-detects the SAME dirty batch and re-runs
-  * every stage, and the already-updated stores converge to the same bytes
-  * while the stale ones catch up. At no point can a store be half-written
-  * (per-store swap discipline) and at no point can the watermark claim a
-  * batch any store has not absorbed (commit ordering). This is exactly the
-  * reference's commit-after-es.bulk contract (etl/main.py:159-177) lifted
-  * to three sinks.
-  *
-  * Scale shape: one detection job; the dirty batch is persisted so every
-  * stage reads one materialization of a possibly-live feed (the
-  * [[IncrementalVectorPipeline]] lesson); doc rebuild semi-join-prunes
-  * before aggregation; postings/vector merges rewrite only dirty doc rows /
-  * affected cells. Per-tick cost is O(dirty), never O(store).
+  * to back before sleeping) — this is that [[CdcTick]] composed across the
+  * three maintained stores this engine serves queries from: the dirty ids'
+  * full documents → doc store ([[IncrementalDocPipeline.upsertDocs]]),
+  * their latest text's postings → postings store
+  * ([[IncrementalPostings.upsert]]), their latest embeddings cell-wise →
+  * vector store ([[IncrementalVectors.upsert]]), then (when wired) the
+  * reference's es.bulk delivery of the committed docs, then ONE watermark.
+  * Per-tick cost is O(dirty), never O(store).
   */
 class ComposedEtlPipeline(
     changes: SparkSession => DataFrame, // (id, text, label, v, modified)
@@ -43,134 +22,20 @@ class ComposedEtlPipeline(
     postingsStorePath: String,
     vectorStorePath: String,
     statePath: String,
-    stampTimestamps: Boolean = false,
-    // the reference's es.bulk network delivery under the COMPOSED tick
-    // (r14 verdict task 7): invoked with the tick's rebuilt docs after all
-    // three stores commit and before the single watermark commit — so a
-    // delivery failure (sink down mid-outage) leaves the watermark
-    // unmoved, the next tick re-detects the SAME dirty batch, the three
-    // idempotent store upserts converge to identical bytes, and delivery
-    // retries until the wire heals (ComposedEtlSpec proves it against a
-    // live in-process ES stub with injected faults). Same named no-op
-    // sentinel as [[IncrementalDocPipeline]]: with no deliverer wired the
-    // rebuilt docs have one consumer and skip the persist.
-    deliver: (SparkSession, DataFrame) => Unit = IncrementalDocPipeline.NoDeliver) {
+    deliver: (SparkSession, DataFrame) => Unit = IncrementalDocPipeline.NoDeliver)
+    extends CdcTick(changes, "id", statePath) {
 
-  private val Epoch = java.sql.Timestamp.valueOf("1000-01-01 00:00:00")
-
-  def currentWatermark(spark: SparkSession): java.sql.Timestamp = {
-    // existence check first: exception-driven first-run detection would
-    // dump an analysis stacktrace into every fresh pipeline's log
-    val p = new org.apache.hadoop.fs.Path(statePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Epoch
-    else
-      try {
-        val r = spark.read.parquet(statePath).agg(max("wm")).head
-        if (r.isNullAt(0)) Epoch else r.getTimestamp(0)
-      } catch { case _: Exception => Epoch }
-  }
-
-  /** Crash-injection seam for the consistency spec: called after each sink
-    * stage ("docs", "postings", "vectors") commits. A test overrides it to
-    * throw, simulating a crash BETWEEN stages — production code leaves it
-    * a no-op.
-    */
-  protected def afterStage(stage: String): Unit = ()
-
-  /** One composed tick. Returns the number of distinct dirty ids absorbed
-    * into all three stores (0 = caught up, nothing touched).
-    */
-  def tick(spark: SparkSession): Long = {
-    val wm = currentWatermark(spark)
-    // ONE detection, ONE materialization: every stage below (the watermark
-    // aggregate, the doc rebuild's semi-join, the postings recompute, the
-    // vector re-assignment) reads this persisted batch, so a live change
-    // feed cannot show different rows to different stages — the silent-loss
-    // hazard the per-store vector tick already defends against.
-    val dirty = changes(spark).filter(col("modified") > lit(wm)).persist()
-    try {
-      val head = dirty.agg(
-        count(lit(1)).as("n_changes"),
-        max("modified").as("new_wm"),
-        countDistinct("id").as("n_ids")).head
-      if (head.getLong(0) == 0L) return 0L
-      val newWm = head.getTimestamp(1)
-
-      // an id changed twice in one batch: every store absorbs its LATEST
-      // row — max by (modified, payload) struct, deterministic on ties,
-      // the same last-row-wins the per-store ticks implement
-      val latest = dirty
-        .groupBy(col("id"))
-        .agg(max(struct(col("modified"), col("text"), col("label"), col("v"))).as("m"))
-        .select(col("id"),
-          col("m").getField("text").as("text"),
-          col("m").getField("label").as("label"),
-          col("m").getField("v").as("v"))
-        .persist()
-      try {
-        // stage 1: full-document rebuild for the dirty ids (T4 dirty-ids-
-        // first semantics — docBuilder prunes its sources by semi-join).
-        // With a deliverer wired the rebuilt docs gain a second consumer
-        // (the network delivery below), so they persist across both — the
-        // same two-consumer rule as the per-store pipeline: the delivery
-        // must ship the exact doc version the store committed.
-        val delivering = deliver ne IncrementalDocPipeline.NoDeliver
-        val built = docBuilder(spark, dirty.select("id").distinct())
-        val docs = if (delivering) built.persist() else built
-        try {
-          // keep the COMMITTED frame when delivering: with
-          // stampTimestamps=true it is the stamped version the store
-          // absorbed, and stage 4 must ship exactly that (r15 advice)
-          val committed = IncrementalDocPipeline.upsertDocs(
-            spark, docStorePath, docs, stampTimestamps,
-            retainCommitted = delivering)
-          afterStage("docs")
-
-          // stage 2: search index — drop every posting of a dirty id,
-          // append its recomputed rows
-          IncrementalPostings.upsert(spark, postingsStorePath,
-            latest.select(col("id").as("doc_id"), col("text")))
-          afterStage("postings")
-
-          // stage 3: vector index — cell-wise merge, only affected cells
-          // rewritten
-          IncrementalVectors.upsert(spark, vectorStorePath,
-            latest.select(col("id").as("vec_id"), col("label"), col("v")), codebook)
-          afterStage("vectors")
-
-          // stage 4 (when wired): the reference's es.bulk network delivery
-          // — last sink before the commit, so an outage pins the watermark
-          // while the three stores stay converged; re-delivery next tick is
-          // absorbed by the _id upsert (idempotent wire)
-          if (delivering) {
-            try deliver(spark, committed)
-            finally if (committed ne docs) committed.unpersist()
-            afterStage("deliver")
-          }
-
-          // SINGLE commit, after all sinks: the watermark never claims a
-          // batch any sink has not absorbed
-          import spark.implicits._
-          Seq(newWm).toDF("wm").write.mode(SaveMode.Overwrite).parquet(statePath)
-          head.getLong(2)
-        } finally if (delivering) docs.unpersist()
-      } finally latest.unpersist()
-    } finally dirty.unpersist()
-  }
-
-  /** Run ticks until caught up (the test/batch driver's poll loop). */
-  def runUntilCaughtUp(spark: SparkSession, maxTicks: Int = 100): Long = {
-    var total = 0L
-    var n = 0
-    while (n < maxTicks) {
-      val done = tick(spark)
-      if (done == 0) return total
-      total += done
-      n += 1
+  protected def sinks(spark: SparkSession, batch: CdcTick.Batch): Unit =
+    docsThenDeliver(spark, batch, docBuilder, docStorePath,
+      stampTimestamps = false, deliver) {
+      val latest = batch.latest
+      IncrementalPostings.upsert(spark, postingsStorePath,
+        latest.select(col("id").as("doc_id"), col("text")))
+      afterStage("postings")
+      IncrementalVectors.upsert(spark, vectorStorePath,
+        latest.select(col("id").as("vec_id"), col("label"), col("v")), codebook)
+      afterStage("vectors")
     }
-    total
-  }
 }
 
 /** The composed tick as a DRIVER-GATED query (q_composed_tick): run the

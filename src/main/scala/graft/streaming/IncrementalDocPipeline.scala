@@ -1,28 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The reference's ETL tick (etl/main.py:357-385) rebuilt correctly:
-  *
-  *   1. detect dirty document ids from watermarked change scans (T3),
-  *   2. rebuild the FULL document for each dirty id (not just the changed
-  *      join rows — fixing the reference's filter-before-group bug, SURVEY
-  *      T4),
-  *   3. upsert into the doc store idempotently by id (T2/T7: at-least-once
-  *      delivery + idempotent sink = effectively once),
-  *   4. persist the new watermark only after the sink commit (T2).
-  *
-  * The watermark store is a single-row parquet table (the analog of
-  * etl/json/storage.json); a Structured Streaming deployment would let the
-  * checkpoint do this — kept explicit here so the batch driver, the test
-  * harness, and a foreachBatch stream all share one code path.
-  *
-  * Scale shape: the dirty-id set stays a DataFrame end to end — `docBuilder`
-  * receives it and left-semi-joins the fact side on it, so a million-id
-  * backfill is a shuffle (or broadcast, when small — AQE decides), never a
-  * driver collect / giant in-list. The only driver-side value per tick is the
-  * 1-row (count, max(modified)) aggregate.
+/** The reference's ETL tick (etl/main.py:357-385) rebuilt correctly, as a
+  * one-store [[CdcTick]]: the dirty ids' FULL documents (not just the
+  * changed join rows — SURVEY T4) upserted idempotently by id (T2/T7:
+  * at-least-once delivery + idempotent sink = effectively once), then the
+  * watermark. `docBuilder` receives the dirty-id DataFrame and
+  * left-semi-joins its sources on it, so a million-id backfill is a shuffle
+  * (or broadcast — AQE decides), never a driver collect or giant in-list.
   */
 class IncrementalDocPipeline(
     docBuilder: (SparkSession, DataFrame) => DataFrame, // dirty-ids DF ("id") → full docs
@@ -30,87 +16,20 @@ class IncrementalDocPipeline(
     storePath: String,
     statePath: String,
     stampTimestamps: Boolean = false, // F16: created/modified sink columns
-    // the reference's es.bulk delivery boundary: invoked with the tick's
-    // rebuilt docs AFTER the store upsert and BEFORE the watermark commit,
-    // so a delivery failure (network sink down) leaves the watermark
-    // unmoved and the same dirty ids re-deliver next tick — T2 against a
-    // real wire (see HttpSinkSpec/IncrementalPipelineSpec). Idempotent
-    // delivery (the _id upsert) absorbs the replay. The default is a NAMED
-    // no-op sentinel: with no deliverer the rebuilt docs have exactly one
-    // consumer (the store upsert), so the two-consumer persist below is
-    // skipped (it cost q_composed_tick +28% — r14 verdict watch item).
-    deliver: (SparkSession, DataFrame) => Unit = IncrementalDocPipeline.NoDeliver) {
+    // the reference's es.bulk delivery boundary, after the store upsert and
+    // before the watermark commit (see HttpSinkSpec/IncrementalPipelineSpec)
+    deliver: (SparkSession, DataFrame) => Unit = IncrementalDocPipeline.NoDeliver)
+    extends CdcTick(changes, "id", statePath) {
 
-  private val Epoch = java.sql.Timestamp.valueOf("1000-01-01 00:00:00")
-
-  def currentWatermark(spark: SparkSession): java.sql.Timestamp =
-    try {
-      val r = spark.read.parquet(statePath).agg(max("wm")).head
-      if (r.isNullAt(0)) Epoch else r.getTimestamp(0)
-    } catch { case _: Exception => Epoch }
-
-  /** One tick. Returns number of distinct dirty ids rebuilt (0 = caught up). */
-  def tick(spark: SparkSession): Long = {
-    val wm = currentWatermark(spark)
-    // strictly-greater + advance-to-max(modified): the reference's T3
-    // predicate with the equal-timestamp starvation quirk fixed
-    val dirty = changes(spark).filter(col("modified") > lit(wm))
-    // ONE detection job: emptiness check, new watermark, and rebuild count
-    // come from the same 1-row aggregate (a separate isEmpty would be a
-    // second scan of the change feed per tick)
-    val head = dirty.agg(
-      count(lit(1)).as("n_changes"),
-      max("modified").as("new_wm"),
-      countDistinct("id").as("n_ids")).head
-    if (head.getLong(0) == 0L) return 0L
-    val newWm = head.getTimestamp(1)
-    val nIds = head.getLong(2)
-
-    // persist across BOTH consumers when a deliverer is wired: without it
-    // the delivery action would re-run the whole rebuild query, and a
-    // concurrently-appended change row (or a nondeterministic tie) could
-    // hand ES a different doc version than the store committed while the
-    // watermark still advances (r14 review). With the no-op default there
-    // is only ONE consumer, so the materialization would be pure overhead
-    // (measured +28% on q_composed_tick) — skip it.
-    val delivering = deliver ne IncrementalDocPipeline.NoDeliver
-    val built = docBuilder(spark, dirty.select("id").distinct())
-    val docs = if (delivering) built.persist() else built
-    try {
-      // the returned frame is the STORE-COMMITTED version (stamped when
-      // stampTimestamps=true) — deliver THAT, never the pre-stamp `docs`
-      val committed = IncrementalDocPipeline.upsertDocs(
-        spark, storePath, docs, stampTimestamps, retainCommitted = delivering)
-      if (delivering) {
-        try deliver(spark, committed) // es.bulk: throws ⇒ watermark stays put
-        finally if (committed ne docs) committed.unpersist()
-      }
-    } finally if (delivering) docs.unpersist()
-    // commit watermark AFTER the sink write (reference commits after es.bulk)
-    import spark.implicits._
-    Seq(newWm).toDF("wm").write.mode(SaveMode.Overwrite).parquet(statePath)
-    nIds
-  }
-
-  /** Run ticks until caught up (the test/batch driver's poll loop). */
-  def runUntilCaughtUp(spark: SparkSession, maxTicks: Int = 100): Long = {
-    var total = 0L
-    var n = 0
-    while (n < maxTicks) {
-      val done = tick(spark)
-      if (done == 0) return total
-      total += done
-      n += 1
-    }
-    total
-  }
+  protected def sinks(spark: SparkSession, batch: CdcTick.Batch): Unit =
+    docsThenDeliver(spark, batch, docBuilder, storePath, stampTimestamps, deliver)(())
 }
 
 object IncrementalDocPipeline {
 
-  /** Named no-op delivery sentinel — reference identity tells [[tick]]
-    * whether a real deliverer is wired (persist + deliver) or not (single
-    * consumer: skip both).
+  /** Named no-op delivery sentinel — reference identity tells
+    * [[CdcTick.docsThenDeliver]] whether a real deliverer is wired
+    * (persist + deliver) or not (single consumer: skip both).
     */
   val NoDeliver: (SparkSession, DataFrame) => Unit = (_, _) => ()
 
@@ -137,11 +56,9 @@ object IncrementalDocPipeline {
     // complete and the live dir is gone — promote it instead of treating
     // this as first-run
     graft.sinks.AtomicSwap.recover(spark, storePath)
-    // resolve the FS from the store path so s3a://-style stores work
-    val dst = new org.apache.hadoop.fs.Path(storePath)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    val existing = if (fs.exists(dst)) Some(spark.read.parquet(storePath)) else None
+    val live = new org.apache.hadoop.fs.Path(storePath)
+    val existing = if (graft.sinks.AtomicSwap.fs(spark, storePath).exists(live))
+      Some(spark.read.parquet(storePath)) else None
     // F16 (models.py:9-17): auto_now_add/auto_now stamped at the sink — the
     // created-preserving join keys on the same id the merge shuffles on
     val stamped =

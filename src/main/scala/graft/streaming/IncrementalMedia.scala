@@ -24,20 +24,9 @@ import org.apache.spark.sql.functions._
 object IncrementalMedia {
 
   /** Merge freshly-encoded dirty payloads into the store at `storePath`. */
-  def upsert(spark: SparkSession, storePath: String, fresh: DataFrame): Unit = {
-    graft.sinks.AtomicSwap.recover(spark, storePath)
-    val storeP = new org.apache.hadoop.fs.Path(storePath)
-    val fs = storeP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (!fs.exists(storeP)) fresh
-      else {
-        val dirtyIds = fresh.select(col("doc_id")).distinct()
-        spark.read.parquet(storePath)
-          .join(dirtyIds, Seq("doc_id"), "left_anti")
-          .unionByName(fresh)
-      }
-    graft.sinks.AtomicSwap.replace(spark, merged, storePath)
-  }
+  def upsert(spark: SparkSession, storePath: String, fresh: DataFrame): Unit =
+    graft.sinks.AtomicSwap.upsertByKey(spark, storePath, fresh,
+      fresh.select(col("doc_id")).distinct(), "doc_id")
 
   /** The maintained store for the decode faces (schema-cached read). */
   def load(spark: SparkSession, storePath: String): DataFrame = {

@@ -38,23 +38,9 @@ object IncrementalPostings {
   /** Merge the dirty documents' postings into the store at `storePath`.
     * Idempotent per batch; crash-safe via the staged rename swap.
     */
-  def upsert(spark: SparkSession, storePath: String, dirtyDocs: DataFrame): Unit = {
-    val fresh = postingsOf(dirtyDocs)
-    graft.sinks.AtomicSwap.recover(spark, storePath)
-    // resolve the FS from the store path so s3a://-style stores work
-    val storeP = new org.apache.hadoop.fs.Path(storePath)
-    val fs = storeP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(storeP)
-    val merged =
-      if (!exists) fresh
-      else {
-        val dirtyIds = dirtyDocs.select(col("doc_id")).distinct()
-        spark.read.parquet(storePath)
-          .join(dirtyIds, Seq("doc_id"), "left_anti")
-          .unionByName(fresh)
-      }
-    graft.sinks.AtomicSwap.replace(spark, merged, storePath)
-  }
+  def upsert(spark: SparkSession, storePath: String, dirtyDocs: DataFrame): Unit =
+    graft.sinks.AtomicSwap.upsertByKey(spark, storePath, postingsOf(dirtyDocs),
+      dirtyDocs.select(col("doc_id")).distinct(), "doc_id")
 
   /** The maintained store as a postings DataFrame for the search faces.
     * Schema-cached read: (token, doc_id, tf) is the store's contract, so
@@ -67,49 +53,16 @@ object IncrementalPostings {
   }
 }
 
-/** The watermark-driven face of [[IncrementalPostings]] — the reference's
-  * search half of the tick as a pipeline: detect documents changed since
-  * the persisted watermark, merge their recomputed postings into the store,
-  * commit the watermark AFTER the sink (the same T2/T3 ordering
-  * [[IncrementalDocPipeline]] uses; a crash between sink and commit
-  * re-merges the batch, which the ghost-safe upsert absorbs — effectively
-  * once). With this, `ReferenceEtl`'s document rebuilds and the search
-  * index share one operational model: poll, prune to dirty, rebuild, swap.
+/** The watermark-driven face of [[IncrementalPostings]]: a one-store
+  * [[CdcTick]] that re-indexes each dirty document's LATEST text. With it,
+  * `ReferenceEtl`'s document rebuilds and the search index share one
+  * operational model: poll, prune to dirty, rebuild, swap.
   */
 class IncrementalSearchPipeline(
     changes: SparkSession => DataFrame, // (doc_id, text, modified)
     storePath: String,
-    statePath: String) {
+    statePath: String) extends CdcTick(changes, "doc_id", statePath) {
 
-  private val Epoch = java.sql.Timestamp.valueOf("1000-01-01 00:00:00")
-
-  def currentWatermark(spark: SparkSession): java.sql.Timestamp =
-    try {
-      val r = spark.read.parquet(statePath).agg(max("wm")).head
-      if (r.isNullAt(0)) Epoch else r.getTimestamp(0)
-    } catch { case _: Exception => Epoch }
-
-  /** One tick. Returns the number of distinct re-indexed doc ids. */
-  def tick(spark: SparkSession): Long = {
-    val wm = currentWatermark(spark)
-    val dirty = changes(spark).filter(col("modified") > lit(wm))
-    val head = dirty.agg(
-      count(lit(1)).as("n_changes"),
-      max("modified").as("new_wm"),
-      countDistinct("doc_id").as("n_ids")).head
-    if (head.getLong(0) == 0L) return 0L
-    // a doc changed twice in one batch: index its LATEST text — max by
-    // (modified, text) struct so equal-timestamp ties are still
-    // deterministic, the strictly-greater analog of the reference's
-    // last-row-wins bulk ordering
-    val latest = dirty
-      .groupBy(col("doc_id"))
-      .agg(max(struct(col("modified"), col("text"))).as("m"))
-      .select(col("doc_id"), col("m").getField("text").as("text"))
-    IncrementalPostings.upsert(spark, storePath, latest)
-    import spark.implicits._
-    Seq(head.getTimestamp(1)).toDF("wm")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(statePath)
-    head.getLong(2)
-  }
+  protected def sinks(spark: SparkSession, batch: CdcTick.Batch): Unit =
+    IncrementalPostings.upsert(spark, storePath, batch.latest)
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sinks.AtomicSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,14 +49,6 @@ object IncrementalVectors {
     vecs.select(col("vec_id"), col("label"), col("v"),
       call_function("ivf_assign", col("v"), typedlit(codebook)).as("cell"))
 
-  private def fsOf(spark: SparkSession, path: String) =
-    graft.sinks.AtomicSwap.fs(spark, path) // shared crash-critical helper
-
-  private def mustRename(f: org.apache.hadoop.fs.FileSystem,
-                         src: org.apache.hadoop.fs.Path,
-                         dst: org.apache.hadoop.fs.Path): Unit =
-    graft.sinks.AtomicSwap.mustRename(f, src, dst)
-
   /** Merge dirty (vec_id, label, v) rows into the store. Returns the
     * affected cell ids (empty dirty set ⇒ no-op). First call with no
     * store present builds it whole through the same staged-swap discipline
@@ -64,7 +57,7 @@ object IncrementalVectors {
   def upsert(spark: SparkSession, storePath: String, dirtyVecs: DataFrame,
              codebook: Seq[Seq[Double]]): Seq[Int] = {
     recoverCells(spark, storePath)
-    val f = fsOf(spark, storePath)
+    val f = AtomicSwap.fs(spark, storePath)
     val root = new org.apache.hadoop.fs.Path(storePath)
     // PERSIST the assigned batch: upsert runs several actions over it (the
     // old-cell collect, the staged write, the first-build cell listing),
@@ -79,7 +72,7 @@ object IncrementalVectors {
       // poisons every later schema read at this path
       if (fresh.isEmpty) return Seq.empty
       if (!f.exists(root)) {
-        graft.sinks.AtomicSwap.replaceWith(spark, storePath)(staging =>
+        AtomicSwap.replaceWith(spark, storePath)(staging =>
           graft.sources.BucketedLayout.writePartitioned(fresh, staging, "cell"))
         return fresh.select("cell").distinct() // cached — no re-assignment job
           .collect().map(_.getInt(0)).toSeq.sorted
@@ -162,8 +155,8 @@ object IncrementalVectors {
     * call at any time; every [[load]]/[[upsert]] does.
     */
   def recoverCells(spark: SparkSession, storePath: String): Unit = {
-    graft.sinks.AtomicSwap.recover(spark, storePath) // whole-store first build
-    val f = fsOf(spark, storePath)
+    AtomicSwap.recover(spark, storePath) // whole-store first build
+    val f = AtomicSwap.fs(spark, storePath)
     val root = new org.apache.hadoop.fs.Path(storePath)
     val staging = new org.apache.hadoop.fs.Path(root, ".staging")
     if (!f.exists(staging)) return
@@ -187,7 +180,7 @@ object IncrementalVectors {
             .filter(_.getName.startsWith("cell="))
             .foreach { aside =>
               val live = new org.apache.hadoop.fs.Path(root, aside.getName)
-              if (!f.exists(live)) mustRename(f, aside, live)
+              if (!f.exists(live)) AtomicSwap.mustRename(f, aside, live)
             }
       }
       f.delete(staging, true) // partial write: next tick rewrites it
@@ -205,7 +198,7 @@ object IncrementalVectors {
     * re-runnable.
     */
   private def commitStaged(spark: SparkSession, storePath: String): Unit = {
-    val f = fsOf(spark, storePath)
+    val f = AtomicSwap.fs(spark, storePath)
     val root = new org.apache.hadoop.fs.Path(storePath)
     val staging = new org.apache.hadoop.fs.Path(root, ".staging")
     val oldRoot = new org.apache.hadoop.fs.Path(root, ".old")
@@ -225,8 +218,8 @@ object IncrementalVectors {
       val aside = new org.apache.hadoop.fs.Path(oldRoot, name)
       if (f.exists(staged)) {
         f.delete(aside, true)
-        if (f.exists(live)) mustRename(f, live, aside)
-        mustRename(f, staged, live)
+        if (f.exists(live)) AtomicSwap.mustRename(f, live, aside)
+        AtomicSwap.mustRename(f, staged, live)
       } // staged gone ⇒ a prior pass already swapped this cell: no-op
     }
     drop.foreach { cid =>
@@ -246,54 +239,15 @@ object IncrementalVectors {
   }
 }
 
-/** The watermark-driven tick face of [[IncrementalVectors]] — the exact
-  * operational model [[IncrementalSearchPipeline]] runs for the postings
-  * index, pointed at the vector store: detect embeddings changed since the
-  * persisted watermark, merge them cell-wise, commit the watermark AFTER
-  * the sink (T2/T3 ordering — a crash between sink and commit re-merges
-  * the batch, which the ghost-safe idempotent upsert absorbs: effectively
-  * once). A vector re-embedded twice within one batch lands as its LATEST
-  * embedding (max by (modified, v) struct, deterministic on ties).
+/** The watermark-driven tick face of [[IncrementalVectors]]: a one-store
+  * [[CdcTick]] that merges each dirty vector's LATEST embedding cell-wise.
   */
 class IncrementalVectorPipeline(
     changes: SparkSession => DataFrame, // (vec_id, label, v, modified)
     codebook: Seq[Seq[Double]],
     storePath: String,
-    statePath: String) {
+    statePath: String) extends CdcTick(changes, "vec_id", statePath) {
 
-  private val Epoch = java.sql.Timestamp.valueOf("1000-01-01 00:00:00")
-
-  def currentWatermark(spark: SparkSession): java.sql.Timestamp =
-    try {
-      val r = spark.read.parquet(statePath).agg(max("wm")).head
-      if (r.isNullAt(0)) Epoch else r.getTimestamp(0)
-    } catch { case _: Exception => Epoch }
-
-  /** One tick. Returns the number of distinct re-embedded vec ids. */
-  def tick(spark: SparkSession): Long = {
-    val wm = currentWatermark(spark)
-    // PERSIST the batch before ANY action: the watermark aggregate and the
-    // upsert must read the SAME materialization of a possibly-live /
-    // non-deterministic changes source — otherwise a row with
-    // modified <= new_wm appearing between the two reads is never merged
-    // yet permanently filtered by the committed watermark (silent loss).
-    val dirty = changes(spark).filter(col("modified") > lit(wm)).persist()
-    try {
-      val head = dirty.agg(
-        count(lit(1)).as("n_changes"),
-        max("modified").as("new_wm"),
-        countDistinct("vec_id").as("n_ids")).head
-      if (head.getLong(0) == 0L) return 0L
-      val latest = dirty
-        .groupBy(col("vec_id"))
-        .agg(max(struct(col("modified"), col("label"), col("v"))).as("m"))
-        .select(col("vec_id"), col("m").getField("label").as("label"),
-          col("m").getField("v").as("v"))
-      IncrementalVectors.upsert(spark, storePath, latest, codebook)
-      import spark.implicits._
-      Seq(head.getTimestamp(1)).toDF("wm")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(statePath)
-      head.getLong(2)
-    } finally dirty.unpersist()
-  }
+  protected def sinks(spark: SparkSession, batch: CdcTick.Batch): Unit =
+    IncrementalVectors.upsert(spark, storePath, batch.latest, codebook)
 }

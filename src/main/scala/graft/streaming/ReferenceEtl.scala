@@ -29,8 +29,7 @@ import org.apache.spark.sql.functions._
 class ReferenceEtl(
     dataDir: String,
     workDir: String,
-    changes: SparkSession => DataFrame, // (order_id, part_id, supp_id, modified)
-    stampTimestamps: Boolean = false) {
+    changes: SparkSession => DataFrame) { // (order_id, part_id, supp_id, modified)
 
   private def keyed(keyCol: String)(s: SparkSession): DataFrame =
     changes(s).select(col(keyCol).as("id"), col("modified"))
@@ -39,22 +38,19 @@ class ReferenceEtl(
     docBuilder = (s, ids) => DocumentOps.orderDocsDF(s, dataDir, Some(ids)),
     changes = keyed("order_id"),
     storePath = s"$workDir/movies_store",
-    statePath = s"$workDir/movies_state",
-    stampTimestamps = stampTimestamps)
+    statePath = s"$workDir/movies_state")
 
   val genres = new IncrementalDocPipeline(
     docBuilder = (s, ids) => DocumentOps.genreDocsDF(s, dataDir, Some(ids)),
     changes = keyed("part_id"),
     storePath = s"$workDir/genres_store",
-    statePath = s"$workDir/genres_state",
-    stampTimestamps = stampTimestamps)
+    statePath = s"$workDir/genres_state")
 
   val persons = new IncrementalDocPipeline(
     docBuilder = (s, ids) => DocumentOps.personDocsDF(s, dataDir, Some(ids)),
     changes = keyed("supp_id"),
     storePath = s"$workDir/persons_store",
-    statePath = s"$workDir/persons_state",
-    stampTimestamps = stampTimestamps)
+    statePath = s"$workDir/persons_state")
 
   /** One round: tick all three pipelines (reference order: movies, genres,
     * persons). Returns rebuilt-doc counts per pipeline.

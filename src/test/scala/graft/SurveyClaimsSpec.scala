@@ -36,10 +36,13 @@ class SurveyClaimsSpec extends AnyFunSuite {
     * with the claims-block refresh in one commit.
     */
   private def latestArtifact(prefix: String): String = {
-    val names = new java.io.File(".").listFiles()
-      .map(_.getName).filter(n => n.startsWith(prefix) && n.endsWith(".json"))
-    assert(names.nonEmpty, s"no $prefix*.json artifacts in repo root")
-    names.max // zero-padded round numbers sort lexicographically
+    // official artifacts only: a `_cN` core-count cross-check
+    // (BENCH_r17_c8.json) sorts above its round but is not an anchor
+    val official = (java.util.regex.Pattern.quote(prefix) + "(\\d+)\\.json").r
+    val rounds = new java.io.File(".").listFiles().map(_.getName)
+      .collect { case n @ official(r) => r.toInt -> n }
+    assert(rounds.nonEmpty, s"no $prefix<N>.json artifacts in repo root")
+    rounds.max._2
   }
 
   private lazy val claims: Map[String, String] = {

@@ -9,8 +9,9 @@ the mechanized refresh so the per-round artifact hand-off
 (CORRECTNESS_r{N}.json / BENCH_r{N}.json landing on disk) stops requiring
 a hand-edit of SURVEY.md. Both sides implement the same contract:
 
-  - anchor to the lexicographically-newest CORRECTNESS_r*.json and
-    BENCH_r*.json in the repo root (round numbers are zero-padded);
+  - anchor to the highest-round CORRECTNESS_r<N>.json and BENCH_r<N>.json
+    in the repo root (`_cN` cross-checks such as BENCH_r17_c8.json are
+    not anchors);
   - correctness_total/green/red from the per-query three-gate rows;
   - bench_total_sec from the bench artifact's contract line (the last
     {"metric":...} line in its "tail");
@@ -29,11 +30,14 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def latest(prefix: str) -> str:
-    names = [n for n in os.listdir(ROOT)
-             if n.startswith(prefix) and n.endswith(".json")]
-    if not names:
-        raise SystemExit(f"no {prefix}*.json artifacts in {ROOT}")
-    return max(names)
+    # Official artifacts only: a `_cN` core-count cross-check
+    # (BENCH_r17_c8.json) sorts above its round but is not an anchor.
+    official = re.compile(re.escape(prefix) + r"(\d+)\.json")
+    rounds = [(int(m.group(1)), n) for n in os.listdir(ROOT)
+              for m in [official.fullmatch(n)] if m]
+    if not rounds:
+        raise SystemExit(f"no {prefix}<N>.json artifacts in {ROOT}")
+    return max(rounds)[1]
 
 
 def fmt_num(x: float) -> str:
