@@ -52,6 +52,29 @@ object Tables {
     spark.read.schema(schema).parquet(path)
   }
 
+  /** Record the schema of `path`'s CURRENT content — called by
+    * [[graft.sinks.AtomicSwap]] right after it swaps in files it wrote
+    * from a frame of schema `written`, so the next [[parquetCached]] read
+    * of a rewritten store skips footer inference. A parquet read reports
+    * every field nullable, so that is what is cached. Older versions of the
+    * path are evicted with it: a store rewritten every tick would otherwise
+    * leave one entry per tick behind.
+    */
+  private[graft] def seedSchema(spark: SparkSession, path: String,
+                                written: StructType): Unit = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+      case other => other
+    }
+    schemaCache.keySet.removeIf(_.startsWith(s"$path@"))
+    schemaCache.put(s"$path@${contentVersion(spark, path)}",
+      nullable(written).asInstanceOf[StructType])
+  }
+
   /** Cheap content fingerprint of a parquet dir: max file mtime + total
     * bytes + file count from ONE driver-side listing. Used to key the
     * schema cache and the derived stores (postings / unigram model / media

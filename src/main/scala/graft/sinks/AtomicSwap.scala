@@ -59,28 +59,66 @@ object AtomicSwap {
     ()
   }
 
+  /** A store rewrite whose Spark work is done: the new content sits in
+    * staging and only the driver-side swap is left. Exactly one of
+    * [[commit]] or [[discard]] runs; a CDC tick stages every store first
+    * and commits them in order only once all staged (see
+    * [[graft.streaming.CdcTick]]).
+    */
+  final class Staged private[graft] (swap: () => Unit, drop: () => Unit) {
+    def commit(): Unit = swap()
+    def discard(): Unit = drop()
+
+    /** This write, whose commit also seeds the schema cache of
+      * [[graft.Tables.parquetCached]] with the schema of the frame written,
+      * so the next read of the rewritten store infers nothing from footers.
+      */
+    private[graft] def seeding(spark: SparkSession, livePath: String,
+                               written: org.apache.spark.sql.types.StructType): Staged =
+      new Staged(() => {
+        swap()
+        graft.Tables.seedSchema(spark, livePath, written)
+      }, drop)
+  }
+
+  object Staged {
+    /** Nothing was staged (an empty batch): both ends are no-ops. */
+    val Empty: Staged = new Staged(() => (), () => ())
+  }
+
   /** Write `df` as the new content of `livePath` via the staged swap.
     * The write itself retries with backoff (overwrite ⇒ idempotent).
     */
   def replace(spark: SparkSession, df: DataFrame, livePath: String): Unit =
-    replaceWith(spark, livePath) { staging =>
+    stage(spark, df, livePath).commit()
+
+  /** [[replace]]'s Spark half; its commit seeds the store's schema. */
+  def stage(spark: SparkSession, df: DataFrame, livePath: String): Staged =
+    stageWith(spark, livePath) { staging =>
       df.write.mode(SaveMode.Overwrite).parquet(staging)
-    }
+    }.seeding(spark, livePath, df.schema)
 
   /** Keyed merge into the store at `livePath`: drop every row whose `key`
     * is in `dirtyKeys`, append `fresh`, swap. The dirty keys are explicit,
     * not derived from `fresh`, because a dirty key may have no fresh rows
-    * (a document rewritten to zero tokens must still lose its postings).
+    * (a document rewritten to zero tokens must still lose its postings),
+    * and may repeat: the anti-join drops a row once however often its key
+    * appears, so callers pass them without a distinct (one shuffle less).
     * Idempotent per batch: re-merging the same rows yields the same store.
     */
   def upsertByKey(spark: SparkSession, livePath: String, fresh: DataFrame,
-                  dirtyKeys: DataFrame, key: String): Unit = {
+                  dirtyKeys: DataFrame, key: String): Unit =
+    stageUpsertByKey(spark, livePath, fresh, dirtyKeys, key).commit()
+
+  /** [[upsertByKey]]'s Spark half: the merge written to staging. */
+  def stageUpsertByKey(spark: SparkSession, livePath: String, fresh: DataFrame,
+                       dirtyKeys: DataFrame, key: String): Staged = {
     recover(spark, livePath)
     val merged =
       if (!fs(spark, livePath).exists(new org.apache.hadoop.fs.Path(livePath))) fresh
-      else spark.read.parquet(livePath).join(dirtyKeys, Seq(key), "left_anti")
-        .unionByName(fresh)
-    replace(spark, merged, livePath)
+      else graft.Tables.parquetCached(spark, livePath)
+        .join(dirtyKeys, Seq(key), "left_anti").unionByName(fresh)
+    stage(spark, merged, livePath)
   }
 
   /** The ONE copy of the build-or-serve guard every store builder shares:
@@ -111,20 +149,36 @@ object AtomicSwap {
     * would otherwise serve it forever).
     */
   def replaceWith(spark: SparkSession, livePath: String)
-                 (write: String => Unit): Unit = {
+                 (write: String => Unit): Unit =
+    stageWith(spark, livePath)(write).commit()
+
+  /** [[replaceWith]]'s Spark half: the write into staging. Discarding
+    * deletes the staging, so a first build never promoted stays absent.
+    */
+  def stageWith(spark: SparkSession, livePath: String)
+               (write: String => Unit): Staged = {
     val f = fs(spark, livePath)
     val dst     = new org.apache.hadoop.fs.Path(livePath)
     val staging = new org.apache.hadoop.fs.Path(livePath + ".staging")
     val old     = new org.apache.hadoop.fs.Path(livePath + ".old")
-    Retry.withBackoff() {
-      write(staging.toString)
-    }
-    f.delete(old, true)
-    if (f.exists(dst)) mustRename(f, dst, old) // keep the live store recoverable
-    mustRename(f, staging, dst)
-    f.delete(old, true) // best-effort: a stale .old is dropped next swap
-    ()
+    writeStaging(f, staging)(write(staging.toString))
+    new Staged(() => {
+      f.delete(old, true)
+      if (f.exists(dst)) mustRename(f, dst, old) // keep the live store recoverable
+      mustRename(f, staging, dst)
+      f.delete(old, true) // best-effort: a stale .old is dropped next swap
+      ()
+    }, () => { f.delete(staging, true); () })
   }
+
+  /** Write a store's staging, retried with backoff (overwrite ⇒
+    * idempotent). A write that still fails deletes what it left in staging,
+    * so a failed stage leaves nothing behind for its tick to outlive.
+    */
+  private[graft] def writeStaging(f: org.apache.hadoop.fs.FileSystem,
+                                  staging: org.apache.hadoop.fs.Path)(write: => Unit): Unit =
+    try Retry.withBackoff()(write)
+    catch { case e: Throwable => f.delete(staging, true); throw e }
 
   /** Small-files compaction: rewrite a store into ~`targetFileBytes` files
     * (computed from the store's current on-disk size) and swap it in

@@ -1,8 +1,12 @@
 package graft.streaming
 
 import graft.sinks.AtomicSwap
+import java.util.concurrent.{ExecutionException, Executors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
+import scala.util.{Failure, Try}
 
 /** The one CDC tick every watermarked pipeline runs — the reference's poll
   * loop (etl/main.py:159-177,357-385): read the persisted watermark, detect
@@ -17,21 +21,34 @@ import org.apache.spark.sql.functions._
   *      different consumers (a row with modified <= new_wm appearing between
   *      two reads would otherwise never be merged yet be permanently
   *      filtered by the committed watermark: silent loss);
-  *   2. absorb: [[sinks]] writes every store in order (a multi-store
-  *      pipeline calls [[afterStage]] as each one commits);
+  *   2. absorb: [[sinks]] hands every store the batch. Each store write
+  *      splits into a STAGE — all its Spark work: the build, the keyed
+  *      merge, the write into staging — and a COMMIT — only the
+  *      driver-side renames ([[graft.sinks.AtomicSwap.Staged]]). A
+  *      multi-store pipeline runs its stages concurrently
+  *      ([[stageThenCommit]]: one thread per store, each carrying this
+  *      thread's Spark local properties), joins them all, and only then
+  *      commits them one by one in a fixed order, calling [[afterStage]]
+  *      after each commit;
   *   3. commit ONE watermark, after all sinks, through
   *      [[graft.sinks.AtomicSwap.replace]].
   *
   * Consistency model (the reason the watermark is singular and last): each
   * store's upsert is idempotent and individually crash-safe (staged rename
   * swaps, ghost-safe merges), so a multi-store tick needs no cross-store
-  * transaction — a crash between any two stages leaves the watermark
+  * transaction — a crash between any two commits leaves the watermark
   * unadvanced, the next tick re-detects the SAME dirty batch and re-runs
   * every stage, and the already-updated stores converge to the same bytes
   * while the stale ones catch up. No store is ever half-written (per-store
   * swap discipline) and the watermark never claims a batch any sink has not
   * absorbed (commit ordering): at-least-once delivery into idempotent sinks
-  * is effectively once.
+  * is effectively once. Overlapping the stages changes none of this: the
+  * stages touch only staging, and the commits keep their order, so a crash
+  * after any [[afterStage]] leaves the same live stores old or new as a
+  * tick that staged them one after another. A failed stage commits
+  * nothing: the tick waits for the other stages, discards every staging
+  * write, and rethrows the first failure with the rest suppressed; a
+  * failure during the commits discards the stagings not yet committed.
   *
   * State: a single-row parquet table (the analog of etl/json/storage.json);
   * a Structured Streaming deployment would let the checkpoint do this — it
@@ -50,13 +67,17 @@ abstract class CdcTick(changes: SparkSession => DataFrame, key: String,
 
   /** Crash-injection seam: called after each sink stage ("docs",
     * "postings", "vectors", "deliver") commits. A test overrides it to throw,
-    * simulating a crash BETWEEN stages — production leaves it a no-op.
+    * simulating a crash BETWEEN commits — production leaves it a no-op.
     */
   protected def afterStage(stage: String): Unit = ()
 
   /** Write one detected batch into every store, in commit order. */
   protected def sinks(spark: SparkSession, batch: Batch): Unit
 
+  /** The persisted watermark: ONE job reading the one-row state with its
+    * pinned schema, the max taken on the driver (footer inference plus an
+    * aggregate cost three jobs, and this runs at least once per tick).
+    */
   def currentWatermark(spark: SparkSession): java.sql.Timestamp = {
     AtomicSwap.recover(spark, statePath)
     // existence check first: exception-driven first-run detection would
@@ -64,15 +85,16 @@ abstract class CdcTick(changes: SparkSession => DataFrame, key: String,
     if (!AtomicSwap.fs(spark, statePath).exists(new org.apache.hadoop.fs.Path(statePath)))
       Epoch
     else {
-      val r =
-        try spark.read.parquet(statePath).agg(max("wm")).head
+      val rows =
+        try spark.read.schema(StateSchema).parquet(statePath).collect()
         catch {
           case e: Exception =>
             throw new IllegalStateException(s"unreadable CDC watermark state at $statePath", e)
         }
-      if (r.isNullAt(0))
+      val wms = rows.filterNot(_.isNullAt(0)).map(_.getTimestamp(0))
+      if (wms.isEmpty)
         throw new IllegalStateException(s"CDC watermark state at $statePath holds no wm")
-      r.getTimestamp(0)
+      wms.reduce((a, b) => if (b.after(a)) b else a)
     }
   }
 
@@ -81,32 +103,90 @@ abstract class CdcTick(changes: SparkSession => DataFrame, key: String,
     */
   def tick(spark: SparkSession): Long = {
     val wm = currentWatermark(spark)
-    val batch = new Batch(changes(spark).filter(col("modified") > lit(wm)).persist(), key)
+    val dirty = changes(spark).filter(col("modified") > lit(wm)).persist()
     try {
-      val head = batch.dirty.agg(
+      val head = dirty.agg(
         count(lit(1)).as("n_changes"),
         max("modified").as("new_wm"),
         countDistinct(key).as("n_ids")).head
       if (head.getLong(0) == 0L) 0L
       else {
-        sinks(spark, batch)
+        val batch = new Batch(dirty, key)
+        try sinks(spark, batch) finally batch.latest.unpersist()
         import spark.implicits._
         AtomicSwap.replace(spark, Seq(head.getTimestamp(1)).toDF("wm"), statePath)
         head.getLong(2)
       }
-    } finally batch.release()
+    } finally dirty.unpersist()
   }
 
   /** Run ticks until caught up (the poll loop of batch jobs and tests). */
   def runUntilCaughtUp(spark: SparkSession): Long =
     Iterator.continually(tick(spark)).take(MaxTicks).takeWhile(_ > 0).sum
 
+  /** Stage every named store write concurrently, then commit them in the
+    * given order, calling [[afterStage]] after each commit. One store
+    * stages on this thread; several get one thread each, started through
+    * `SQLExecution.withThreadLocalCaptured` so their jobs carry this
+    * thread's local properties (job group, scheduler pool, listener
+    * tags). If any stage fails, or this thread is interrupted while it
+    * waits, the others are waited for, every staging write is discarded (a
+    * write that failed has already deleted its own, see
+    * [[graft.sinks.AtomicSwap.writeStaging]]), and the first failure is
+    * rethrown with the rest suppressed. If a commit or an [[afterStage]]
+    * throws, the stores not yet committed are discarded; a store whose
+    * commit began is left to its own crash recovery.
+    */
+  protected final def stageThenCommit(
+      spark: SparkSession, stores: Seq[(String, () => AtomicSwap.Staged)]): Unit = {
+    val staged = stageAll(spark, stores.map(_._2))
+    var begun = 0
+    try stores.map(_._1).zip(staged).foreach { case (name, s) =>
+      begun += 1
+      s.commit()
+      afterStage(name)
+    } finally staged.drop(begun).foreach(_.discard())
+  }
+
+  private def stageAll(spark: SparkSession,
+                       stages: Seq[() => AtomicSwap.Staged]): Seq[AtomicSwap.Staged] =
+    if (stages.size == 1) Seq(stages.head())
+    else {
+      val pool = Executors.newFixedThreadPool(stages.size)
+      try {
+        val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        val futures = stages.map(st => SQLExecution.withThreadLocalCaptured(classic, pool)(st()))
+        // get() every future before judging any: no stage may still be
+        // writing when the tick discards or rethrows — not even when this
+        // thread is interrupted, which then fails the tick once all joined
+        var interrupted = false
+        val results = futures.map { f =>
+          var r: Option[Try[AtomicSwap.Staged]] = None
+          while (r.isEmpty)
+            try r = Some(Try(f.get()).recoverWith {
+              case e: ExecutionException if e.getCause != null => Failure(e.getCause)
+            })
+            catch { case _: InterruptedException => interrupted = true }
+          r.get
+        }
+        val failures = (if (interrupted) Seq(new InterruptedException("tick interrupted while staging"))
+                        else Nil) ++ results.collect { case Failure(e) => e }
+        if (failures.nonEmpty) {
+          results.foreach(_.foreach(_.discard()))
+          failures.tail.foreach(failures.head.addSuppressed)
+          throw failures.head
+        }
+        results.map(_.get)
+      } finally pool.shutdown()
+    }
+
   /** The doc stage the doc and composed pipelines share: rebuild the dirty
     * keys' FULL documents (dirty ids first, then the whole entity — the
-    * reference's filter-before-group bug fixed, SURVEY T4), upsert them, run
-    * the `later` sinks, and hand the store-committed frame to `deliver` (the
-    * reference's es.bulk) last before the commit, so a delivery outage pins
-    * the watermark while the stores stay converged.
+    * reference's filter-before-group bug fixed, SURVEY T4) and stage their
+    * upsert alongside the `later` stores' stages, commit docs then the
+    * `later` stores, and hand the store-committed frame to `deliver` (the
+    * reference's es.bulk) last before the watermark, so a delivery outage
+    * pins the watermark while the stores stay converged.
     *
     * Persist-when-delivering: with a deliverer wired the rebuilt docs have
     * two consumers, so they persist across both — otherwise the delivery
@@ -119,23 +199,31 @@ abstract class CdcTick(changes: SparkSession => DataFrame, key: String,
       spark: SparkSession, batch: Batch,
       docBuilder: (SparkSession, DataFrame) => DataFrame, storePath: String,
       stampTimestamps: Boolean, deliver: (SparkSession, DataFrame) => Unit)
-      (later: => Unit): Unit = {
+      (later: (String, () => AtomicSwap.Staged)*): Unit = {
     val delivering = deliver ne IncrementalDocPipeline.NoDeliver
-    val built = docBuilder(spark, batch.ids)
-    val docs = if (delivering) built.persist() else built
-    try {
+    // set by the doc stage's thread, read here after stageThenCommit joined it
+    @volatile var docs: DataFrame = null
+    @volatile var committed: DataFrame = null
+    val docStage = () => {
+      val built = docBuilder(spark, batch.ids)
+      docs = if (delivering) built.persist() else built
       // the returned frame is the STORE-COMMITTED version (stamped when
       // stampTimestamps=true) — deliver THAT, never the pre-stamp `docs`
-      val committed = IncrementalDocPipeline.upsertDocs(
+      val (c, staged) = IncrementalDocPipeline.stageDocs(
         spark, storePath, docs, stampTimestamps, retainCommitted = delivering)
-      afterStage("docs")
-      later
+      committed = c
+      staged
+    }
+    try {
+      stageThenCommit(spark, ("docs" -> docStage) +: later)
       if (delivering) {
-        try deliver(spark, committed) // throws ⇒ watermark stays put
-        finally if (committed ne docs) committed.unpersist()
+        deliver(spark, committed) // throws ⇒ watermark stays put
         afterStage("deliver")
       }
-    } finally if (delivering) docs.unpersist()
+    } finally if (delivering) {
+      if (committed != null && (committed ne docs)) committed.unpersist()
+      if (docs != null) docs.unpersist()
+    }
   }
 }
 
@@ -144,39 +232,36 @@ object CdcTick {
   /** The watermark of a pipeline that has never committed. */
   val Epoch: java.sql.Timestamp = java.sql.Timestamp.valueOf("1000-01-01 00:00:00")
 
+  /** The state's pinned schema: reading it infers nothing from footers. */
+  private val StateSchema = StructType(Seq(StructField("wm", TimestampType)))
+
   /** Bound on [[CdcTick.runUntilCaughtUp]]'s ticks. */
   private val MaxTicks = 100
 
-  /** One detected batch: the persisted dirty rows and the views sinks read. */
-  final class Batch private[streaming] (private[streaming] val dirty: DataFrame,
-                                       key: String) {
-
-    /** The distinct dirty keys, named `key` — a DataFrame end to end, so a
-      * million-key backfill is a semi-join shuffle, never a driver collect.
-      */
-    def ids: DataFrame = dirty.select(key).distinct()
-
-    private var latestCache: Option[DataFrame] = None
+  /** One detected, non-empty batch: the views sinks read of the persisted
+    * dirty rows.
+    */
+  final class Batch private[streaming] (dirty: DataFrame, key: String) {
 
     /** The LATEST row per key: max by the (modified, payload…) struct, so a
       * key changed twice in one batch lands as its last row and
       * equal-timestamp ties stay deterministic — the strictly-greater analog
-      * of the reference's last-row-wins bulk ordering. Persisted on first
-      * use: a multi-store tick reads it once per store.
+      * of the reference's last-row-wins bulk ordering. Planned and persisted
+      * once, with the batch — before a multi-store tick's stages fork — so
+      * every store reads the one materialization.
       */
-    def latest: DataFrame = latestCache.getOrElse {
+    val latest: DataFrame = {
       val payload = dirty.columns.filterNot(c => c == key || c == "modified").toSeq
-      val l = dirty.groupBy(col(key))
+      dirty.groupBy(col(key))
         .agg(max(struct((col("modified") +: payload.map(col)): _*)).as("m"))
         .select(col(key) +: payload.map(c => col("m").getField(c).as(c)): _*)
         .persist()
-      latestCache = Some(l)
-      l
     }
 
-    private[streaming] def release(): Unit = {
-      latestCache.foreach(_.unpersist())
-      dirty.unpersist()
-    }
+    /** The distinct dirty keys, named `key` — [[latest]]'s keys, so a
+      * DataFrame end to end (a million-key backfill is a semi-join shuffle,
+      * never a driver collect) read from the same cache as every other sink.
+      */
+    def ids: DataFrame = latest.select(col(key))
   }
 }

@@ -22,7 +22,7 @@ class IncrementalDocPipeline(
     extends CdcTick(changes, "id", statePath) {
 
   protected def sinks(spark: SparkSession, batch: CdcTick.Batch): Unit =
-    docsThenDeliver(spark, batch, docBuilder, storePath, stampTimestamps, deliver)(())
+    docsThenDeliver(spark, batch, docBuilder, storePath, stampTimestamps, deliver)()
 }
 
 object IncrementalDocPipeline {
@@ -52,13 +52,25 @@ object IncrementalDocPipeline {
   def upsertDocs(spark: SparkSession, storePath: String, docs: DataFrame,
                  stampTimestamps: Boolean = false,
                  retainCommitted: Boolean = false): DataFrame = {
+    val (committed, staged) =
+      stageDocs(spark, storePath, docs, stampTimestamps, retainCommitted)
+    staged.commit()
+    committed
+  }
+
+  /** [[upsertDocs]]'s Spark half: the merge written to staging, and the
+    * frame its commit will install.
+    */
+  def stageDocs(spark: SparkSession, storePath: String, docs: DataFrame,
+                stampTimestamps: Boolean = false, retainCommitted: Boolean = false)
+      : (DataFrame, graft.sinks.AtomicSwap.Staged) = {
     // recover from a crash between AtomicSwap's two renames: staging was
     // complete and the live dir is gone — promote it instead of treating
     // this as first-run
     graft.sinks.AtomicSwap.recover(spark, storePath)
     val live = new org.apache.hadoop.fs.Path(storePath)
     val existing = if (graft.sinks.AtomicSwap.fs(spark, storePath).exists(live))
-      Some(spark.read.parquet(storePath)) else None
+      Some(graft.Tables.parquetCached(spark, storePath)) else None
     // F16 (models.py:9-17): auto_now_add/auto_now stamped at the sink — the
     // created-preserving join keys on the same id the merge shuffles on
     val stamped =
@@ -83,9 +95,9 @@ object IncrementalDocPipeline {
           .unionByName(incoming)
       case None => incoming
     }
-    // staged write + rename swap (retry/backoff and crash recovery live in
-    // AtomicSwap — shared with the compaction utility)
-    graft.sinks.AtomicSwap.replace(spark, merged, storePath)
+    // staged write (retry/backoff, the rename swap and crash recovery live
+    // in AtomicSwap — shared with the compaction utility)
+    val staged = graft.sinks.AtomicSwap.stage(spark, merged, storePath)
     // Return the COMMITTED frame so a delivery consumer ships the exact
     // version the store absorbed — with stampTimestamps=true that is the
     // STAMPED frame, not the caller's `docs` (r15 advice: delivering the
@@ -96,6 +108,6 @@ object IncrementalDocPipeline {
     // against the already-swapped store; the caller unpersists it after
     // delivery (only if it is not the caller's own frame).
     if (!callerCached && !retainCommitted) incoming.unpersist()
-    incoming
+    (incoming, staged)
   }
 }

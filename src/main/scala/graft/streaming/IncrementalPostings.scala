@@ -39,8 +39,13 @@ object IncrementalPostings {
     * Idempotent per batch; crash-safe via the staged rename swap.
     */
   def upsert(spark: SparkSession, storePath: String, dirtyDocs: DataFrame): Unit =
-    graft.sinks.AtomicSwap.upsertByKey(spark, storePath, postingsOf(dirtyDocs),
-      dirtyDocs.select(col("doc_id")).distinct(), "doc_id")
+    stage(spark, storePath, dirtyDocs).commit()
+
+  /** [[upsert]]'s Spark half: the merge written to staging. */
+  def stage(spark: SparkSession, storePath: String,
+            dirtyDocs: DataFrame): graft.sinks.AtomicSwap.Staged =
+    graft.sinks.AtomicSwap.stageUpsertByKey(spark, storePath, postingsOf(dirtyDocs),
+      dirtyDocs.select(col("doc_id")), "doc_id")
 
   /** The maintained store as a postings DataFrame for the search faces.
     * Schema-cached read: (token, doc_id, tf) is the store's contract, so

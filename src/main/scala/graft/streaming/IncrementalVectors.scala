@@ -56,38 +56,57 @@ object IncrementalVectors {
     */
   def upsert(spark: SparkSession, storePath: String, dirtyVecs: DataFrame,
              codebook: Seq[Seq[Double]]): Seq[Int] = {
+    val (affected, staged) = stage(spark, storePath, dirtyVecs, codebook)
+    staged.commit()
+    affected
+  }
+
+  /** [[upsert]]'s Spark half: the merged affected cells written to
+    * `.staging`, WITHOUT the manifest — so until the commit writes it, a
+    * crash or a discard leaves staging that [[recoverCells]] throws away.
+    */
+  def stage(spark: SparkSession, storePath: String, dirtyVecs: DataFrame,
+            codebook: Seq[Seq[Double]]): (Seq[Int], AtomicSwap.Staged) = {
     recoverCells(spark, storePath)
     val f = AtomicSwap.fs(spark, storePath)
     val root = new org.apache.hadoop.fs.Path(storePath)
-    // PERSIST the assigned batch: upsert runs several actions over it (the
-    // old-cell collect, the staged write, the first-build cell listing),
-    // and each action re-reading a LIVE source (a CDC feed being
-    // compacted, a non-deterministic frame) could otherwise see different
-    // rows — the staged dirs and the deletion manifest must describe ONE
-    // materialization or commit could drop a never-merged live cell.
+    val exists = f.exists(root)
+    // PERSIST the assigned batch: stage runs two actions over it (the
+    // cell collect and the staged write), and each action re-reading a
+    // LIVE source (a CDC feed being compacted, a non-deterministic frame)
+    // could otherwise see different rows — the staged dirs and the
+    // deletion manifest must describe ONE materialization or commit could
+    // drop a never-merged live cell.
     val fresh = assignedOf(dirtyVecs, codebook).persist()
     try {
+      lazy val store = graft.Tables.parquetCached(spark, storePath) // recovered above
+      // no distinct: the old-cell join and the anti-join below are both
+      // indifferent to a repeated id, and a distinct costs a shuffle
+      val dirtyIds = fresh.select(col("vec_id"))
+      // ONE collect of distinct (cell, fresh?) rows: the cells the fresh
+      // assignments land in, and the old cells of the dirty ids. Both sets
+      // are ≤ nlist — model-artifact-sized, the same class as the codebook
+      // itself, however large the batch. The old-cell lookup joins the
+      // store on vec_id; at warehouse scale that side is served by a
+      // (vec_id → cell) secondary index maintained alongside
+      // (vec_id-bucketed), not a scan.
+      val newTagged = fresh.select(col("cell"), lit(true).as("fresh"))
+      val tagged =
+        if (!exists) newTagged
+        else store.join(dirtyIds, Seq("vec_id"))
+          .select(col("cell"), lit(false).as("fresh")).unionByName(newTagged)
+      val cells = tagged.distinct().collect().map(r => (r.getInt(0), r.getBoolean(1)))
       // empty dirty set is a no-op BEFORE the first-build branch: building
       // a store from zero rows would swap in a data-less parquet dir that
       // poisons every later schema read at this path
-      if (fresh.isEmpty) return Seq.empty
-      if (!f.exists(root)) {
-        AtomicSwap.replaceWith(spark, storePath)(staging =>
+      if (!cells.exists(_._2)) return (Seq.empty, AtomicSwap.Staged.Empty)
+      val affected = cells.map(_._1).distinct.sorted.toSeq
+      // `cell` is written last, as a partition column is read back: the
+      // commits seed the store's schema with the frame's
+      if (!exists)
+        return (affected, AtomicSwap.stageWith(spark, storePath)(staging =>
           graft.sources.BucketedLayout.writePartitioned(fresh, staging, "cell"))
-        return fresh.select("cell").distinct() // cached — no re-assignment job
-          .collect().map(_.getInt(0)).toSeq.sorted
-      }
-      val store = graft.Tables.parquetCached(spark, storePath) // recovered above
-      val dirtyIds = fresh.select(col("vec_id")).distinct()
-      // both cell sets are ≤ nlist — model-artifact-sized collects, the same
-      // class as the codebook itself. The old-cell lookup joins the store on
-      // vec_id; at warehouse scale that side is served by a (vec_id → cell)
-      // secondary index maintained alongside (vec_id-bucketed), not a scan.
-      val oldCells = store.join(dirtyIds, Seq("vec_id"))
-        .select("cell").distinct().collect().map(_.getInt(0))
-      val newCells = fresh.select("cell").distinct().collect().map(_.getInt(0))
-      val affected = (oldCells ++ newCells).distinct.sorted.toSeq
-      if (affected.isEmpty) return affected
+          .seeding(spark, storePath, fresh.schema))
       // merged content of ONLY the affected cells: partition pruning keeps
       // the read to those cells' files; unaffected cells are untouched
       val merged = store
@@ -102,11 +121,12 @@ object IncrementalVectors {
       // "aside exists" as THIS commit's already-swapped evidence, so stale
       // asides must not leak into that judgment
       f.delete(new org.apache.hadoop.fs.Path(root, ".old"), true)
-      graft.sinks.Retry.withBackoff() {
+      AtomicSwap.writeStaging(f, staging) {
         graft.sources.BucketedLayout.writePartitioned(merged, staging.toString, "cell")
       }
       // the AFFECTED manifest is the commit's completeness marker, written
-      // AFTER the parquet job, and records KEEP and DROP as SEPARATE sets:
+      // by the commit AFTER the parquet job, and records KEEP and DROP as
+      // SEPARATE sets:
       // keep = the staged dirs actually written (ground truth from a
       // listing, immune to plan re-execution drift); drop = planned
       // affected cells the merge EMPTIED (their only vectors moved away —
@@ -126,11 +146,12 @@ object IncrementalVectors {
       val drop = affected.filterNot(keep.toSet).sorted
       val manifest =
         keep.map(c => s"keep:$c") ++ drop.map(c => s"drop:$c")
-      val out = f.create(new org.apache.hadoop.fs.Path(staging, AffectedMarker), true)
-      out.write(manifest.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
-      commitStaged(spark, storePath)
-      affected
+      (affected, new AtomicSwap.Staged(() => {
+        val out = f.create(new org.apache.hadoop.fs.Path(staging, AffectedMarker), true)
+        out.write(manifest.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        out.close()
+        commitStaged(spark, storePath)
+      }, () => { f.delete(staging, true); () }).seeding(spark, storePath, fresh.schema))
     } finally fresh.unpersist()
   }
 
