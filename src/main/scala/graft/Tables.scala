@@ -77,9 +77,9 @@ object Tables {
 
   /** Cheap content fingerprint of a parquet dir: max file mtime + total
     * bytes + file count from ONE driver-side listing. Used to key the
-    * schema cache and the derived stores (postings / unigram model / media
-    * embeddings) so a rewritten source dir rebuilds its artifacts instead
-    * of serving stale results. A catalog would own this at warehouse scale.
+    * schema cache and the derived stores ([[DerivedStore]]) so a rewritten
+    * source dir rebuilds its artifacts instead of serving stale results. A
+    * catalog would own this at warehouse scale.
     */
   private[graft] def contentVersion(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -89,29 +89,6 @@ object Tables {
       if (sts.isEmpty) "empty"
       else s"${sts.map(_.getModificationTime).max}-${sts.map(_.getLen).sum}-${sts.length}"
     } catch { case _: java.io.FileNotFoundException => "absent" }
-  }
-
-  /** Root for JVM-built derived stores. `spark.graft.store.dir` points it
-    * at a shared filesystem on a real cluster (scheme-qualified paths
-    * resolve their own FS through AtomicSwap and the loaders); the default
-    * is a driver-local temp dir — correct for local[] serving, and the
-    * library-consumer knob is one conf away.
-    */
-  private lazy val localStoreRoot =
-    java.nio.file.Files.createTempDirectory("graft-stores-").toString
-
-  /** Version-stamped location for a derived store: one path per (kind,
-    * source dir, source content version). A source rewrite yields a NEW
-    * path, so stale artifacts are never served — they are simply never
-    * read again (and a shared root lets a later JVM reuse a finished
-    * build instead of re-deriving it).
-    */
-  private[graft] def derivedStorePath(spark: SparkSession, kind: String,
-                                      dir: String, sourceFile: String): String = {
-    val root = spark.conf.getOption("spark.graft.store.dir").getOrElse(localStoreRoot)
-    val version = contentVersion(spark, s"$dir/$sourceFile")
-    val tag = java.lang.Integer.toHexString(s"$dir@$version".hashCode)
-    s"$root/graft-$kind-$tag"
   }
 
   /** Register the whole catalog as session temp views — the `spark.sql`

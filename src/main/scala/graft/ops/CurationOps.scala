@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{DerivedStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -131,27 +131,16 @@ object CurationOps {
           lit(Scale)).cast("long").as("w_fx"))
   }
 
-  /** (bucket, w_fx) model store per (data dir, target lang), JVM-wide —
+  /** (bucket, w_fx) model store per (corpus version, target lang) —
     * the train/serve split (see the unigram LM store): DSIR fits its
     * importance model offline and scores every incoming batch with it.
     * Version-stamped path, so a rewritten corpus refits instead of serving
     * stale weights; parquet round-trips the fixed-point longs exactly.
     */
-  private val dsirStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def servedDsirModel(spark: SparkSession, dir: String,
-                              targetLang: String): DataFrame = {
-    val p = Tables.derivedStorePath(spark, s"dsir-$targetLang", dir, "documents.parquet")
-    dsirStores.computeIfAbsent(p, path => {
-      val hp = new org.apache.hadoop.fs.Path(path)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(hp))
-        graft.sinks.AtomicSwap.replace(spark, fitDsirModel(spark, dir, targetLang), path)
-      path
-    })
-    Tables.parquetCached(spark, p)
-  }
+                              targetLang: String): DataFrame =
+    DerivedStore.parquet(spark, s"dsir-$targetLang", dir, "documents.parquet")(
+      fitDsirModel(spark, dir, targetLang))
 
   /** Scoring pass over a fitted (bucket, w_fx) model relation. */
   private def scoreDsir(spark: SparkSession, dir: String,
@@ -247,17 +236,9 @@ object CurationOps {
   }
 
   private def servedClassifierModel(spark: SparkSession, dir: String,
-                                    targetLang: String): DataFrame = {
-    val p = Tables.derivedStorePath(spark, s"qclf-$targetLang", dir, "documents.parquet")
-    dsirStores.computeIfAbsent(p, path => {
-      val hp = new org.apache.hadoop.fs.Path(path)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(hp))
-        graft.sinks.AtomicSwap.replace(spark, fitClassifier(spark, dir, targetLang), path)
-      path
-    })
-    Tables.parquetCached(spark, p)
-  }
+                                    targetLang: String): DataFrame =
+    DerivedStore.parquet(spark, s"qclf-$targetLang", dir, "documents.parquet")(
+      fitClassifier(spark, dir, targetLang))
 
   /** Pairwise source-vocabulary overlap: Jaccard similarity between each
     * pair of sources' distinct gram sets — the curation signal for mirror

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{DerivedStore, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -250,9 +250,6 @@ object DedupOps {
         col("col.h1"), col("col.h2"), col("sig"))
   }
 
-  private val bandStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Served corpus band store for [[incrementalDedup]]: the banded MinHash
     * index of everything ALREADY INGESTED (the fixture corpus = doc_id %
     * mod ≠ rem), version-keyed per data dir, hot buckets (> maxBucket
@@ -262,24 +259,15 @@ object DedupOps {
     * append-maintained, never rebuilt per batch.
     */
   private def servedCorpusBands(spark: SparkSession, dir: String, mod: Int,
-                                rem: Int, maxBucket: Int): DataFrame = {
-    val p = graft.Tables.derivedStorePath(spark, s"incbands$mod-$rem-$maxBucket",
-      dir, "documents.parquet")
-    bandStores.computeIfAbsent(p, path => {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path))) {
-        val corpus = bandsOf(Tables.documents(spark, dir)
-          .filter(pmod(col("doc_id"), lit(mod)) =!= rem))
-        val useful = corpus.groupBy("band_id", "h1", "h2").count()
-          .filter(col("count") <= maxBucket).drop("count")
-        graft.sinks.AtomicSwap.replace(spark,
-          corpus.join(useful, Seq("band_id", "h1", "h2")), path)
-      }
-      path
-    })
-    graft.Tables.parquetCached(spark, p)
-  }
+                                rem: Int, maxBucket: Int): DataFrame =
+    DerivedStore.parquet(spark, s"incbands$mod-$rem-$maxBucket", dir,
+        "documents.parquet") {
+      val corpus = bandsOf(Tables.documents(spark, dir)
+        .filter(pmod(col("doc_id"), lit(mod)) =!= rem))
+      val useful = corpus.groupBy("band_id", "h1", "h2").count()
+        .filter(col("count") <= maxBucket).drop("count")
+      corpus.join(useful, Seq("band_id", "h1", "h2"))
+    }
 
   /** INCREMENTAL near-dup admission — the shape production dedup actually
     * runs (a daily shard against yesterday's corpus, not corpus × corpus):
@@ -378,18 +366,10 @@ object DedupOps {
     * (DedupSpec's component-min/cluster-boundary cases call [[dupClusters]]
     * itself), so the build cost remains measured where it is paid.
     */
-  private val clusterStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def servedDupClusters(spark: SparkSession, dir: String,
-                        threshold: Double = 0.5): DataFrame = {
-    val p = graft.Tables.derivedStorePath(spark,
-      s"dupclusters-$threshold", dir, "documents.parquet")
-    clusterStores.computeIfAbsent(p, path =>
-      graft.sinks.AtomicSwap.buildIfAbsent(spark, path)(
-        dupClusters(spark, dir, threshold)))
-    graft.Tables.parquetCached(spark, p)
-  }
+                        threshold: Double = 0.5): DataFrame =
+    DerivedStore.parquet(spark, s"dupclusters-$threshold", dir, "documents.parquet")(
+      dupClusters(spark, dir, threshold))
 
   /** Cluster-representative selection — the policy layer production dedup
     * actually ships: within every near-dup cluster KEEP the best copy and
@@ -714,9 +694,6 @@ object DedupOps {
     * (r13 review). */
   private[graft] val DedupEvalThreshold = 0.5
 
-  private val evalStageStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Served staging artifact for [[dedupEval]]: per-doc hashed trigram set
     * + 8-slot signature, built ONCE per corpus version (r13 verdict task
     * 6 — the QA harness runs repeatedly per corpus rev and its dominant
@@ -725,32 +702,27 @@ object DedupOps {
     * bounded probe crossjoin; the oracle still derives the same sets from
     * `documents` directly, so the gate is unchanged.
     */
-  private def servedEvalStage(spark: SparkSession, dir: String): DataFrame = {
-    val p = graft.Tables.derivedStorePath(spark, "evalstage8b", dir,
-      "documents.parquet")
-    evalStageStores.computeIfAbsent(p, path =>
-      graft.sinks.AtomicSwap.buildIfAbsent(spark, path) {
-        val toks = Tables.documents(spark, dir).select(col("doc_id"),
-          split(lower(trim(col("text"))), "\\s+").as("toks"))
-        val grams = transform(sequence(lit(1), greatest(size(col("toks")) - 2, lit(1))),
-          i => concat_ws(" ", try_element_at(col("toks"), i), try_element_at(col("toks"), i + 1),
-                              try_element_at(col("toks"), i + 2)))
-        // exact Jaccard runs on the HASHED gram sets (int64 intersects,
-        // not string compares — identical values in both engines because
-        // the oracle replays the same hash60; collisions at 2^60 are
-        // negligible and, crucially, identical on both sides of the gate)
-        toks.select(col("doc_id"),
-            transform(array_distinct(grams), g => hash60(g)).as("gh"))
-          .withColumn("sig", expr("minhash_slots(gh, 8)"))
-          // per-doc set sizes as store-build statistics, so the pair
-          // frame never touches the gram arrays (parquet prunes `gh` out
-          // of the signature scan entirely): sz feeds the size gate
-          // (the oracle's len(l.m)), szd the union identity below
-          .withColumn("sz", size(col("gh")))
-          .withColumn("szd", size(array_distinct(col("gh"))))
-      })
-    graft.Tables.parquetCached(spark, p)
-  }
+  private def servedEvalStage(spark: SparkSession, dir: String): DataFrame =
+    DerivedStore.parquet(spark, "evalstage8b", dir, "documents.parquet") {
+      val toks = Tables.documents(spark, dir).select(col("doc_id"),
+        split(lower(trim(col("text"))), "\\s+").as("toks"))
+      val grams = transform(sequence(lit(1), greatest(size(col("toks")) - 2, lit(1))),
+        i => concat_ws(" ", try_element_at(col("toks"), i), try_element_at(col("toks"), i + 1),
+                            try_element_at(col("toks"), i + 2)))
+      // exact Jaccard runs on the HASHED gram sets (int64 intersects,
+      // not string compares — identical values in both engines because
+      // the oracle replays the same hash60; collisions at 2^60 are
+      // negligible and, crucially, identical on both sides of the gate)
+      toks.select(col("doc_id"),
+          transform(array_distinct(grams), g => hash60(g)).as("gh"))
+        .withColumn("sig", expr("minhash_slots(gh, 8)"))
+        // per-doc set sizes as store-build statistics, so the pair
+        // frame never touches the gram arrays (parquet prunes `gh` out
+        // of the signature scan entirely): sz feeds the size gate
+        // (the oracle's len(l.m)), szd the union identity below
+        .withColumn("sz", size(col("gh")))
+        .withColumn("szd", size(array_distinct(col("gh"))))
+    }
 
   def dedupEval(spark: SparkSession, dir: String): DataFrame = {
     // no threshold parameter on purpose: the oracle interpolates

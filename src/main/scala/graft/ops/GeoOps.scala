@@ -94,10 +94,6 @@ object GeoOps {
     withinRadius(geoEvents(spark, dir), radiusUd)
       .select(col("event_id"), col("lat_ud"), col("lon_ud"), col("dist2"))
 
-  private val geoStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val geoStoreBuildLock = new Object
-
   /** Derived store with REAL stored integer coordinates: events persisted
     * once with (lat_ud, lon_ud) as plain int64 columns, range-sorted by
     * (lat_ud, lon_ud) so parquet row-group min/max statistics cluster —
@@ -105,25 +101,12 @@ object GeoOps {
     * Version-keyed on the events source like every served store; the
     * build is one pass through [[geoEvents]] + the staged atomic swap.
     */
-  private def servedGeoStore(spark: SparkSession, dir: String): DataFrame = {
-    val p = graft.Tables.derivedStorePath(spark, "geocoords", dir, "events.parquet")
-    // Build OUTSIDE the CHM mapping (double-checked on a plain lock): a
-    // build is a whole Spark job, and running one inside computeIfAbsent
-    // holds the bin lock for its duration and throws "Recursive update" the
-    // day the source expression resolves another served store (r15 advice).
-    // The lock serializes concurrent first builds; the map stays the fast
-    // path that skips the FS exists-check after the first resolution.
-    if (!geoStores.containsKey(p)) geoStoreBuildLock.synchronized {
-      if (!geoStores.containsKey(p)) {
-        // global range sort: each output file covers a narrow lat band, so
-        // a bbox predicate prunes whole row groups by footer stats alone.
-        graft.sinks.AtomicSwap.buildIfAbsent(spark, p)(
-          geoEvents(spark, dir).sort("lat_ud", "lon_ud"))
-        geoStores.put(p, p)
-      }
+  private def servedGeoStore(spark: SparkSession, dir: String): DataFrame =
+    // global range sort: each output file covers a narrow lat band, so a
+    // bbox predicate prunes whole row groups by footer stats alone.
+    graft.DerivedStore.parquet(spark, "geocoords", dir, "events.parquet") {
+      geoEvents(spark, dir).sort("lat_ud", "lon_ud")
     }
-    graft.Tables.parquetCached(spark, p)
-  }
 
   /** The stored-coordinates face of [[geoDistance]] (r14 verdict task 5):
     * identical rows, but the bbox prefilter now lands on REAL columns of a

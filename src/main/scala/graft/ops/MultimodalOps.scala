@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{DerivedStore, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -751,9 +751,6 @@ object MultimodalOps {
       .toDF("doc_id", "width", "height", "sum_r", "sum_g", "sum_b", "peak", "compressed")
   }
 
-  /** One entry per served media-store path this JVM has resolved. */
-  private val servedMedia = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Version-keyed served media store: the synthesized payload table is
     * written ONCE per corpus version and read thereafter — the ingest-once
     * discipline every other served artifact in the repo follows. The
@@ -764,12 +761,8 @@ object MultimodalOps {
     * payload-column scan + map-side decode.
     */
   private def servedMediaStore(spark: SparkSession, dir: String, kind: String)
-                              (build: => DataFrame): DataFrame = {
-    val p = Tables.derivedStorePath(spark, s"media$kind", dir, "documents.parquet")
-    servedMedia.computeIfAbsent(p,
-      path => graft.sinks.AtomicSwap.buildIfAbsent(spark, path)(build))
-    Tables.parquetCached(spark, p)
-  }
+                              (build: => DataFrame): DataFrame =
+    DerivedStore.parquet(spark, s"media$kind", dir, "documents.parquet")(build)
 
   /** A decoded-audio feature row — every field an exact integer. */
   case class AudioFeatures(
@@ -1062,7 +1055,7 @@ object MultimodalOps {
       (conv(substring(md5(concat(payloadMd5, lit(":"), j.cast("string"))), 1, 15),
         16, 10).cast("long") % 2000000L).cast("double") / 1000000.0 - 1.0)
 
-  /** Media embedding store per data dir, JVM-wide — encode-once serving:
+  /** Media embedding store per corpus version — encode-once serving:
     * a real multimodal system never re-runs its encoder tower per query;
     * embeddings are materialized artifacts (this is exactly what the
     * shipped `embeddings` table is for text). First touch per dir pays the
@@ -1072,26 +1065,12 @@ object MultimodalOps {
     * serving is bit-identical to inline encoding and the oracle (which
     * re-derives bytes→vector per query) still hash-matches.
     */
-  private val mediaStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def servedMediaEmbeddings(spark: SparkSession, dir: String): DataFrame = {
-    // version-stamped path (see Tables.derivedStorePath): a rewritten
-    // corpus re-encodes instead of serving stale vectors
-    val p = graft.Tables.derivedStorePath(spark, "media", dir, "documents.parquet")
-    mediaStores.computeIfAbsent(p, path => {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path)))
-        graft.sinks.AtomicSwap.replace(spark,
-          mediaTable(spark, dir)
-            .select(col("doc_id"), col("media_type"),
-              stubEncode(md5(col("payload"))).as("v")),
-          path)
-      path
-    })
-    graft.Tables.parquetCached(spark, p)
-  }
+  private def servedMediaEmbeddings(spark: SparkSession, dir: String): DataFrame =
+    DerivedStore.parquet(spark, "media", dir, "documents.parquet") {
+      mediaTable(spark, dir)
+        .select(col("doc_id"), col("media_type"),
+          stubEncode(md5(col("payload"))).as("v"))
+    }
 
   /** Ingest face where EVERY media row carries a real decodable
     * payload: image → PNG, audio → WAV PCM, video → CAVLC intra H.264 —
@@ -1161,17 +1140,14 @@ object MultimodalOps {
 
   private def servedDecodedEmbeddings(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val p = graft.Tables.derivedStorePath(spark, "mediadec", dir, "documents.parquet")
-    mediaStores.computeIfAbsent(p, path =>
-      graft.sinks.AtomicSwap.buildIfAbsent(spark, path) {
-        decodedMediaTable(spark, dir)
-          .as[(Long, Array[Byte], String)]
-          .mapPartitions(_.map { case (id, payload, mt) =>
-            (id, mt, decodedEmbed(payload, mt))
-          })
-          .toDF("doc_id", "media_type", "v")
-      })
-    graft.Tables.parquetCached(spark, p)
+    DerivedStore.parquet(spark, "mediadec", dir, "documents.parquet") {
+      decodedMediaTable(spark, dir)
+        .as[(Long, Array[Byte], String)]
+        .mapPartitions(_.map { case (id, payload, mt) =>
+          (id, mt, decodedEmbed(payload, mt))
+        })
+        .toDF("doc_id", "media_type", "v")
+    }
   }
 
   /** Media similarity retrieval over DECODED-content embeddings: the

@@ -348,7 +348,7 @@ object QueryStringOps {
       case _ =>
     }
     val atomIdx = atoms.zipWithIndex.toMap
-    val (mfPosts, _, _) = SearchOps.servedMultiFieldStores(spark, dir)
+    val mfPosts = SearchOps.servedMultiFieldPostings(spark, dir)
 
     // ALL term atoms resolve through ONE IN-pushed probe joined to a
     // broadcast (field, token, atom) relation — the boolQueryIndexed

@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.Tables
+import graft.{DerivedStore, Tables}
+import graft.sinks.AtomicSwap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -349,12 +350,10 @@ object SearchOps {
     * the order key so the join stays co-located with no broadcast ceiling.
     */
   private[graft] def servedOrderPopularity(spark: SparkSession, dir: String): DataFrame = {
-    val p = Tables.derivedStorePath(spark, "orderpop", dir, "lineitem.parquet")
-    servedStores.computeIfAbsent(p, path => buildIfAbsent(spark, path) {
+    DerivedStore.parquet(spark, "orderpop", dir, "lineitem.parquet") {
       Tables.lineitem(spark, dir)
         .groupBy(col("l_orderkey")).agg(count(lit(1)).as("n_items"))
-    })
-    Tables.parquetCached(spark, p)
+    }
   }
 
   /** Shared first stage of the decay trio: orders joined to the SERVED
@@ -778,9 +777,7 @@ object SearchOps {
     */
   private[graft] def servedCombinedStores(spark: SparkSession,
                                           dir: String): (DataFrame, DataFrame) = {
-    val pp = Tables.derivedStorePath(spark, "cfposts", dir, "documents.parquet")
-    val ps = Tables.derivedStorePath(spark, "cfstats", dir, "documents.parquet")
-    servedStores.computeIfAbsent(pp, path => buildIfAbsent(spark, path) {
+    val posts = DerivedStore.parquet(spark, "cfposts", dir, "documents.parquet") {
       val rows = Tables.documents(spark, dir)
         .select(col("doc_id"), explode(concat(
           transform(analyze(substring(col("text"), 1, 48)),
@@ -788,20 +785,17 @@ object SearchOps {
           transform(analyze(col("text")),
             t => struct(t.as("token"), lit(1.0).as("w"))))).as("te"))
         .select(col("doc_id"), col("te.token").as("token"), col("te.w").as("w"))
-      val posts = rows.groupBy("doc_id", "token").agg(sum("w").as("tf"))
-      val lens = posts.groupBy("doc_id").agg(sum("tf").cast("double").as("dl"))
-      val dfs = posts.groupBy("token").agg(count(lit(1)).as("df"))
-      posts.join(lens, Seq("doc_id")).join(dfs, Seq("token"))
-    })
-    servedStores.computeIfAbsent(ps, path => buildIfAbsent(spark, path) {
-      // reads the FINISHED cfposts parquet (a file read, not a nested
-      // store resolution — the RULE in buildIfAbsent's doc)
-      Tables.parquetCached(spark, pp)
-        .groupBy("doc_id").agg(max("dl").as("dl")) // dl constant per doc
+      val tfs = rows.groupBy("doc_id", "token").agg(sum("w").as("tf"))
+      val lens = tfs.groupBy("doc_id").agg(sum("tf").cast("double").as("dl"))
+      val dfs = tfs.groupBy("token").agg(count(lit(1)).as("df"))
+      tfs.join(lens, Seq("doc_id")).join(dfs, Seq("token"))
+    }
+    val stats = DerivedStore.parquet(spark, "cfstats", dir, "documents.parquet") {
+      posts.groupBy("doc_id").agg(max("dl").as("dl")) // dl constant per doc
         .agg(count(lit(1)).cast("double").as("n_docs"),
           (sum("dl") / count(lit(1))).as("avgdl"))
-    })
-    (Tables.parquetCached(spark, pp), Tables.parquetCached(spark, ps))
+    }
+    (posts, stats)
   }
 
   /** [[combinedFieldsSearch]] served from the store — the registered
@@ -962,11 +956,10 @@ object SearchOps {
   def multiFieldFuzzyIndexed(spark: SparkSession, dir: String,
       q: String = "custommer streem windoe", k: Int = 20): DataFrame = {
     import spark.implicits._
-    val (posts, dict, grams) = servedMultiFieldStores(spark, dir)
+    val posts = servedMultiFieldPostings(spark, dir)
     val terms = analyzeQuery(q).distinct.sorted
     require(terms.nonEmpty, s"query '$q' analyzed to no terms")
-    val storeKey = Tables.derivedStorePath(spark, "mfgrams", dir, "documents.parquet")
-    val expanded = resolveFuzzyCandidates(spark, storeKey, grams, dict, terms)
+    val expanded = resolveFuzzyCandidates(spark, servedMultiFieldDict(spark, dir), terms)
     val candRows = terms.flatMap { t =>
       MultiFieldBoosts.flatMap { case (f, b) =>
         expanded(t).map(tok => (t, f, tok, b)) } :+
@@ -988,19 +981,15 @@ object SearchOps {
       .orderBy(col("score").desc, col("doc_id").asc)
   }
 
-  /** Served stores behind [[multiFieldFuzzyIndexed]]: field-tagged postings
-    * + the union fuzzy dictionary + its bigram postings, version-stamped
-    * like every other store. The title field is analyzed from the SAME
-    * 48-char slice as the scan face (the cut can mint tokens absent from
-    * the body — e.g. a word truncated mid-way — which is exactly why the
-    * body-only fuzzydict store cannot serve this query).
+  /** Served field-tagged postings behind [[multiFieldFuzzyIndexed]]. The
+    * title field is analyzed from the SAME 48-char slice as the scan face
+    * (the cut can mint tokens absent from the body — e.g. a word truncated
+    * mid-way — which is exactly why the body-only fuzzydict store cannot
+    * serve this query).
     */
-  private[graft] def servedMultiFieldStores(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val pp = Tables.derivedStorePath(spark, "mfpostings", dir, "documents.parquet")
-    val pd = Tables.derivedStorePath(spark, "mfdict", dir, "documents.parquet")
-    val pg = Tables.derivedStorePath(spark, "mfgrams", dir, "documents.parquet")
-    servedStores.computeIfAbsent(pp, path => buildIfAbsent(spark, path) {
+  private[graft] def servedMultiFieldPostings(spark: SparkSession,
+                                              dir: String): DataFrame =
+    DerivedStore.parquet(spark, "mfpostings", dir, "documents.parquet") {
       def tagged(f: String, toks: Column): Column =
         transform(toks, t => struct(lit(f).as("field"), t.as("token")))
       val names = Tables.customer(spark, dir)
@@ -1016,17 +1005,19 @@ object SearchOps {
         .select(col("ft.field").as("field"), col("ft.token").as("token"),
           col("doc_id"))
         .distinct()
-    })
-    servedStores.computeIfAbsent(pd, path => buildIfAbsent(spark, path) {
-      Tables.parquetCached(spark, pp)
+    }
+
+  /** (dict, grams) store paths of the union fuzzy dictionary over the
+    * multi-field postings (lang excluded: it is exact-only).
+    */
+  private def servedMultiFieldDict(spark: SparkSession,
+                                   dir: String): (String, String) = {
+    val pd = DerivedStore.ensure(spark, "mfdict", dir, "documents.parquet")(
+      AtomicSwap.replace(spark, servedMultiFieldPostings(spark, dir)
         .filter(col("field") =!= "lang").select(col("token")).distinct()
-        .withColumn("tok_len", length(col("token")))
-    })
-    servedStores.computeIfAbsent(pg, path => buildIfAbsent(spark, path) {
-      dictGrams(Tables.parquetCached(spark, pd))
-    })
-    (Tables.parquetCached(spark, pp), Tables.parquetCached(spark, pd),
-      Tables.parquetCached(spark, pg))
+        .withColumn("tok_len", length(col("token"))), _))
+    (pd, DerivedStore.ensure(spark, "mfgrams", dir, "documents.parquet")(
+      AtomicSwap.replace(spark, dictGrams(Tables.parquetCached(spark, pd)), _)))
   }
 
   /** Deterministic Cyrillic phrase panel — the mixed-language FIXTURE for
@@ -1087,18 +1078,10 @@ object SearchOps {
     * same CDC upsert machinery as [[servedPostings]] and version-keyed on
     * the same source table.
     */
-  private[graft] def servedRuPostings(spark: SparkSession, dir: String): DataFrame = {
-    val p = Tables.derivedStorePath(spark, "rupostings", dir, "documents.parquet")
-    servedStores.computeIfAbsent(p, path => {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path)))
-        graft.streaming.IncrementalPostings.upsert(spark, path,
-          ruAugmentedDocs(spark, dir))
-      path
-    })
-    graft.streaming.IncrementalPostings.load(spark, p)
-  }
+  private[graft] def servedRuPostings(spark: SparkSession, dir: String): DataFrame =
+    graft.streaming.IncrementalPostings.load(spark,
+      DerivedStore.ensure(spark, "rupostings", dir, "documents.parquet")(
+        graft.streaming.IncrementalPostings.upsert(spark, _, ruAugmentedDocs(spark, dir))))
 
   /** The INDEXED twin of [[matchQueryRu]] — the last >1 s analyzer-band
     * scan face without a served path (1.02/dec in the r16 sweep, 1.44 s
@@ -1267,8 +1250,8 @@ object SearchOps {
       .groupBy("token", "doc_id")
       .agg(count(lit(1)).as("tf"))
 
-  /** Store path per data dir, JVM-wide: the postings STORE the index-backed
-    * query faces serve from. In a real deployment this is the table
+  /** The postings STORE the index-backed query faces serve from. In a
+    * real deployment this is the table
     * [[graft.streaming.IncrementalPostings]] maintains tick by tick;
     * queries never re-analyze the corpus — they read the index. The first
     * touch per dir builds the store through the SAME upsert machinery a CDC
@@ -1280,34 +1263,11 @@ object SearchOps {
     * pushed into the scan (PlanSpec pins the shape). At warehouse scale the
     * store is token-bucketed and a query reads only its terms' buckets.
     */
-  private val servedStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Build-or-serve guard for version-stamped stores — the one copy of the
-    * fs.exists + AtomicSwap boilerplate every store builder shares.
-    * RULE: resolve any DEPENDENCY store (e.g. [[servedPostings]]) BEFORE
-    * entering the enclosing `servedStores.computeIfAbsent` — a nested
-    * computeIfAbsent on the same map throws ConcurrentHashMap
-    * "Recursive update" when the outer key resolves first on a cold JVM.
-    */
-  private def buildIfAbsent(spark: SparkSession, path: String)
-                           (df: => DataFrame): String =
-    graft.sinks.AtomicSwap.buildIfAbsent(spark, path)(df)
-
-  def servedPostings(spark: SparkSession, dir: String): DataFrame = {
-    // version-stamped path: a rewritten documents table yields a NEW store
-    // location, so a stale index is never served (it is never read again)
-    val p = Tables.derivedStorePath(spark, "postings", dir, "documents.parquet")
-    servedStores.computeIfAbsent(p, path => {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path)))
-        graft.streaming.IncrementalPostings.upsert(spark, path,
-          Tables.documents(spark, dir).select(col("doc_id"), col("text")))
-      path
-    })
-    graft.streaming.IncrementalPostings.load(spark, p)
-  }
+  def servedPostings(spark: SparkSession, dir: String): DataFrame =
+    graft.streaming.IncrementalPostings.load(spark,
+      DerivedStore.ensure(spark, "postings", dir, "documents.parquet")(
+        graft.streaming.IncrementalPostings.upsert(spark, _,
+          Tables.documents(spark, dir).select(col("doc_id"), col("text")))))
 
   /** Search via the postings index instead of a corpus scan. */
   def postingsSearch(postings: DataFrame, q: String, k: Int = 20): DataFrame = {
@@ -1531,13 +1491,10 @@ object SearchOps {
     * 1-row [[servedBm25Stats]] artifact.
     * Version-keyed like every store: a rewritten corpus yields a new path.
     */
-  private[graft] def servedPostingsBucketed(spark: SparkSession, dir: String): DataFrame = {
-    // resolve the postings dependency BEFORE entering computeIfAbsent
-    // (nested computeIfAbsent on servedStores throws "Recursive update")
-    val posts = servedPostings(spark, dir)
-    val p = Tables.derivedStorePath(spark, "postingsbkt3", dir, "documents.parquet")
-    servedStores.computeIfAbsent(p, path =>
-      graft.sinks.AtomicSwap.buildIfAbsentWith(spark, path) { staging =>
+  private[graft] def servedPostingsBucketed(spark: SparkSession, dir: String): DataFrame =
+    Tables.parquetCached(spark, DerivedStore.ensure(spark, "postingsbkt3", dir,
+        "documents.parquet")(AtomicSwap.replaceWith(spark, _) { staging =>
+        val posts = servedPostings(spark, dir)
         val lens = posts.groupBy("doc_id").agg(sum("tf").cast("double").as("dl"))
         val dfs = posts.groupBy("token").agg(count(lit(1)).as("df"))
         val rows = posts.join(lens, Seq("doc_id")).join(dfs, Seq("token"))
@@ -1554,9 +1511,7 @@ object SearchOps {
           .sortWithinPartitions("tok_bucket", "token", "doc_id")
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .partitionBy("tok_bucket").parquet(staging)
-      })
-    Tables.parquetCached(spark, p)
-  }
+      }))
 
   /** POSITIONAL postings store, bucketed — (token, doc_id, pos) in the
     * same `tok_bucket = hash60(token) mod 64` directory-partitioned,
@@ -1570,10 +1525,9 @@ object SearchOps {
     * engine (BASELINE.md r14 table).
     */
   private[graft] def servedPositionalBucketed(spark: SparkSession,
-                                              dir: String): DataFrame = {
-    val p = Tables.derivedStorePath(spark, "posbkt1", dir, "documents.parquet")
-    servedStores.computeIfAbsent(p, path =>
-      graft.sinks.AtomicSwap.buildIfAbsentWith(spark, path) { staging =>
+                                              dir: String): DataFrame =
+    Tables.parquetCached(spark, DerivedStore.ensure(spark, "posbkt1", dir,
+        "documents.parquet")(AtomicSwap.replaceWith(spark, _) { staging =>
         val rows = Tables.documents(spark, dir)
           .select(col("doc_id"),
             posexplode(analyze(col("text"))).as(Seq("pos", "token")))
@@ -1586,9 +1540,7 @@ object SearchOps {
           .sortWithinPartitions("tok_bucket", "token", "doc_id", "pos")
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .partitionBy("tok_bucket").parquet(staging)
-      })
-    Tables.parquetCached(spark, p)
-  }
+      }))
 
   /** Bucket-routed positional read for a driver-known term set — the
     * bm25BucketedSearch routing applied to positions: tok_bucket IN-list
@@ -1606,16 +1558,12 @@ object SearchOps {
   /** 1-row corpus-constant artifact for BM25 over the bucketed layout:
     * (n_docs, avgdl) — the only quantities the pruned read cannot supply.
     */
-  private[graft] def servedBm25Stats(spark: SparkSession, dir: String): DataFrame = {
-    val posts = servedPostings(spark, dir)
-    val p = Tables.derivedStorePath(spark, "bm25stats", dir, "documents.parquet")
-    servedStores.computeIfAbsent(p, path => buildIfAbsent(spark, path) {
-      posts.groupBy("doc_id").agg(sum("tf").cast("double").as("dl"))
+  private[graft] def servedBm25Stats(spark: SparkSession, dir: String): DataFrame =
+    DerivedStore.parquet(spark, "bm25stats", dir, "documents.parquet") {
+      servedPostings(spark, dir).groupBy("doc_id").agg(sum("tf").cast("double").as("dl"))
         .agg(count(lit(1)).cast("double").as("n_docs"),
           (sum("dl") / count(lit(1))).as("avgdl"))
-    })
-    Tables.parquetCached(spark, p)
-  }
+    }
 
   /** BM25 served from the BUCKETED layout — same score algebra as
     * [[bm25ScoredOf]] term for term (same operand order, same rounding, so
@@ -1781,18 +1729,12 @@ object SearchOps {
     * cheap no matter how large the corpus grows — exactly why ES serves
     * suggestions from its term dictionary FST rather than the postings.
     */
-  private def servedVocabDf(spark: SparkSession, dir: String): DataFrame = {
-    // resolve the postings store BEFORE entering computeIfAbsent: its own
-    // computeIfAbsent on the same map would otherwise nest inside this
-    // one's mapping function — ConcurrentHashMap throws "Recursive update"
-    val posts = servedPostings(spark, dir) // one row per (token, doc_id)
-    val p = Tables.derivedStorePath(spark, "vocabdf", dir, "documents.parquet")
-    servedStores.computeIfAbsent(p, path => buildIfAbsent(spark, path) {
-      posts.groupBy(col("token")).agg(count(lit(1)).as("df"))
+  private def servedVocabDf(spark: SparkSession, dir: String): DataFrame =
+    DerivedStore.parquet(spark, "vocabdf", dir, "documents.parquet") {
+      servedPostings(spark, dir) // one row per (token, doc_id)
+        .groupBy(col("token")).agg(count(lit(1)).as("df"))
         .withColumn("tok_len", length(col("token")))
-    })
-    Tables.parquetCached(spark, p)
-  }
+    }
 
   /** ES `term` suggester ("did you mean") with the default
     * `suggest_mode=missing` semantics: only query terms ABSENT from the
@@ -1873,46 +1815,34 @@ object SearchOps {
     */
   private def servedSuggestLm(spark: SparkSession,
                               dir: String): (DataFrame, DataFrame) = {
-    val pp = Tables.derivedStorePath(spark, "sgb-pairs", dir, "documents.parquet")
-    val pu = Tables.derivedStorePath(spark, "sgb-unk", dir, "documents.parquet")
-    servedStores.computeIfAbsent(pp, _ => {
-      val fs = new org.apache.hadoop.fs.Path(pp)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // two relations behind one freshness decision (the bigram-LM rule):
-      // rebuild unless BOTH committed
-      if (!fs.exists(new org.apache.hadoop.fs.Path(pp)) ||
-          !fs.exists(new org.apache.hadoop.fs.Path(pu))) {
-        val base = Tables.documents(spark, dir)
-          .select(col("doc_id"), analyze(col("text")).as("toks"))
-        // guarded sequence: sequence(1, 0) infers a negative step instead
-        // of an empty window list — docs with < 2 tokens emit no pairs
-        val idx = when(size(col("toks")) >= 2,
-          sequence(lit(1), size(col("toks")) - 1))
-          .otherwise(array().cast("array<int>"))
-        val pairs0 = base
-          .select(explode(transform(idx, i => struct(
-            element_at(col("toks"), i).as("a"),
-            element_at(col("toks"), i + 1).as("b")))).as("p"))
-          .select(col("p.a").as("a"), col("p.b").as("b"))
-        val cab = pairs0.groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
-        val ca = cab.groupBy("a").agg(sum("c_ab").as("c_a"))
-        val cb = base.select(explode(col("toks")).as("token"))
-          .groupBy("token").agg(count(lit(1)).as("c_b"))
-        val tot = cb.agg(sum("c_b").cast("double").as("total"))
-        graft.sinks.AtomicSwap.replace(spark,
-          cab.join(ca, Seq("a")).select(col("a"), col("b"),
-            round(log(col("c_ab").cast("double") / col("c_a")) *
-              lit(1048576.0)).cast("long").as("lp_fx")),
-          pp)
-        graft.sinks.AtomicSwap.replace(spark,
-          cb.crossJoin(broadcast(tot)).select(col("token"),
-            round(log(lit(0.4) * (col("c_b").cast("double") / col("total"))) *
-              lit(1048576.0)).cast("long").as("lp0_fx")),
-          pu)
-      }
-      pp
-    })
-    (Tables.parquetCached(spark, pp), Tables.parquetCached(spark, pu))
+    // both relations in ONE store (pairs/ + unk/), committed as one unit
+    val p = DerivedStore.ensure(spark, "sgblm2", dir, "documents.parquet") { path =>
+      val base = Tables.documents(spark, dir)
+        .select(col("doc_id"), analyze(col("text")).as("toks"))
+      // guarded sequence: sequence(1, 0) infers a negative step instead
+      // of an empty window list — docs with < 2 tokens emit no pairs
+      val idx = when(size(col("toks")) >= 2,
+        sequence(lit(1), size(col("toks")) - 1))
+        .otherwise(array().cast("array<int>"))
+      val pairs0 = base
+        .select(explode(transform(idx, i => struct(
+          element_at(col("toks"), i).as("a"),
+          element_at(col("toks"), i + 1).as("b")))).as("p"))
+        .select(col("p.a").as("a"), col("p.b").as("b"))
+      val cab = pairs0.groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
+      val ca = cab.groupBy("a").agg(sum("c_ab").as("c_a"))
+      val cb = base.select(explode(col("toks")).as("token"))
+        .groupBy("token").agg(count(lit(1)).as("c_b"))
+      val tot = cb.agg(sum("c_b").cast("double").as("total"))
+      AtomicSwap.replaceParts(spark, path)(
+        "pairs" -> cab.join(ca, Seq("a")).select(col("a"), col("b"),
+          round(log(col("c_ab").cast("double") / col("c_a")) *
+            lit(1048576.0)).cast("long").as("lp_fx")).write,
+        "unk" -> cb.crossJoin(broadcast(tot)).select(col("token"),
+          round(log(lit(0.4) * (col("c_b").cast("double") / col("total"))) *
+            lit(1048576.0)).cast("long").as("lp0_fx")).write)
+    }
+    (Tables.parquetCached(spark, s"$p/pairs"), Tables.parquetCached(spark, s"$p/unk"))
   }
 
   /** ES `phrase` suggester — whole-phrase "did you mean" over the term
@@ -2356,13 +2286,11 @@ object SearchOps {
     * every store; a real system registers user queries through the same
     * relation.
     */
-  private def servedPercolator(spark: SparkSession, dir: String): DataFrame = {
-    val vocab = servedVocabDf(spark, dir) // resolves OUTSIDE computeIfAbsent
-    val p = Tables.derivedStorePath(spark, "percolator", dir, "documents.parquet")
-    servedStores.computeIfAbsent(p, path => buildIfAbsent(spark, path) {
+  private def servedPercolator(spark: SparkSession, dir: String): DataFrame =
+    DerivedStore.parquet(spark, "percolator", dir, "documents.parquet") {
       val w = org.apache.spark.sql.expressions.Window
         .orderBy(col("df").desc, col("token").asc)
-      val ranked = vocab.select(col("token"), col("df"))
+      val ranked = servedVocabDf(spark, dir).select(col("token"), col("df"))
         .withColumn("r", row_number().over(w)) // top-12: tiny, one task
         .filter(col("r") <= 12)
       val pairs = ranked.select((col("r") - 1).cast("long").as("query_id"),
@@ -2373,9 +2301,7 @@ object SearchOps {
       pairs.withColumn("n_req",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("query_id"))))
-    })
-    Tables.parquetCached(spark, p)
-  }
+    }
 
   /** ES `rescore`: a cheap first pass ranks the corpus, an expensive second
     * query re-scores ONLY the top `window` hits — the standard two-stage
@@ -2711,7 +2637,7 @@ object SearchOps {
                          q: String = "streem qery", k: Int = 20): DataFrame = {
     import spark.implicits._
     val postings = servedPostings(spark, dir)
-    val (dict, grams) = servedFuzzyDict(spark, dir)
+    val stores = servedFuzzyDict(spark, dir)
     val terms = analyzeQuery(q).distinct.sorted
     require(terms.nonEmpty, s"query '$q' analyzed to no terms")
     // The verified (term, token) set is QUERY-RESULT-sized — bounded by the
@@ -2727,8 +2653,7 @@ object SearchOps {
     // ES caches query rewrites). Keyed by the version-stamped store path,
     // so a rewritten corpus re-expands. Unseen terms pay one resolution
     // job; repeated terms resolve driver-side.
-    val storeKey = Tables.derivedStorePath(spark, "fuzzygrams", dir, "documents.parquet")
-    val expanded = resolveFuzzyCandidates(spark, storeKey, grams, dict, terms)
+    val expanded = resolveFuzzyCandidates(spark, stores, terms)
     val verifiedPairs = terms.flatMap(t => expanded(t).map(tok => (t, tok)))
     val tokens = verifiedPairs.map(_._2).distinct.toSeq
     val verifiedDf = verifiedPairs.toSeq.toDF("term", "token")
@@ -2752,50 +2677,40 @@ object SearchOps {
     new java.util.concurrent.ConcurrentHashMap[(String, String), Array[String]]()
 
   /** Resolve each term's verified fuzzy candidates against a (dict, grams)
-    * store pair, memoized per (store version, term) — the expansion step
-    * shared by [[fuzzySearchIndexed]] and [[multiFieldFuzzyIndexed]].
-    * Unseen terms pay ONE resolution job for the whole batch; repeated
-    * terms resolve driver-side (the Lucene automaton-walk cache analog).
+    * store pair of paths, memoized per (gram-store path, term) — the
+    * expansion step shared by [[fuzzySearchIndexed]] and
+    * [[multiFieldFuzzyIndexed]]. Unseen terms pay ONE resolution job for
+    * the whole batch; repeated terms resolve driver-side (the Lucene
+    * automaton-walk cache analog).
     */
-  private def resolveFuzzyCandidates(spark: SparkSession, storeKey: String,
-      grams: DataFrame, dict: DataFrame,
+  private def resolveFuzzyCandidates(spark: SparkSession, stores: (String, String),
       terms: Seq[String]): Map[String, Array[String]] = {
-    val missing = terms.filterNot(t => fuzzyCandCache.containsKey((storeKey, t)))
+    val (dictPath, gramPath) = stores
+    val missing = terms.filterNot(t => fuzzyCandCache.containsKey((gramPath, t)))
     if (missing.nonEmpty) {
-      val resolved = fuzzyVerified(spark, grams, dict, missing)
+      val resolved = fuzzyVerified(spark, Tables.parquetCached(spark, gramPath),
+          Tables.parquetCached(spark, dictPath), missing)
         .collect().map(r => (r.getString(0), r.getString(1)))
         .groupBy(_._1).map { case (t, ps) => t -> ps.map(_._2) }
       missing.foreach(t =>
-        fuzzyCandCache.put((storeKey, t), resolved.getOrElse(t, Array.empty)))
+        fuzzyCandCache.put((gramPath, t), resolved.getOrElse(t, Array.empty)))
     }
-    terms.map(t => t -> fuzzyCandCache.get((storeKey, t))).toMap
+    terms.map(t => t -> fuzzyCandCache.get((gramPath, t))).toMap
   }
 
-  /** Served term-dictionary + character-bigram-postings stores per data
-    * dir — the materialized face of the fuzzy candidate index (`dict` =
-    * (token, tok_len); `grams` = (token, tok_len, gram, cnt), at warehouse
-    * scale bucketed by gram). Derived from the SAME served postings store
-    * the scoring pass reads, so the dictionary can never drift from the
-    * corpus it indexes; version-stamped paths rebuild on a rewritten
-    * corpus.
+  /** Served term-dictionary + character-bigram-postings store paths per
+    * data dir — the materialized face of the fuzzy candidate index (`dict`
+    * = (token, tok_len); `grams` = (token, tok_len, gram, cnt), at
+    * warehouse scale bucketed by gram). Derived from the SAME served
+    * postings store the scoring pass reads, so the dictionary can never
+    * drift from the corpus it indexes.
     */
-  private def servedFuzzyDict(spark: SparkSession,
-                              dir: String): (DataFrame, DataFrame) = {
-    // resolve the postings store BEFORE entering computeIfAbsent — its own
-    // computeIfAbsent on the same map would otherwise nest inside this
-    // one's mapping function (ConcurrentHashMap "Recursive update"; latent
-    // until the fuzzydict key resolves first on a cold JVM)
-    val posts = servedPostings(spark, dir)
-    val pd = Tables.derivedStorePath(spark, "fuzzydict", dir, "documents.parquet")
-    val pg = Tables.derivedStorePath(spark, "fuzzygrams", dir, "documents.parquet")
-    servedStores.computeIfAbsent(pd, path => buildIfAbsent(spark, path) {
-      posts.select(col("token")).distinct()
-        .withColumn("tok_len", length(col("token")))
-    })
-    servedStores.computeIfAbsent(pg, path => buildIfAbsent(spark, path) {
-      dictGrams(Tables.parquetCached(spark, pd))
-    })
-    (Tables.parquetCached(spark, pd), Tables.parquetCached(spark, pg))
+  private def servedFuzzyDict(spark: SparkSession, dir: String): (String, String) = {
+    val pd = DerivedStore.ensure(spark, "fuzzydict", dir, "documents.parquet")(
+      AtomicSwap.replace(spark, servedPostings(spark, dir).select(col("token")).distinct()
+        .withColumn("tok_len", length(col("token"))), _))
+    (pd, DerivedStore.ensure(spark, "fuzzygrams", dir, "documents.parquet")(
+      AtomicSwap.replace(spark, dictGrams(Tables.parquetCached(spark, pd)), _)))
   }
 
   /** Character-bigram postings over a (token, tok_len) dictionary. */

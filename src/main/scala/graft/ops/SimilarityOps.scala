@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{DerivedStore, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -372,29 +372,19 @@ object SimilarityOps {
     result
   }
 
-  private val cellStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def servedCellStore(spark: SparkSession, dir: String, emb: DataFrame,
                               codebook: Array[(Int, Array[Double])],
-                              nlist: Int): DataFrame = {
-    val p = Tables.derivedStorePath(spark, s"ivfcells-$nlist", dir, "embeddings.parquet")
-    cellStores.computeIfAbsent(p, path => {
-      val hp = new org.apache.hadoop.fs.Path(path)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(hp))
+                              nlist: Int): DataFrame =
+    graft.streaming.IncrementalVectors.load(spark,
+      DerivedStore.ensure(spark, s"ivfcells-$nlist", dir, "embeddings.parquet")(
         // first build runs through the SAME upsert a CDC tick uses
         // ([[graft.streaming.IncrementalVectors]]): assignment is the same
         // native ivf_assign, the write the same staged swap — so a
         // maintained store is bit-identical to a fresh build and every
         // served-ANN oracle replays unchanged over either
-        graft.streaming.IncrementalVectors.upsert(spark, path,
+        graft.streaming.IncrementalVectors.upsert(spark, _,
           emb.select(col("vec_id"), col("label"), col("v")),
-          codebook.map(_._2.toSeq).toSeq)
-      path
-    })
-    graft.streaming.IncrementalVectors.load(spark, p)
-  }
+          codebook.map(_._2.toSeq).toSeq)))
 
   /** The driver-side twin of [[graft.functions.VecCosine]].compute — SAME
     * left-to-right accumulation order over the dims, so probe-cell ranking
@@ -1227,8 +1217,9 @@ object SimilarityOps {
   /** (coarse codebook, PQ codebooks, seed vectors) + the cell-partitioned
     * code store for (dir, nlist, m, ksub, rounds) — trained and encoded
     * ONCE per embeddings content version, swapped in atomically, model
-    * cached in-JVM and reloadable from the store's `model/` parquet (a
-    * later JVM serves without retraining; doubles round-trip exactly).
+    * cached in-JVM per store path and reloaded from the store's `model/`
+    * parquet (a later JVM serves without retraining; doubles round-trip
+    * exactly).
     * Seed vectors ride in the model artifact so default query ids need no
     * 1-row job at serve time — the same economy as ivfServedCandidates.
     */
@@ -1240,47 +1231,38 @@ object SimilarityOps {
       : (Array[Array[Double]], Array[Array[Array[Double]]],
          Array[Array[Double]], DataFrame) = {
     val sub = dim / m
-    val p = Tables.derivedStorePath(spark, s"ivfpq-$nlist-$m-$ksub-$rounds",
-      dir, "embeddings.parquet")
+    val p = DerivedStore.ensure(spark, s"ivfpq-$nlist-$m-$ksub-$rounds", dir,
+        "embeddings.parquet") { path =>
+      // one cached vector frame funds both trainings + the encode
+      val emb = Tables.embeddings(spark, dir)
+        .withColumn("v", toDouble(col("embedding")))
+        .cache()
+      try {
+        val seedVecs = collectCodebook(emb, math.max(nlist, ksub))
+        val (c, _) = trainCodebookOn(emb, nlist, rounds, dim,
+          init = seedVecs.take(nlist).map(_._2))
+        val pq = trainPqCodebooksOn(emb, m, ksub, rounds, dim,
+          seedVecs = seedVecs.map(_._2))
+        val codeCols = (0 until m).map { i =>
+          call_function("ivf_assign", slice(col("v"), i * sub + 1, sub),
+            typedlit(pq(i).map(_.toSeq).toSeq)).as(s"code_$i")
+        }
+        val encoded = emb.select(
+          col("vec_id") +: col("label") +: col("v") +:
+            call_function("ivf_assign", col("v"),
+              typedlit(c.map(_.toSeq).toSeq)).as("cell") +: codeCols: _*)
+        val modelRows: Seq[(String, Int, Int, Seq[Double])] =
+          c.toSeq.zipWithIndex.map { case (v, i) => ("coarse", 0, i, v.toSeq) } ++
+          (for (i <- 0 until m; j <- 0 until ksub)
+            yield ("pq", i, j, pq(i)(j).toSeq)) ++
+          seedVecs.toSeq.map { case (i, v) => ("seed", 0, i, v.toSeq) }
+        import spark.implicits._
+        val modelDf = modelRows.toDF("kind", "sub", "idx", "vec").coalesce(1)
+        graft.sinks.AtomicSwap.replaceParts(spark, path)(
+          "codes" -> encoded.write.partitionBy("cell"), "model" -> modelDf.write)
+      } finally { emb.unpersist(); () }
+    }
     val (coarse, cbs, seeds) = ivfPqModels.computeIfAbsent(p, path => {
-      val f = graft.sinks.AtomicSwap.fs(spark, path)
-      val hp = new org.apache.hadoop.fs.Path(path)
-      graft.sinks.AtomicSwap.recover(spark, path) // promote a crashed-but-complete build
-      if (!f.exists(hp)) {
-        // one cached vector frame funds both trainings + the encode
-        val emb = Tables.embeddings(spark, dir)
-          .withColumn("v", toDouble(col("embedding")))
-          .cache()
-        try {
-          val seedVecs = collectCodebook(emb, math.max(nlist, ksub))
-          val (c, _) = trainCodebookOn(emb, nlist, rounds, dim,
-            init = seedVecs.take(nlist).map(_._2))
-          val pq = trainPqCodebooksOn(emb, m, ksub, rounds, dim,
-            seedVecs = seedVecs.map(_._2))
-          val codeCols = (0 until m).map { i =>
-            call_function("ivf_assign", slice(col("v"), i * sub + 1, sub),
-              typedlit(pq(i).map(_.toSeq).toSeq)).as(s"code_$i")
-          }
-          val encoded = emb.select(
-            col("vec_id") +: col("label") +: col("v") +:
-              call_function("ivf_assign", col("v"),
-                typedlit(c.map(_.toSeq).toSeq)).as("cell") +: codeCols: _*)
-          val modelRows: Seq[(String, Int, Int, Seq[Double])] =
-            c.toSeq.zipWithIndex.map { case (v, i) => ("coarse", 0, i, v.toSeq) } ++
-            (for (i <- 0 until m; j <- 0 until ksub)
-              yield ("pq", i, j, pq(i)(j).toSeq)) ++
-            seedVecs.toSeq.map { case (i, v) => ("seed", 0, i, v.toSeq) }
-          import spark.implicits._
-          val modelDf = modelRows.toDF("kind", "sub", "idx", "vec").coalesce(1)
-          graft.sinks.AtomicSwap.replaceWith(spark, path) { staging =>
-            encoded.write.partitionBy("cell").parquet(s"$staging/codes")
-            modelDf.write.parquet(s"$staging/model")
-            // root marker LAST: recover() promotes only a staging whose
-            // BOTH parts committed (each subdir's own _SUCCESS is per-part)
-            f.create(new org.apache.hadoop.fs.Path(s"$staging/_SUCCESS")).close()
-          }
-        } finally { emb.unpersist(); () }
-      }
       val rows = spark.read.parquet(s"$path/model").collect()
       def vecsOf(kind: String): Map[(Int, Int), Array[Double]] =
         rows.filter(_.getString(0) == kind)

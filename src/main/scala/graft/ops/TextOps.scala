@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{DerivedStore, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -353,28 +353,16 @@ object TextOps {
     * (the gap = the extra job dispatch + exchange). Served, steady state is
     * one corpus gram scan joined to a broadcast of a tiny parquet scan.
     */
-  private val evalGramStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def servedEvalGrams(spark: SparkSession, dir: String, nGram: Int,
-                              evalMaxId: Long): DataFrame = {
-    val p = Tables.derivedStorePath(spark, s"evalgrams-$nGram-$evalMaxId",
-      dir, "documents.parquet")
-    evalGramStores.computeIfAbsent(p, path => {
-      val hp = new org.apache.hadoop.fs.Path(path)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(hp)) {
-        val evalGrams = Tables.documents(spark, dir)
-          .filter(col("doc_id") < evalMaxId)
-          .select(split(lower(trim(col("text"))), "\\s+").as("toks"))
-          .select(explode(expr(s"gram_hash60(toks, $nGram)")).as("g"))
-          .distinct()
-        graft.sinks.AtomicSwap.replace(spark, evalGrams, path)
-      }
-      path
-    })
-    Tables.parquetCached(spark, p)
-  }
+                              evalMaxId: Long): DataFrame =
+    DerivedStore.parquet(spark, s"evalgrams-$nGram-$evalMaxId", dir,
+        "documents.parquet") {
+      Tables.documents(spark, dir)
+        .filter(col("doc_id") < evalMaxId)
+        .select(split(lower(trim(col("text"))), "\\s+").as("toks"))
+        .select(explode(expr(s"gram_hash60(toks, $nGram)")).as("g"))
+        .distinct()
+    }
 
   /** Corpus-wide duplicated-n-gram profile (the RefinedWeb / Dolma
     * "duplicate text fraction" signal): for each document, the fraction of
@@ -933,7 +921,7 @@ object TextOps {
   def unigramLogprob(spark: SparkSession, dir: String): DataFrame =
     scoreUnigram(spark, dir, servedUnigramModel(spark, dir))
 
-  /** (token, logp) model store per data dir, JVM-wide — the train/serve
+  /** (token, logp) model store per corpus version — the train/serve
     * split a real quality pipeline runs: the LM is FIT once over the corpus
     * (KenLM-style artifact; CCNet fits offline and ships the model) and
     * scoring reads it, never re-derives it. First touch per dir pays the
@@ -944,25 +932,13 @@ object TextOps {
     * round-trips doubles exactly, and the fixed-point score sum never sees
     * a different logp than the inline fit computes.
     */
-  private val unigramStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def servedUnigramModel(spark: SparkSession, dir: String): DataFrame = {
-    // version-stamped path (see Tables.derivedStorePath): a rewritten
-    // corpus refits the model instead of serving a stale one
-    val p = Tables.derivedStorePath(spark, "unigram", dir, "documents.parquet")
-    unigramStores.computeIfAbsent(p, path => {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path))) {
+  private def servedUnigramModel(spark: SparkSession, dir: String): DataFrame =
+    Tables.parquetCached(spark,
+      DerivedStore.ensure(spark, "unigram", dir, "documents.parquet") { path =>
         val (counts, model) = fitUnigram(spark, dir)
         graft.sinks.AtomicSwap.replace(spark, model, path)
         counts.unpersist()
-      }
-      path
-    })
-    Tables.parquetCached(spark, p)
-  }
+      })
 
   /** One-pass LM fit: cached vocabulary-sized counts + the (token, logp)
     * model derived from them (total rides as a 1-row broadcast).
@@ -1036,26 +1012,16 @@ object TextOps {
   def perplexityBuckets(spark: SparkSession, dir: String): DataFrame =
     servedPerplexityBuckets(spark, dir)
 
-  private val pplBucketStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Version-keyed served store of the EXACT bucket assignment
     * (doc_id, lang, avg_logprob, bucket); a rewritten corpus re-derives it
     * via the version-stamped path. Build cost is one LM-scoring scan +
     * one per-lang NTILE — paid per corpus version, never per query.
     */
   private[graft] def servedPerplexityBuckets(spark: SparkSession,
-                                             dir: String): DataFrame = {
-    // resolve the DEPENDENT unigram-model store first (buildIfAbsent's
-    // contract: no nested builds inside a computeIfAbsent mapping)
-    servedUnigramModel(spark, dir)
-    val p = Tables.derivedStorePath(spark, "pplbuckets", dir, "documents.parquet")
-    pplBucketStores.computeIfAbsent(p, path =>
-      graft.sinks.AtomicSwap.buildIfAbsent(spark, path) {
-        bucketsExactOf(scoredWithLang(spark, dir))
-      })
-    Tables.parquetCached(spark, p)
-  }
+                                             dir: String): DataFrame =
+    DerivedStore.parquet(spark, "pplbuckets", dir, "documents.parquet") {
+      bucketsExactOf(scoredWithLang(spark, dir))
+    }
 
   /** LM-scored corpus with the language key — the one frame BOTH bucketing
     * faces derive from, factored out so the graded-contract query scores the
@@ -1429,30 +1395,17 @@ object TextOps {
       .select(col("doc_id"), col("p.a").as("a"), col("p.b").as("b"))
   }
 
-  private val bigramStores =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
+  /** The model is TWO relations in ONE store (`pairs/` + `backoff/`),
+    * swapped in as one unit, so no crash can leave one without the other.
+    */
   private def servedBigramModel(spark: SparkSession,
                                 dir: String): (DataFrame, DataFrame) = {
-    val pp = Tables.derivedStorePath(spark, "bigram-pairs", dir, "documents.parquet")
-    val pb = Tables.derivedStorePath(spark, "bigram-backoff", dir, "documents.parquet")
-    bigramStores.computeIfAbsent(pp, _ => {
-      val fs = new org.apache.hadoop.fs.Path(pp)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // the model is TWO relations behind ONE freshness decision: a crash
-      // between the two replace calls must trigger a rebuild on the next
-      // JVM, so rebuild unless BOTH stores committed (backoff swaps last
-      // and therefore implies pairs — but checking both is what makes that
-      // ordering a non-load-bearing detail)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(pp)) ||
-          !fs.exists(new org.apache.hadoop.fs.Path(pb))) {
-        val (pairs, backoff) = fitBigram(spark, dir)
-        graft.sinks.AtomicSwap.replace(spark, pairs, pp)
-        graft.sinks.AtomicSwap.replace(spark, backoff, pb)
-      }
-      (pp, pb)
-    })
-    (Tables.parquetCached(spark, pp), Tables.parquetCached(spark, pb))
+    val p = DerivedStore.ensure(spark, "bigramlm2", dir, "documents.parquet") { path =>
+      val (pairs, backoff) = fitBigram(spark, dir)
+      graft.sinks.AtomicSwap.replaceParts(spark, path)(
+        "pairs" -> pairs.write, "backoff" -> backoff.write)
+    }
+    (Tables.parquetCached(spark, s"$p/pairs"), Tables.parquetCached(spark, s"$p/backoff"))
   }
 
   /** Fit both model relations; ln terms are spelled EXACTLY as the oracle

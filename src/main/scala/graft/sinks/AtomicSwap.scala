@@ -121,27 +121,6 @@ object AtomicSwap {
     stage(spark, merged, livePath)
   }
 
-  /** The ONE copy of the build-or-serve guard every store builder shares:
-    * materialize `df` at `path` iff nothing lives there yet, return the
-    * path. Callers memoizing paths in a ConcurrentHashMap must resolve any
-    * DEPENDENT store BEFORE entering their computeIfAbsent mapping — a
-    * nested computeIfAbsent on the same map throws "Recursive update".
-    */
-  def buildIfAbsent(spark: SparkSession, path: String)(df: => DataFrame): String =
-    buildIfAbsentWith(spark, path)(staging =>
-      df.write.mode(SaveMode.Overwrite).parquet(staging))
-
-  /** Writer-flavored [[buildIfAbsent]] for stores needing a custom write
-    * (partitioned layouts, sorted files): same guard, the caller supplies
-    * the staging write.
-    */
-  def buildIfAbsentWith(spark: SparkSession, path: String)
-                       (write: String => Unit): String = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    if (!fs(spark, path).exists(hp)) replaceWith(spark, path)(write)
-    path
-  }
-
   /** The staged swap with a caller-supplied writer (partitioned layouts,
     * bucketed tables) — the writer targets the STAGING path; the rename
     * dance is identical, so a crash mid-write can never leave a partial
@@ -151,6 +130,19 @@ object AtomicSwap {
   def replaceWith(spark: SparkSession, livePath: String)
                  (write: String => Unit): Unit =
     stageWith(spark, livePath)(write).commit()
+
+  /** [[replaceWith]] for a store of several relations, one sub-directory
+    * each (`$livePath/<name>`), swapped in as ONE unit. The root `_SUCCESS`
+    * goes in last: [[recover]] promotes only a staging whose every part
+    * committed (each part's own marker sits in its sub-directory).
+    */
+  def replaceParts(spark: SparkSession, livePath: String)
+                  (parts: (String, org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row])*): Unit =
+    replaceWith(spark, livePath) { staging =>
+      parts.foreach { case (name, w) =>
+        w.mode(SaveMode.Overwrite).parquet(s"$staging/$name") }
+      fs(spark, livePath).create(new org.apache.hadoop.fs.Path(s"$staging/_SUCCESS")).close()
+    }
 
   /** [[replaceWith]]'s Spark half: the write into staging. Discarding
     * deletes the staging, so a first build never promoted stays absent.

@@ -116,8 +116,7 @@ object ComposedEtlQuery {
       .map(_.getSeq[Double](1).toSeq).toSeq
 
   def composedTick(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Tables.derivedStorePath(spark, "composedtick", dir,
-      "documents.parquet")
+    val base = graft.DerivedStore.path(spark, "composedtick", dir, "documents.parquet")
     val pipeline = new ComposedEtlPipeline(
       feed(dir), docBuilder(dir), codebook(spark, dir),
       s"$base/docs", s"$base/postings", s"$base/vectors", s"$base/state")

@@ -16,6 +16,12 @@ quartiles and the pairs the working tree won (ties count for neither). A gain
 holds when the tree wins at least 9/10 of the pairs, the medians differ, in
 the better direction, by more than the parent's interquartile range, and the
 tree failed no more operations than the parent.
+
+It also prints a no-regression verdict per metric against the metric's
+`bound` in BENCHMARK.json (a fraction of the parent's median): `worse` when
+the tree's median is worse than the parent's by more than the bound,
+`unresolved` when the parent's own spread (IQR / median) exceeds the bound
+and not every tree run beats every parent run, `ok` otherwise.
 """
 import argparse
 import atexit
@@ -31,11 +37,12 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def benchmark():
-    """BENCHMARK.json's run length and the (name, better) of every
+    """BENCHMARK.json's run length and the (name, better, bound) of every
     end-to-end metric it declares."""
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         b = json.load(f)
-    return b["run_seconds"], [(m["name"], m["better"]) for m in b["end_to_end"]]
+    return b["run_seconds"], [(m["name"], m["better"], m["bound"])
+                              for m in b["end_to_end"]]
 
 
 def quartiles(xs):
@@ -59,6 +66,18 @@ def verdict(parent, change, better, parent_failed=0, change_failed=0):
         "holds": (wins >= 0.9 * len(parent) and gain > pq[2] - pq[0]
                   and change_failed <= parent_failed),
     }
+
+
+def regression(parent, change, better, bound):
+    """No-regression verdict of one metric: 'worse', 'unresolved' or 'ok'."""
+    sign = 1.0 if better == "lower" else -1.0
+    pq, cq = quartiles(parent), quartiles(change)
+    if sign * (cq[1] - pq[1]) > bound * abs(pq[1]):
+        return "worse"
+    all_better = all(sign * (p - c) > 0 for p in parent for c in change)
+    if pq[2] - pq[0] > bound * abs(pq[1]) and not all_better:
+        return "unresolved"
+    return "ok"
 
 
 def run_side(tree, workload, seed, seconds):
@@ -118,15 +137,17 @@ def main(argv=None):
         print(f"\n{w}: {a.pairs} pairs, seeds {r['seeds'][0]}..{r['seeds'][-1]}, "
               f"failed parent {failed['parent']} change {failed['change']}")
         print(f"  {'metric':<10} {'parent median [q1, q3]':>30} {'change median [q1, q3]':>30}"
-              f" {'wins':>6}  gain")
-        for name, better in metrics:
-            v = verdict([x["metrics"][name]["value"] for x in r["parent"]],
-                        [x["metrics"][name]["value"] for x in r["change"]], better,
-                        failed["parent"], failed["change"])
+              f" {'wins':>6}  gain   no-regression")
+        for name, better, bound in metrics:
+            parent = [x["metrics"][name]["value"] for x in r["parent"]]
+            change = [x["metrics"][name]["value"] for x in r["change"]]
+            v = verdict(parent, change, better, failed["parent"], failed["change"])
+            v["regression"] = regression(parent, change, better, bound)
             summary[w][name] = v
             fmt = lambda q: f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]"
             print(f"  {name:<10} {fmt(v['parent']):>30} {fmt(v['change']):>30}"
-                  f" {v['wins']:>3}/{v['pairs']:<2}  {'holds' if v['holds'] else '-'}")
+                  f" {v['wins']:>3}/{v['pairs']:<2}  {'holds' if v['holds'] else '-':<6}"
+                  f" {v['regression']} (bound {bound:g})")
     if a.out:
         with open(a.out, "w") as f:
             json.dump({"summary": summary, "runs": runs}, f, indent=1)

@@ -43,7 +43,32 @@ class VerdictTest(unittest.TestCase):
     def test_run_length_comes_from_the_benchmark(self):
         seconds, metrics = ab_pairs.benchmark()
         self.assertGreater(seconds, 0)
-        self.assertIn(("p50_ms", "lower"), metrics)
+        self.assertIn(("p50_ms", "lower", 0.25), metrics)
+
+
+class RegressionTest(unittest.TestCase):
+    def test_median_worse_by_more_than_the_bound_is_worse(self):
+        parent = [100, 101, 99, 100, 102, 98, 100, 101, 99, 100]
+        change = [130] * 10
+        self.assertEqual(ab_pairs.regression(parent, change, "lower", 0.25), "worse")
+        self.assertEqual(ab_pairs.regression(change, parent, "higher", 0.2), "worse")
+
+    def test_worse_within_the_bound_is_ok(self):
+        parent = [100, 101, 99, 100, 102, 98, 100, 101, 99, 100]
+        change = [120] * 10
+        self.assertEqual(ab_pairs.regression(parent, change, "lower", 0.25), "ok")
+
+    def test_parent_spread_wider_than_the_bound_is_unresolved(self):
+        parent = [50, 150, 60, 140, 70, 130, 80, 120, 90, 110]
+        change = [p + 5 for p in parent]
+        self.assertEqual(ab_pairs.regression(parent, change, "lower", 0.25), "unresolved")
+
+    def test_wide_spread_but_every_change_run_better_is_ok(self):
+        parent = [50, 150, 60, 140, 70, 130, 80, 120, 90, 110]
+        change = [40, 45, 42, 41, 44, 43, 46, 47, 48, 49]
+        self.assertEqual(ab_pairs.regression(parent, change, "lower", 0.25), "ok")
+        higher = [p + 200 for p in parent]
+        self.assertEqual(ab_pairs.regression(parent, higher, "higher", 0.25), "ok")
 
 
 if __name__ == "__main__":
