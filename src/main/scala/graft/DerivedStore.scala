@@ -24,10 +24,14 @@ object DerivedStore {
 
   /** Driver-local default root; `spark.graft.store.dir` points it at a
     * shared filesystem on a real cluster (scheme-qualified paths resolve
-    * their own FS through AtomicSwap and the loaders).
+    * their own FS through AtomicSwap and the loaders). Its name is fresh per
+    * JVM, so no later JVM can reuse it: it is deleted when the JVM exits.
     */
-  private lazy val localRoot =
-    java.nio.file.Files.createTempDirectory("graft-stores-").toString
+  private lazy val localRoot = {
+    val root = java.nio.file.Files.createTempDirectory("graft-stores-").toFile
+    sys.addShutdownHook(org.apache.hadoop.fs.FileUtil.fullyDelete(root))
+    root.toString
+  }
 
   private val resolved = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()

@@ -45,12 +45,14 @@ object Tables {
     * a rewrite that DOES change the schema re-infers instead of silently
     * reading stale columns as NULL.
     */
-  private[graft] def parquetCached(spark: SparkSession, path: String): DataFrame = {
-    val schema = schemaCache.computeIfAbsent(
+  private[graft] def parquetCached(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(cachedSchema(spark, path)).parquet(path)
+
+  /** The schema of `path`'s current content, inferred once per version. */
+  private def cachedSchema(spark: SparkSession, path: String): StructType =
+    schemaCache.computeIfAbsent(
       s"$path@${contentVersion(spark, path)}",
       _ => spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
-  }
 
   /** Record the schema of `path`'s CURRENT content — called by
     * [[graft.sinks.AtomicSwap]] right after it swaps in files it wrote
@@ -195,10 +197,7 @@ object Tables {
   def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val path = s"$dir/events.parquet"
-    val inferred = schemaCache.computeIfAbsent(
-      s"$path@${contentVersion(spark, path)}",
-      _ => spark.read.parquet(path).schema)
-    val raw = StructType(inferred.map {
+    val raw = StructType(cachedSchema(spark, path).map {
       case f if f.name == "ts" => f.copy(dataType = LongType)
       case f => f
     })

@@ -23,7 +23,7 @@ object DedupeAppendSink {
     val spark = incoming.sparkSession
     val fresh = incoming.dropDuplicates(key)
     val toWrite =
-      if (exists(spark, targetPath)) {
+      if (AtomicSwap.fs(spark, targetPath).exists(new org.apache.hadoop.fs.Path(targetPath))) {
         val existingKeys = spark.read.parquet(targetPath).select(key)
         fresh.join(existingKeys, Seq(key), "left_anti")
       } else fresh
@@ -37,11 +37,5 @@ object DedupeAppendSink {
     }
     toWrite.unpersist()
     n
-  }
-
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.ops.CatalogDocs
-import org.apache.spark.sql.SparkSession
 
 /** The reference's ETL loop over its OWN catalog schema (etl/main.py:357-385:
   * movies / genres / persons pipelines back to back, each with its own state
@@ -16,29 +15,10 @@ import org.apache.spark.sql.SparkSession
   * T3 strictly-greater tie-break: tick 1 picks everything, tick 2 is a
   * clean zero, no starvation.
   */
-class CatalogEtl(catalogDir: String, workDir: String) {
-
-  val movies = new IncrementalDocPipeline(
-    docBuilder = (s, ids) => CatalogDocs.movieDocs(s, catalogDir, Some(ids)),
-    changes = CatalogDocs.movieChanges(catalogDir),
-    storePath = s"$workDir/movies_store",
-    statePath = s"$workDir/movies_state")
-
-  val genres = new IncrementalDocPipeline(
-    docBuilder = (s, ids) => CatalogDocs.genreDocs(s, catalogDir, Some(ids)),
-    changes = CatalogDocs.genreChanges(catalogDir),
-    storePath = s"$workDir/genres_store",
-    statePath = s"$workDir/genres_state")
-
-  val persons = new IncrementalDocPipeline(
-    docBuilder = (s, ids) => CatalogDocs.personDocs(s, catalogDir, Some(ids)),
-    changes = CatalogDocs.personChanges(catalogDir),
-    storePath = s"$workDir/persons_store",
-    statePath = s"$workDir/persons_state")
-
-  /** One round, reference order (movies, genres, persons). */
-  def tickAll(spark: SparkSession): Map[String, Long] = Map(
-    "movies" -> movies.tick(spark),
-    "genres" -> genres.tick(spark),
-    "persons" -> persons.tick(spark))
-}
+class CatalogEtl(catalogDir: String, workDir: String) extends ThreeIndexEtl(workDir,
+  ((s, ids) => CatalogDocs.movieDocs(s, catalogDir, Some(ids)),
+    CatalogDocs.movieChanges(catalogDir)),
+  ((s, ids) => CatalogDocs.genreDocs(s, catalogDir, Some(ids)),
+    CatalogDocs.genreChanges(catalogDir)),
+  ((s, ids) => CatalogDocs.personDocs(s, catalogDir, Some(ids)),
+    CatalogDocs.personChanges(catalogDir)))

@@ -184,46 +184,30 @@ abstract class CdcTick(changes: SparkSession => DataFrame, key: String,
     * keys' FULL documents (dirty ids first, then the whole entity — the
     * reference's filter-before-group bug fixed, SURVEY T4) and stage their
     * upsert alongside the `later` stores' stages, commit docs then the
-    * `later` stores, and hand the store-committed frame to `deliver` (the
+    * `later` stores, and hand the committed docs to `deliver` (the
     * reference's es.bulk) last before the watermark, so a delivery outage
     * pins the watermark while the stores stay converged.
     *
-    * Persist-when-delivering: with a deliverer wired the rebuilt docs have
-    * two consumers, so they persist across both — otherwise the delivery
-    * action would re-run the rebuild and could ship a different doc version
-    * than the store committed while the watermark still advances. With the
-    * [[IncrementalDocPipeline.NoDeliver]] sentinel there is one consumer and
-    * the materialization would be pure overhead (+28 % on q_composed_tick).
+    * Delivery reads the docs back: the doc store semi-joined on the batch's
+    * ids is, by construction, exactly what the store committed (stamped
+    * columns included), so no rebuilt frame has to outlive the stage that
+    * wrote it. A wired deliverer pays one doc-store scan; the default
+    * [[IncrementalDocPipeline.NoDeliver]] runs no action on it. One edge:
+    * a dirty id whose builder yields no doc keeps its stored doc, and that
+    * unchanged doc is delivered again — idempotent by `_id`.
     */
   protected final def docsThenDeliver(
       spark: SparkSession, batch: Batch,
       docBuilder: (SparkSession, DataFrame) => DataFrame, storePath: String,
       stampTimestamps: Boolean, deliver: (SparkSession, DataFrame) => Unit)
       (later: (String, () => AtomicSwap.Staged)*): Unit = {
-    val delivering = deliver ne IncrementalDocPipeline.NoDeliver
-    // set by the doc stage's thread, read here after stageThenCommit joined it
-    @volatile var docs: DataFrame = null
-    @volatile var committed: DataFrame = null
-    val docStage = () => {
-      val built = docBuilder(spark, batch.ids)
-      docs = if (delivering) built.persist() else built
-      // the returned frame is the STORE-COMMITTED version (stamped when
-      // stampTimestamps=true) — deliver THAT, never the pre-stamp `docs`
-      val (c, staged) = IncrementalDocPipeline.stageDocs(
-        spark, storePath, docs, stampTimestamps, retainCommitted = delivering)
-      committed = c
-      staged
-    }
-    try {
-      stageThenCommit(spark, ("docs" -> docStage) +: later)
-      if (delivering) {
-        deliver(spark, committed) // throws ⇒ watermark stays put
-        afterStage("deliver")
-      }
-    } finally if (delivering) {
-      if (committed != null && (committed ne docs)) committed.unpersist()
-      if (docs != null) docs.unpersist()
-    }
+    val docStage = () => IncrementalDocPipeline.stageDocs(
+      spark, storePath, docBuilder(spark, batch.ids), stampTimestamps)
+    stageThenCommit(spark, ("docs" -> docStage) +: later)
+    // throws ⇒ watermark stays put
+    deliver(spark, graft.Tables.parquetCached(spark, storePath)
+      .join(batch.ids, Seq("id"), "left_semi"))
+    afterStage("deliver")
   }
 }
 

@@ -7,11 +7,12 @@ import org.apache.spark.sql.functions._
   * detection (etl/main.py:357-385: each iteration runs all pipelines back
   * to back before sleeping) — this is that [[CdcTick]] composed across the
   * three maintained stores this engine serves queries from: the dirty ids'
-  * full documents → doc store ([[IncrementalDocPipeline.upsertDocs]]),
+  * full documents → doc store ([[IncrementalDocPipeline.stageDocs]]),
   * their latest text's postings → postings store
   * ([[IncrementalPostings.upsert]]), their latest embeddings cell-wise →
   * vector store ([[IncrementalVectors.upsert]]), then (when wired) the
-  * reference's es.bulk delivery of the committed docs, then ONE watermark.
+  * reference's es.bulk delivery of the committed docs, read back from the
+  * doc store ([[CdcTick.docsThenDeliver]]), then ONE watermark.
   * The three stores stage concurrently and commit in that order
   * ([[CdcTick.stageThenCommit]]).
   *

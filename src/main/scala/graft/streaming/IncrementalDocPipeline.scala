@@ -1,6 +1,8 @@
 package graft.streaming
 
+import graft.sinks.{AtomicSwap, IngestDefaults}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** The reference's ETL tick (etl/main.py:357-385) rebuilt correctly, as a
   * one-store [[CdcTick]]: the dirty ids' FULL documents (not just the
@@ -27,10 +29,7 @@ class IncrementalDocPipeline(
 
 object IncrementalDocPipeline {
 
-  /** Named no-op delivery sentinel — reference identity tells
-    * [[CdcTick.docsThenDeliver]] whether a real deliverer is wired
-    * (persist + deliver) or not (single consumer: skip both).
-    */
+  /** The default deliverer: nothing is wired, nothing is sent. */
   val NoDeliver: (SparkSession, DataFrame) => Unit = (_, _) => ()
 
   /** Idempotent by-id upsert: replace existing versions of the incoming ids,
@@ -38,76 +37,32 @@ object IncrementalDocPipeline {
     * overwrite; the read-filter-rewrite here is the same semantics for a
     * plain-parquet store. Shared by the per-store pipeline above and the
     * composed tick ([[ComposedEtlPipeline]]), so both commit through one
-    * code path.
-    *
-    * Crash safety: the swap is write-staging → rename-live-aside →
-    * rename-staging-in → drop-old. A crash can leave `store.old` and/or
-    * `store.staging` behind, but never a missing-or-half-written live store
-    * except in the instant between the two renames — and THAT state is
-    * recovered on the next call (staging is complete by construction when the
-    * live dir is absent, so it is promoted before reading). The previous
-    * delete-then-rename left a window where a crash lost the whole store and
-    * the next tick silently rebuilt it from the dirty docs alone.
+    * code path: [[graft.sinks.AtomicSwap.stageUpsertByKey]], whose staged
+    * swap recovers a crash between its two renames before reading.
     */
   def upsertDocs(spark: SparkSession, storePath: String, docs: DataFrame,
-                 stampTimestamps: Boolean = false,
-                 retainCommitted: Boolean = false): DataFrame = {
-    val (committed, staged) =
-      stageDocs(spark, storePath, docs, stampTimestamps, retainCommitted)
-    staged.commit()
-    committed
-  }
+                 stampTimestamps: Boolean = false): Unit =
+    stageDocs(spark, storePath, docs, stampTimestamps).commit()
 
-  /** [[upsertDocs]]'s Spark half: the merge written to staging, and the
-    * frame its commit will install.
-    */
+  /** [[upsertDocs]]'s Spark half: the merge written to staging. */
   def stageDocs(spark: SparkSession, storePath: String, docs: DataFrame,
-                stampTimestamps: Boolean = false, retainCommitted: Boolean = false)
-      : (DataFrame, graft.sinks.AtomicSwap.Staged) = {
-    // recover from a crash between AtomicSwap's two renames: staging was
-    // complete and the live dir is gone — promote it instead of treating
-    // this as first-run
-    graft.sinks.AtomicSwap.recover(spark, storePath)
-    val live = new org.apache.hadoop.fs.Path(storePath)
-    val existing = if (graft.sinks.AtomicSwap.fs(spark, storePath).exists(live))
-      Some(graft.Tables.parquetCached(spark, storePath)) else None
+                stampTimestamps: Boolean = false): AtomicSwap.Staged = {
     // F16 (models.py:9-17): auto_now_add/auto_now stamped at the sink — the
     // created-preserving join keys on the same id the merge shuffles on
     val stamped =
       if (!stampTimestamps) docs
-      else existing match {
-        case Some(ex) => graft.sinks.IngestDefaults.stampUpsert(docs, ex)
-        case None     => graft.sinks.IngestDefaults.stampInsert(docs)
+      else {
+        AtomicSwap.recover(spark, storePath)
+        if (AtomicSwap.fs(spark, storePath).exists(new org.apache.hadoop.fs.Path(storePath)))
+          IngestDefaults.stampUpsert(docs, graft.Tables.parquetCached(spark, storePath))
+        else IngestDefaults.stampInsert(docs)
       }
-    // incoming appears TWICE in the merge (anti-join key side + union), so
-    // it caches for the write — but ONLY when this call introduced the
-    // plan. With stampTimestamps=false `stamped` IS the caller's `docs`:
-    // cache() would alias the caller's persist and the unpersist below
-    // would evict it BEFORE the caller's delivery stage reads it, silently
-    // reintroducing the version-skew hazard the tick's persist exists to
-    // prevent (r15 review).
-    val callerCached =
-      stamped.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    // the merge reads incoming TWICE (anti-join keys + union), so it caches
+    // for the write — unless the caller already persisted it: cache() would
+    // alias that persist and the unpersist below would evict it
+    val callerCached = stamped.storageLevel != StorageLevel.NONE
     val incoming = if (callerCached) stamped else stamped.cache()
-    val merged = existing match {
-      case Some(ex) =>
-        ex.join(incoming.select("id"), Seq("id"), "left_anti")
-          .unionByName(incoming)
-      case None => incoming
-    }
-    // staged write (retry/backoff, the rename swap and crash recovery live
-    // in AtomicSwap — shared with the compaction utility)
-    val staged = graft.sinks.AtomicSwap.stage(spark, merged, storePath)
-    // Return the COMMITTED frame so a delivery consumer ships the exact
-    // version the store absorbed — with stampTimestamps=true that is the
-    // STAMPED frame, not the caller's `docs` (r15 advice: delivering the
-    // unstamped frame broke the byte-identical promise). The write above
-    // materialized the cache (the union side scans every incoming
-    // partition), so with retainCommitted=true reading the returned frame
-    // after the swap serves cached blocks and never re-resolves `existing`
-    // against the already-swapped store; the caller unpersists it after
-    // delivery (only if it is not the caller's own frame).
-    if (!callerCached && !retainCommitted) incoming.unpersist()
-    (incoming, staged)
+    try AtomicSwap.stageUpsertByKey(spark, storePath, incoming, incoming.select("id"), "id")
+    finally if (!callerCached) incoming.unpersist()
   }
 }

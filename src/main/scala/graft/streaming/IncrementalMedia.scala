@@ -26,7 +26,7 @@ object IncrementalMedia {
   /** Merge freshly-encoded dirty payloads into the store at `storePath`. */
   def upsert(spark: SparkSession, storePath: String, fresh: DataFrame): Unit =
     graft.sinks.AtomicSwap.upsertByKey(spark, storePath, fresh,
-      fresh.select(col("doc_id")).distinct(), "doc_id")
+      fresh.select(col("doc_id")), "doc_id")
 
   /** The maintained store for the decode faces (schema-cached read). */
   def load(spark: SparkSession, storePath: String): DataFrame = {

@@ -254,4 +254,35 @@ class IncrementalPipelineSpec extends SparkSpecBase {
     assert(delivered.sortBy(_._1) === stored.sortBy(_._1),
       "the delivered frame must match the store-committed version exactly")
   }
+
+  test("each tick delivers exactly its dirty ids' rows, equal to the stored rows") {
+    // the ES stubs key docs by _id, so a delivery of the whole store would
+    // look the same there: pin the delivered rows themselves
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    writeSource(Seq((1L, "a", "2024-01-01 10:00:00"),
+      (2L, "b", "2024-01-01 10:00:00")), SaveMode.Overwrite)
+    def rows(df: DataFrame): Seq[(Long, String, java.sql.Timestamp)] =
+      df.select("id", "doc", "modified").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getTimestamp(2))).toSeq.sortBy(_._1)
+    var delivered = Seq.empty[Seq[(Long, String, java.sql.Timestamp)]]
+    val p = new IncrementalDocPipeline(
+      docBuilder = (s: SparkSession, ids: DataFrame) =>
+        s.read.parquet(srcPath).join(ids, Seq("id"), "left_semi")
+          .groupBy("id").agg(max(struct(col("modified"), col("val"))).as("v"))
+          .select(col("id"), upper(col("v.val")).as("doc"), col("v.modified")),
+      changes = (s: SparkSession) => s.read.parquet(srcPath).select("id", "modified"),
+      storePath = s"$base/store",
+      statePath = s"$base/state",
+      deliver = (_, df) => delivered :+= rows(df))
+    assert(p.tick(spark) === 2L)
+    assert(delivered === Seq(rows(spark.read.parquet(s"$base/store"))))
+    writeSource(Seq((2L, "b2", "2024-01-01 11:00:00")), SaveMode.Append)
+    assert(p.tick(spark) === 1L)
+    val stored = rows(spark.read.parquet(s"$base/store"))
+    assert(delivered.size === 2)
+    assert(delivered(1) === stored.filter(_._1 == 2L),
+      "the second tick must deliver only id 2, as the store holds it")
+    assert(delivered(1).map(_._2) === Seq("B2"))
+  }
 }
