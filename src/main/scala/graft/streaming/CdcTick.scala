@@ -15,12 +15,16 @@ import scala.util.{Failure, Try}
   *
   *   1. detect: `changes` filtered strictly past the watermark (the
   *      reference's T3 predicate with its equal-timestamp starvation quirk
-  *      fixed), persisted ONCE — every sink and the 1-row
-  *      (count, max(modified), distinct keys) aggregate read the same
-  *      materialization, so a live feed cannot show different rows to
-  *      different consumers (a row with modified <= new_wm appearing between
-  *      two reads would otherwise never be merged yet be permanently
-  *      filtered by the committed watermark: silent loss);
+  *      fixed) and reduced to ONE persisted per-key aggregate, the latest
+  *      row of each key ([[CdcTick.Batch]]). The filtered rows themselves
+  *      are not persisted: the emptiness check, the new watermark (the max
+  *      of the per-key max `modified`), the returned key count (the
+  *      aggregate's keys) and every sink read that one cached relation, so
+  *      a live feed cannot show different rows to different consumers (a
+  *      row with modified <= new_wm appearing between two reads would
+  *      otherwise never be merged yet be permanently filtered by the
+  *      committed watermark: silent loss). The 1-row summary is the action
+  *      that materializes the cache, so the stages start from it built;
   *   2. absorb: [[sinks]] hands every store the batch. Each store write
   *      splits into a STAGE — all its Spark work: the build, the keyed
   *      merge, the write into staging — and a COMMIT — only the
@@ -103,21 +107,17 @@ abstract class CdcTick(changes: SparkSession => DataFrame, key: String,
     */
   def tick(spark: SparkSession): Long = {
     val wm = currentWatermark(spark)
-    val dirty = changes(spark).filter(col("modified") > lit(wm)).persist()
+    val batch = new Batch(changes(spark).filter(col("modified") > lit(wm)), key)
     try {
-      val head = dirty.agg(
-        count(lit(1)).as("n_changes"),
-        max("modified").as("new_wm"),
-        countDistinct(key).as("n_ids")).head
+      val head = batch.summary
       if (head.getLong(0) == 0L) 0L
       else {
-        val batch = new Batch(dirty, key)
-        try sinks(spark, batch) finally batch.latest.unpersist()
+        sinks(spark, batch)
         import spark.implicits._
         AtomicSwap.replace(spark, Seq(head.getTimestamp(1)).toDF("wm"), statePath)
         head.getLong(2)
       }
-    } finally dirty.unpersist()
+    } finally batch.release()
   }
 
   /** Run ticks until caught up (the poll loop of batch jobs and tests). */
@@ -191,21 +191,24 @@ abstract class CdcTick(changes: SparkSession => DataFrame, key: String,
     * Delivery reads the docs back: the doc store semi-joined on the batch's
     * ids is, by construction, exactly what the store committed (stamped
     * columns included), so no rebuilt frame has to outlive the stage that
-    * wrote it. A wired deliverer pays one doc-store scan; the default
-    * [[IncrementalDocPipeline.NoDeliver]] runs no action on it. One edge:
+    * wrote it. The frame is handed over unbuilt, as `() => DataFrame`: a
+    * wired deliverer builds it and pays one doc-store scan; the default
+    * [[IncrementalDocPipeline.NoDeliver]] never builds it, so a tick
+    * without delivery pays neither the store listing nor the analysis of
+    * the semi-join. One edge:
     * a dirty id whose builder yields no doc keeps its stored doc, and that
     * unchanged doc is delivered again — idempotent by `_id`.
     */
   protected final def docsThenDeliver(
       spark: SparkSession, batch: Batch,
       docBuilder: (SparkSession, DataFrame) => DataFrame, storePath: String,
-      stampTimestamps: Boolean, deliver: (SparkSession, DataFrame) => Unit)
+      stampTimestamps: Boolean, deliver: (SparkSession, () => DataFrame) => Unit)
       (later: (String, () => AtomicSwap.Staged)*): Unit = {
     val docStage = () => IncrementalDocPipeline.stageDocs(
       spark, storePath, docBuilder(spark, batch.ids), stampTimestamps)
     stageThenCommit(spark, ("docs" -> docStage) +: later)
     // throws ⇒ watermark stays put
-    deliver(spark, graft.Tables.parquetCached(spark, storePath)
+    deliver(spark, () => graft.Tables.parquetCached(spark, storePath)
       .join(batch.ids, Seq("id"), "left_semi"))
     afterStage("deliver")
   }
@@ -222,30 +225,44 @@ object CdcTick {
   /** Bound on [[CdcTick.runUntilCaughtUp]]'s ticks. */
   private val MaxTicks = 100
 
-  /** One detected, non-empty batch: the views sinks read of the persisted
-    * dirty rows.
+  /** One detected batch: the views sinks read of its ONE persisted
+    * aggregate.
     */
   final class Batch private[streaming] (dirty: DataFrame, key: String) {
 
-    /** The LATEST row per key: max by the (modified, payload…) struct, so a
-      * key changed twice in one batch lands as its last row and
-      * equal-timestamp ties stay deterministic — the strictly-greater analog
-      * of the reference's last-row-wins bulk ordering. Planned and persisted
-      * once, with the batch — before a multi-store tick's stages fork — so
-      * every store reads the one materialization.
+    private val payload = dirty.columns.filterNot(c => c == key || c == "modified").toSeq
+
+    /** Per key, the max of the (modified, payload…) struct: the latest row
+      * of a key changed twice in one batch, with equal-timestamp ties kept
+      * deterministic — the strictly-greater analog of the reference's
+      * last-row-wins bulk ordering. The only persisted relation of a tick;
+      * `dirty` is read once, to build it.
       */
-    val latest: DataFrame = {
-      val payload = dirty.columns.filterNot(c => c == key || c == "modified").toSeq
-      dirty.groupBy(col(key))
-        .agg(max(struct((col("modified") +: payload.map(col)): _*)).as("m"))
-        .select(col(key) +: payload.map(c => col("m").getField(c).as(c)): _*)
-        .persist()
-    }
+    private val byKey: DataFrame = dirty.groupBy(col(key))
+      .agg(max(struct((col("modified") +: payload.map(col)): _*)).as("m"))
+      .persist()
+
+    /** (rows of [[byKey]], max `modified`, non-null keys) in one job over
+      * the cache — the action that materializes it. Row count 0 is an empty
+      * batch; the max is the watermark to commit; the key count is what the
+      * tick returns, null keys excluded.
+      */
+    private[streaming] def summary: org.apache.spark.sql.Row =
+      byKey.agg(count(lit(1)), max(col("m").getField("modified")), count(col(key))).head
+
+    /** The LATEST row per key, projected from the cached aggregate — built
+      * before a multi-store tick's stages fork, so every store reads the one
+      * materialization.
+      */
+    val latest: DataFrame =
+      byKey.select(col(key) +: payload.map(c => col("m").getField(c).as(c)): _*)
 
     /** The distinct dirty keys, named `key` — [[latest]]'s keys, so a
       * DataFrame end to end (a million-key backfill is a semi-join shuffle,
       * never a driver collect) read from the same cache as every other sink.
       */
     def ids: DataFrame = latest.select(col(key))
+
+    private[streaming] def release(): Unit = { byKey.unpersist(); () }
   }
 }

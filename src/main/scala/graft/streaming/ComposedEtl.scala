@@ -21,11 +21,16 @@ import org.apache.spark.sql.functions._
   * and rewrites only the affected cells (≤ nlist, at most the whole store
   * when a batch touches every cell); but the doc and postings merges read
   * and rewrite their WHOLE store every tick (anti-join + union + swap), so
-  * they are O(store). On the perfbench `etl` workload (2,000 ids, ~35 dirty
-  * per tick) a tick writes ~1.1 MB against ~0.82 MB of corpus, about 25×
-  * the changed payload (`sinks.rewrite_amp`). A table format's MERGE, or a
-  * key-bucketed layout that rewrites only the dirty keys' buckets, is what
-  * would make those two merges O(dirty).
+  * they are O(store). Every store write is rebalanced, so it is sized by
+  * its bytes: at this scale one file for the doc store, one for the
+  * postings store and one per affected cell, where it was one per writing
+  * task (the stores held 70 files after a perfbench run, now 10); the
+  * price is one shuffle of each merged store per tick. On the perfbench
+  * `etl` workload (2,000 ids, ~30 dirty per tick, 4 cores) a tick writes
+  * ~1.1 MB against ~0.82 MB of corpus, about 30× the changed payload
+  * (`sinks.rewrite_amp`). A table format's MERGE, or a key-bucketed layout
+  * that rewrites only the dirty keys' buckets, is what would make those
+  * two merges O(dirty).
   */
 class ComposedEtlPipeline(
     changes: SparkSession => DataFrame, // (id, text, label, v, modified)
@@ -35,7 +40,7 @@ class ComposedEtlPipeline(
     postingsStorePath: String,
     vectorStorePath: String,
     statePath: String,
-    deliver: (SparkSession, DataFrame) => Unit = IncrementalDocPipeline.NoDeliver)
+    deliver: (SparkSession, () => DataFrame) => Unit = IncrementalDocPipeline.NoDeliver)
     extends CdcTick(changes, "id", statePath) {
 
   protected def sinks(spark: SparkSession, batch: CdcTick.Batch): Unit = {

@@ -19,8 +19,9 @@ class IncrementalDocPipeline(
     statePath: String,
     stampTimestamps: Boolean = false, // F16: created/modified sink columns
     // the reference's es.bulk delivery boundary, after the store upsert and
-    // before the watermark commit (see HttpSinkSpec/IncrementalPipelineSpec)
-    deliver: (SparkSession, DataFrame) => Unit = IncrementalDocPipeline.NoDeliver)
+    // before the watermark commit, handed the committed docs unbuilt (see
+    // CdcTick.docsThenDeliver, HttpSinkSpec, IncrementalPipelineSpec)
+    deliver: (SparkSession, () => DataFrame) => Unit = IncrementalDocPipeline.NoDeliver)
     extends CdcTick(changes, "id", statePath) {
 
   protected def sinks(spark: SparkSession, batch: CdcTick.Batch): Unit =
@@ -29,8 +30,10 @@ class IncrementalDocPipeline(
 
 object IncrementalDocPipeline {
 
-  /** The default deliverer: nothing is wired, nothing is sent. */
-  val NoDeliver: (SparkSession, DataFrame) => Unit = (_, _) => ()
+  /** The default deliverer: nothing is wired, nothing is sent, and the
+    * read-back frame it is handed is never built.
+    */
+  val NoDeliver: (SparkSession, () => DataFrame) => Unit = (_, _) => ()
 
   /** Idempotent by-id upsert: replace existing versions of the incoming ids,
     * keep everything else. At warehouse scale this is a MERGE / partition

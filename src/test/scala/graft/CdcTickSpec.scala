@@ -143,6 +143,22 @@ class CdcTickSpec extends SparkSpecBase {
       assert(p.tick(spark) === 0L)
     }
 
+    test(s"${k.name}: a batch repeating keys returns its distinct keys and commits its max modified") {
+      val dir = tmp(s"${k.name}-repeat")
+      val feed = new Feed
+      val p = k.make(feed, dir)
+      assert(p.tick(spark) === 2L)
+      // four rows of two keys; id 1's later duplicate carries the batch's max
+      feed.rows ++= Seq(
+        (1L, "delta", 0, Seq(-0.9, 0.1), ts("2024-01-01 00:00:05")),
+        (3L, "epsilon", 2, Seq(0.0, -0.8), ts("2024-01-01 00:00:06")),
+        (3L, "eta", 2, Seq(0.0, -0.7), ts("2024-01-01 00:00:07")),
+        (1L, "zeta", 0, Seq(-0.8, 0.2), ts("2024-01-01 00:00:09")))
+      assert(p.tick(spark) === 2L)
+      assert(p.currentWatermark(spark) === ts("2024-01-01 00:00:09"))
+      assert(p.tick(spark) === 0L)
+    }
+
     test(s"${k.name}: a crash between the state renames (live gone, staging complete) converges") {
       val dir = tmp(s"${k.name}-swap")
       val feed = new Feed

@@ -159,7 +159,7 @@ class HttpSinkSpec extends SparkSpecBase {
       changes = (s: SparkSession) => s.read.parquet(srcPath).select("id", "modified"),
       storePath = s"$base/store", statePath = s"$base/state",
       deliver = (_, docs) =>
-        BulkHttpSink.post(docs, es.url, "docs", "id", maxRetries = 1))
+        BulkHttpSink.post(docs(), es.url, "docs", "id", maxRetries = 1))
     try {
       // tick 1: both docs deliver, watermark commits
       assert(p.tick(spark) === 2L)

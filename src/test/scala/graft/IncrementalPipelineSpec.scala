@@ -241,8 +241,8 @@ class IncrementalPipelineSpec extends SparkSpecBase {
       statePath = s"$base/state",
       stampTimestamps = true,
       deliver = (_, df) => {
-        deliveredCols = df.columns.toSet
-        delivered = df.select("id", "created", "modified").collect()
+        deliveredCols = df().columns.toSet
+        delivered = df().select("id", "created", "modified").collect()
           .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2))).toSeq
       })
     assert(p.tick(spark) === 2L)
@@ -274,7 +274,7 @@ class IncrementalPipelineSpec extends SparkSpecBase {
       changes = (s: SparkSession) => s.read.parquet(srcPath).select("id", "modified"),
       storePath = s"$base/store",
       statePath = s"$base/state",
-      deliver = (_, df) => delivered :+= rows(df))
+      deliver = (_, df) => delivered :+= rows(df()))
     assert(p.tick(spark) === 2L)
     assert(delivered === Seq(rows(spark.read.parquet(s"$base/store"))))
     writeSource(Seq((2L, "b2", "2024-01-01 11:00:00")), SaveMode.Append)
