@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** The registry of derived stores: every served artifact (postings, models,
   * dictionaries, media tables, ...) that is built once per source version
@@ -19,6 +19,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * builds only if nothing lives at the path. A builder may resolve the
   * stores it depends on inline: it holds only its own path's lock, and the
   * store dependency graph has no cycles.
+  *
+  * Held relations: a derived relation small enough to broadcast can instead
+  * be held on the driver as a `LocalRelation` ([[held]]), under the same
+  * key. A query over it plans no scan, and Catalyst folds a filter, project
+  * or limit over it into another local relation, which collects with no
+  * Spark job at all.
   */
 object DerivedStore {
 
@@ -78,4 +84,55 @@ object DerivedStore {
              (df: => DataFrame): DataFrame =
     Tables.parquetCached(spark,
       ensure(spark, kind, dir, source)(graft.sinks.AtomicSwap.replace(spark, df, _)))
+
+  /** A relation held on the driver: its rows in build order and the same
+    * rows as a `LocalRelation` of the session that built it.
+    */
+  final class Held private[DerivedStore] (private[DerivedStore] val key: String,
+                                          val df: DataFrame, val rows: IndexedSeq[Row]) {
+    /** The rows as a broadcast variable, for lookups inside a plan's tasks:
+      * made once per held version on first use (no Spark job), and freed by
+      * Spark's cleaner once the version is dropped and unreachable.
+      */
+    lazy val broadcastRows: org.apache.spark.broadcast.Broadcast[IndexedSeq[Row]] =
+      df.sparkSession.sparkContext.broadcast(rows)
+  }
+
+  /** The held relation per (kind, source dir): only its current version. */
+  private val heldByDir = new java.util.concurrent.ConcurrentHashMap[(String, String), Held]()
+
+  /** `df` collected once per content version of `$dir/$source` and held on
+    * the driver, keyed like a store (kind, dir, source version); resolving a
+    * new version drops the older one of the same kind and dir. Held only
+    * while the source's listed bytes are below
+    * `spark.sql.autoBroadcastJoinThreshold`, the size Spark itself would
+    * ship to every task; above it (or with the threshold at -1) this is
+    * `None` and the caller keeps its parquet plan. Nothing is written.
+    */
+  def held(spark: SparkSession, kind: String, dir: String, source: String)
+          (df: => DataFrame): Option[Held] = {
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val bytes = Tables.listedBytes(spark, s"$dir/$source")
+    if (bytes < 0 || bytes >= limit) None
+    else {
+      val key = path(spark, kind, dir, source)
+      def current: Option[Held] = Option(heldByDir.get((kind, dir)))
+        .filter(h => h.key == key && (h.df.sparkSession eq spark))
+      current.orElse(Some(locks.computeIfAbsent(key, _ => new Object).synchronized {
+        current.getOrElse {
+          val d = df
+          val rows = d.collect()
+          val h = new Held(key,
+            spark.createDataFrame(java.util.Arrays.asList(rows: _*), d.schema),
+            rows.toIndexedSeq)
+          heldByDir.put((kind, dir), h)
+          h
+        }
+      }))
+    }
+  }
+
+  /** The version keys held for (kind, dir): at most one. */
+  private[graft] def heldVersions(kind: String, dir: String): Seq[String] =
+    Option(heldByDir.get((kind, dir))).map(_.key).toSeq
 }

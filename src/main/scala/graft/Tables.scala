@@ -143,7 +143,7 @@ object Tables {
   /** Total listed bytes of a parquet file/dir (driver-side, one listing —
     * same cost class as [[contentVersion]]); −1 when absent.
     */
-  private def listedBytes(spark: SparkSession, path: String): Long = {
+  private[graft] def listedBytes(spark: SparkSession, path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try fs.listStatus(p).map(_.getLen).sum

@@ -134,20 +134,39 @@ object SearchOps {
     * unique on (token, doc_id), so `count(1)` over the IN-filtered
     * probe is the same integer. Plan: the term IN-list pushes into the
     * store's parquet scan (pinned in SearchSpec), one doc-keyed partial
-    * aggregate over the few matching postings rows, `lang` joined for
-    * only the matched ids, partial top-k. At 100 TB the probe reads the
-    * query terms' postings, not the corpus.
+    * aggregate over the few matching postings rows, partial top-k. At
+    * 100 TB the probe reads the query terms' postings, not the corpus.
+    *
+    * `lang`: with the [[keywordColumns]] held, the top-k is cut FIRST and
+    * the ≤ k rows it keeps take their lang from the held columns, no join:
+    * 2 jobs (3 with the join). The inner join dropped nothing, since every
+    * posting's doc_id is a row of the same documents version.
     */
   def matchQueryIndexed(spark: SparkSession, dir: String,
                         q: String = "data stream window",
                         k: Int = 20): DataFrame = {
     val hits = presenceHits(spark, dir, analyzeQuery(q).distinct)
-    hits.join(Tables.documents(spark, dir).select(col("doc_id"), col("lang")),
-        Seq("doc_id"))
-      .select(col("doc_id"), col("lang"), col("hits").as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
+      .select(col("doc_id"), col("hits").as("score"))
+    topWithLang(spark, dir, hits, k)(
+      hits.join(Tables.documents(spark, dir).select(col("doc_id"), col("lang")),
+          Seq("doc_id"))
+        .select(col("doc_id"), col("lang"), col("score"))
+        .orderBy(col("score").desc, col("doc_id").asc)
+        .limit(k))
   }
+
+  /** The top-k of `(doc_id, score)` hits by (score desc, doc_id asc) as
+    * `(doc_id, lang, score)`, lang taken from the held [[keywordColumns]]
+    * in the top-k's own projection; `joined`, the face's join plan, when
+    * the columns are not held.
+    */
+  private def topWithLang(spark: SparkSession, dir: String, hits: DataFrame, k: Int)
+                         (joined: => DataFrame): DataFrame =
+    keywordColumns(spark, dir).map(kw =>
+      hits.orderBy(col("score").desc, col("doc_id").asc)
+        .select(col("doc_id"), langOf(kw).as("lang"), col("score"))
+        .limit(k))
+      .getOrElse(joined)
 
   /** One IN-pushed probe of the postings store aggregated to the
     * per-doc DISTINCT-TERM presence count — the shared leg beneath
@@ -967,19 +986,32 @@ object SearchOps {
     }
     val tokens = candRows.map(_._3).distinct
     val candDf = candRows.toDF("term", "field", "token", "boost")
+    // the candidate table is a local relation, but broadcasting it still
+    // starts one job (its rows are collected through an RDD)
     val scored = posts.filter(col("token").isInCollection(tokens))
-      .join(broadcast(candDf), Seq("field", "token")) // local relation: no build job
+      .join(broadcast(candDf), Seq("field", "token"))
       .groupBy(col("doc_id"), col("term"))
       .agg(max(col("boost")).as("w")) // ES best_fields: max boost among hits
       .groupBy(col("doc_id"))
       .agg(sum(col("w")).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    Tables.documents(spark, dir).select(col("doc_id"), col("lang"))
-      .join(broadcast(scored), Seq("doc_id"))
-      .select(col("doc_id"), col("lang"), col("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
+    cutThenLang(spark, dir, scored, k)
   }
+
+  /** [[topWithLang]] for the fuzzy faces: 4 jobs with the keyword columns
+    * held. Unheld, the ≤ k hits are broadcast against documents and the
+    * join ends in a bounded top-k (5 jobs): a plain sort there costs a
+    * range-sampling job and a shuffle (7).
+    */
+  private def cutThenLang(spark: SparkSession, dir: String, scored: DataFrame,
+                          k: Int): DataFrame =
+    topWithLang(spark, dir, scored, k) {
+      val top = scored.orderBy(col("score").desc, col("doc_id").asc).limit(k)
+      Tables.documents(spark, dir).select(col("doc_id"), col("lang"))
+        .join(broadcast(top), Seq("doc_id"))
+        .select(col("doc_id"), col("lang"), col("score"))
+        .orderBy(col("score").desc, col("doc_id").asc)
+        .limit(k)
+    }
 
   /** Served field-tagged postings behind [[multiFieldFuzzyIndexed]]. The
     * title field is analyzed from the SAME 48-char slice as the scan face
@@ -1119,11 +1151,52 @@ object SearchOps {
         size(col("orders")).cast("long").as("n_orders"))
   }
 
-  /** ES `term` exact-keyword lookup (ETLTests-2.json:192-228). */
+  /** ES `term` exact-keyword lookup (ETLTests-2.json:192-228). Over the
+    * held [[keywordColumns]] Catalyst folds the filter into a local
+    * relation, so a lookup starts no Spark job (1 from parquet).
+    */
   def termLookup(spark: SparkSession, dir: String, id: Long = 42L): DataFrame =
-    Tables.documents(spark, dir)
+    keywordColumns(spark, dir).map(_.df)
+      .getOrElse(Tables.documents(spark, dir))
       .filter(col("doc_id") === id)
       .select(col("doc_id"), col("lang"), col("n_chars"))
+
+  /** The documents' keyword columns `(doc_id, lang, n_chars)`, sorted by
+    * doc_id and held on the driver per documents version
+    * ([[DerivedStore.held]]) while documents.parquet lists fewer bytes than
+    * `spark.sql.autoBroadcastJoinThreshold` (10 MB by default; the sf0.1
+    * table is 0.6 MB). Above it every face keeps its parquet plan.
+    */
+  private def keywordColumns(spark: SparkSession, dir: String): Option[DerivedStore.Held] =
+    DerivedStore.held(spark, "keywords", dir, "documents.parquet")(
+      Tables.documents(spark, dir).select(col("doc_id"), col("lang"), col("n_chars"))
+        .coalesce(1).sortWithinPartitions(col("doc_id")))
+
+  /** Corpus size N, held per documents version like the keyword columns
+    * (kept apart from them: the ranking faces need no column but doc_id);
+    * a count job when the documents are above the threshold.
+    */
+  private def docCount(spark: SparkSession, dir: String): Long = {
+    def n = Tables.documents(spark, dir).agg(count(lit(1)))
+    DerivedStore.held(spark, "doccount", dir, "documents.parquet")(n)
+      .map(_.rows.head.getLong(0)).getOrElse(n.head.getLong(0))
+  }
+
+  /** `lang` of a doc_id column, looked up in the held keyword columns by a
+    * binary search on doc_id (null for an id the held version lacks). Put
+    * in the projection of a top-k, it runs on the ≤ k rows the cut keeps.
+    */
+  private def langOf(kw: DerivedStore.Held): Column = {
+    val rows = kw.broadcastRows
+    val lookup = udf((id: Long) => {
+      val rs = rows.value
+      rs.view.map(_.getLong(0)).search(id) match {
+        case scala.collection.Searching.Found(i) => rs(i).getString(1)
+        case _ => null
+      }
+    })
+    lookup(col("doc_id"))
+  }
 
   /** ES `terms` aggregation (ETLTests-2.json:291-326): top-100 analyzed
     * tokens by frequency, deterministic tie-break on token.
@@ -1136,13 +1209,21 @@ object SearchOps {
     * to exploding the analyzer output (the store is BUILT from the same
     * `analyze` law), so the DuckDB oracle is unchanged. The aggregate is
     * dictionary-keyed (vocabulary-sized, ~√corpus), then TakeOrdered k.
+    *
+    * Below the broadcast threshold the per-token totals are held on the
+    * driver per documents version, already in (n desc, token asc) order,
+    * and a query is a limit over that local relation: no Spark job (2 for
+    * the aggregate over the store).
     */
-  def termsAgg(spark: SparkSession, dir: String, k: Int = 100): DataFrame =
-    servedPostings(spark, dir)
+  def termsAgg(spark: SparkSession, dir: String, k: Int = 100): DataFrame = {
+    def totals = servedPostings(spark, dir)
       .groupBy("token")
       .agg(sum(col("tf")).as("n"))
-      .orderBy(col("n").desc, col("token").asc)
-      .limit(k)
+    DerivedStore.held(spark, "tokentotals", dir, "documents.parquet")(
+      totals.coalesce(1).sortWithinPartitions(col("n").desc, col("token").asc))
+      .map(_.df.limit(k))
+      .getOrElse(totals.orderBy(col("n").desc, col("token").asc).limit(k))
+  }
 
   /** ES `terms_set` query — match documents containing at least
     * `minimum_should_match` of the given terms (the "m-of-n" query bool
@@ -1309,20 +1390,18 @@ object SearchOps {
     * Scale shape: the IN-list prunes postings before anything groups (token-
     * bucketed index ⇒ k-bucket read); df/idf is a ≤|terms|-row aggregate
     * broadcast back; one hash-agg by doc_id; TakeOrderedAndProject for the
-    * top-k. N rides along as a 1-row broadcast, not a driver scalar.
+    * top-k. N is a number in the plan ([[docCount]], held per documents
+    * version), not a count job plus a broadcast.
     */
   def rankedSearch(spark: SparkSession, dir: String,
                    q: String = "data stream window", k: Int = 20): DataFrame =
-    rankedPostingsSearch(
-      servedPostings(spark, dir),
-      Tables.documents(spark, dir)
-        .agg(count(lit(1)).cast("double").as("n_docs")),
-      q, k)
+    rankedPostingsSearch(servedPostings(spark, dir), docCount(spark, dir).toDouble, q, k)
 
-  /** Ranking over an existing postings relation (token, doc_id, tf) and a
-    * 1-row `n_docs` frame — the materialized-index face of [[rankedSearch]].
+  /** Ranking over an existing postings relation (token, doc_id, tf) of a
+    * corpus of `nDocs` documents — the materialized-index face of
+    * [[rankedSearch]].
     */
-  def rankedPostingsSearch(postings: DataFrame, nDocs: DataFrame,
+  def rankedPostingsSearch(postings: DataFrame, nDocs: Double,
                            q: String, k: Int = 20): DataFrame =
     rankedScores(postings, nDocs, q)
       .orderBy(col("score").desc, col("doc_id").asc)
@@ -1331,15 +1410,14 @@ object SearchOps {
   /** The unlimited (doc_id, score) relation behind [[rankedPostingsSearch]]
     * — the seam [[searchAfter]] pages over.
     */
-  private def rankedScores(postings: DataFrame, nDocs: DataFrame,
+  private def rankedScores(postings: DataFrame, nDocs: Double,
                            q: String): DataFrame = {
     val terms = analyzeQuery(q).distinct.sorted // FIXED fold order, oracle-shared
     require(terms.nonEmpty, s"query '$q' analyzed to no terms")
     val matched = postings.filter(col("token").isInCollection(terms))
     val idfs = matched.groupBy("token")
       .agg(count(lit(1)).as("df")) // postings unique on (token, doc_id) ⇒ count = df
-      .crossJoin(broadcast(nDocs))
-      .select(col("token"), log(col("n_docs") / col("df").cast("double")).as("idf"))
+      .select(col("token"), log(lit(nDocs) / col("df").cast("double")).as("idf"))
     val partials = terms.zipWithIndex.map { case (t, i) =>
       sum(when(col("token") === t, col("tf").cast("double") * col("idf"))).as(s"_s$i")
     }
@@ -1357,34 +1435,25 @@ object SearchOps {
     * page; search_after is the documented deep-paging contract): the
     * client passes the sort tuple of the LAST hit of the previous page and
     * the engine returns hits strictly AFTER it in (score DESC, doc_id ASC)
-    * order. Same device as the relational keyset face
-    * [[graft.ops.RelationalOps.pageSeek]], lifted to the scored tier.
+    * order.
     *
-    * The cursor is derived IN-PLAN (the last tuple of page 1 via a
-    * `limit(afterRank)` + 1-row aggregate — min score, largest doc_id on
-    * the tie), rides a 1-row broadcast, and the page itself is a tuple
-    * predicate + TakeOrderedAndProject — never a global row_number. At
-    * warehouse scale a real client supplies the cursor as literals and
-    * the filter prunes on a score-ordered layout; rank windows never
-    * appear at any scale.
+    * The page is the k hits after rank `afterRank`: one
+    * TakeOrderedAndProject with an offset over the (score desc, doc_id asc)
+    * order, which is total, so "after rank r" and "after the r-th hit's
+    * sort tuple" are the same rows. `afterRank = 0` is the first page.
+    * No rank window, no cursor join: 4 jobs (df shuffle, idf broadcast,
+    * score shuffle, top-k), where the in-plan cursor (limit, min-struct
+    * aggregate, broadcast, nested-loop filter) and a count job for N cost
+    * 7. At warehouse scale a real client supplies the cursor as literals
+    * and the filter prunes on a score-ordered layout.
     */
   def searchAfter(spark: SparkSession, dir: String,
                   q: String = "data stream window",
                   afterRank: Int = 5, k: Int = 10): DataFrame = {
-    val scored = rankedScores(
-      servedPostings(spark, dir),
-      Tables.documents(spark, dir).agg(count(lit(1)).cast("double").as("n_docs")),
-      q)
-    val cursor = scored
-      .orderBy(col("score").desc, col("doc_id").asc).limit(afterRank)
-      .agg(min(struct(col("score"), (-col("doc_id")).as("nid"))).as("c"))
-      .select(col("c").getField("score").as("c_score"),
-        (-col("c").getField("nid")).as("c_doc"))
-    scored.crossJoin(broadcast(cursor))
-      .filter(col("score") < col("c_score") ||
-        (col("score") === col("c_score") && col("doc_id") > col("c_doc")))
-      .select(col("doc_id"), col("score"))
+    require(afterRank >= 0, s"afterRank $afterRank < 0")
+    rankedScores(servedPostings(spark, dir), docCount(spark, dir).toDouble, q)
       .orderBy(col("score").desc, col("doc_id").asc)
+      .offset(afterRank)
       .limit(k)
   }
 
@@ -1791,7 +1860,7 @@ object SearchOps {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("term"))
       .orderBy(col("dist").asc, col("df").desc, col("suggestion").asc)
     vocab.withColumn("pfx", substring(col("token"), 1, prefixLen))
-      .join(broadcast(qdf), Seq("pfx")) // local relation: no build job
+      .join(broadcast(qdf), Seq("pfx")) // a local relation, yet its broadcast is one job
       .filter(abs(col("tok_len") - col("q_len")) <= maxEdits &&
         dist.between(1, maxEdits)) // -1 = over threshold; 0 = exact
       .select(col("term"), col("token").as("suggestion"),
@@ -2657,16 +2726,13 @@ object SearchOps {
     val verifiedPairs = terms.flatMap(t => expanded(t).map(tok => (t, tok)))
     val tokens = verifiedPairs.map(_._2).distinct.toSeq
     val verifiedDf = verifiedPairs.toSeq.toDF("term", "token")
+    // the verified pairs are a local relation, but broadcasting them still
+    // starts one job (its rows are collected through an RDD)
     val scored = postings.filter(col("token").isInCollection(tokens))
-      .join(broadcast(verifiedDf), Seq("token")) // local relation: no build job
+      .join(broadcast(verifiedDf), Seq("token"))
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("term")).cast("int").as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    Tables.documents(spark, dir).select(col("doc_id"), col("lang"))
-      .join(broadcast(scored), Seq("doc_id"))
-      .select(col("doc_id"), col("lang"), col("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
+    cutThenLang(spark, dir, scored, k)
   }
 
   /** (gram-store path, term) → verified candidate tokens. Bounded by the

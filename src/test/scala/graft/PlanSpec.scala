@@ -557,12 +557,13 @@ class PlanSpec extends SparkSpecBase {
     assert(p.contains("TakeOrderedAndProject"), s"expected partial top-k in:\n$p")
   }
 
-  test("searchAfter: keyset page — tuple-predicate filter + partial top-k, no rank window") {
-    val p = plan(SearchOps.searchAfter(spark, sf))
+  test("searchAfter: one top-k with offset — no cursor join, no rank window") {
+    val p = plan(SearchOps.searchAfter(spark, sf, afterRank = 5, k = 10))
     assert(!p.contains("Window"), s"search_after must not rank-window:\n$p")
-    assert(p.contains("TakeOrderedAndProject"), s"expected partial top-k in:\n$p")
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
-      s"expected the 1-row cursor broadcast in:\n$p")
+    assert(p.contains("TakeOrderedAndProject(limit=15, offset=5"),
+      s"expected the page as one partial top-k with offset 5 in:\n$p")
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+      s"the page must not join a cursor:\n$p")
   }
 
   test("histogramAgg: partial (map-side) combine before one bucket-keyed exchange") {

@@ -1006,6 +1006,26 @@ class SearchSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(page2.toSeq === all.drop(5).toSeq,
       "search_after(5) must equal ranked rows 6..15")
+    // more inputs, on sf0.001 and a fixture with tied scores: a page is the
+    // k hits after rank `after`, the first page at 0, none past the last hit
+    val tied = "/tmp/graft_search_after_ties"
+    Seq((5L, "alpha beta"), (3L, "alpha beta"), (9L, "alpha beta"),
+        (1L, "alpha"), (7L, "gamma"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(tied + "/documents.parquet")
+    def page(dir: String, q: String, after: Int, k: Int) = graft.ops.SearchOps
+      .searchAfter(spark, dir, q, after, k).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    def ranked(dir: String, q: String) = graft.ops.SearchOps
+      .rankedSearch(spark, dir, q, 100000).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    for ((dir, q) <- Seq(sf -> "data stream window", tied -> "alpha beta")) {
+      val hits = ranked(dir, q)
+      assert(hits.nonEmpty, s"$dir: vacuous query")
+      for ((after, k) <- Seq((0, 10), (1, 2), (hits.size - 1, 10), (hits.size, 10), (hits.size + 3, 1)))
+        assert(page(dir, q, after, k) === hits.slice(after, after + k),
+          s"$dir: search_after($after, k=$k) must be ranked rows ${after + 1}..${after + k}")
+    }
+    // score ties order by doc_id: 3, 5, 9 share one score, above doc 1
+    assert(ranked(tied, "alpha beta").map(_._1) === Seq(3L, 5L, 9L, 1L))
+    assert(page(tied, "alpha beta", 1, 2).map(_._1) === Seq(5L, 9L))
   }
 
   test("vocabCoverage: coverage_fp bounded by 2^20; all-head corpus hits exactly 2^20") {

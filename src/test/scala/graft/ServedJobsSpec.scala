@@ -1,0 +1,65 @@
+package graft
+
+import graft.ops.SearchOps
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+/** The Spark jobs a warm, repeated query of each served search face starts,
+  * construction and collect together (sf0.01; AQE on, as served). On a
+  * local host every job costs tens of milliseconds whatever its size, so
+  * these counts are the faces' latency floor: a face that gains a job here
+  * has gained a dispatch round trip per query.
+  */
+class ServedJobsSpec extends SparkSpecBase {
+  private val sf01 = "/root/testdata/sf0.01"
+
+  /** Jobs started by `body` on this thread (tagged by a local property, so a
+    * straggler from an earlier test never counts), once the listener bus
+    * has stopped delivering.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val tag = s"served-jobs-${System.nanoTime}"
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("graft.test.tag")))
+          .foreach(jobs.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    sc.setLocalProperty("graft.test.tag", tag)
+    try {
+      body
+      var prev = -1
+      var i = 0
+      while (jobs.size != prev && i < 20) { prev = jobs.size; Thread.sleep(100); i += 1 }
+      jobs.asScala.count(_ == tag)
+    } finally {
+      sc.setLocalProperty("graft.test.tag", null)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  /** (face, query, most jobs a warm repeat may start). */
+  private val faces: Seq[(String, () => DataFrame, Int)] = Seq(
+    ("term", () => SearchOps.termLookup(spark, sf01, 42L), 0),
+    ("termsagg", () => SearchOps.termsAgg(spark, sf01, 100), 0),
+    ("match", () => SearchOps.matchQueryIndexed(spark, sf01, "data stream window", 20), 2),
+    ("searchafter", () => SearchOps.searchAfter(spark, sf01, "data stream window", 5, 10), 4),
+    ("fuzzy", () => SearchOps.fuzzySearchIndexed(spark, sf01, "streem qery", 20), 4),
+    ("multifield", () => SearchOps.multiFieldFuzzyIndexed(spark, sf01,
+      "custommer streem windoe", 20), 4))
+
+  for ((face, query, most) <- faces)
+    test(s"$face: a warm repeated query starts at most $most Spark jobs") {
+      val first = query().collect().toSeq // builds stores, fills the caches
+      assert(first.nonEmpty, s"$face: vacuous query")
+      var again: Seq[org.apache.spark.sql.Row] = Nil
+      val n = jobsOf { again = query().collect().toSeq }
+      assert(again === first, s"$face: a repeat must serve the same rows")
+      info(s"$face: $n jobs")
+      assert(n <= most, s"$face: a warm repeat started $n Spark jobs, budget $most")
+    }
+}
