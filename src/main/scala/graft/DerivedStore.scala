@@ -20,11 +20,15 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * stores it depends on inline: it holds only its own path's lock, and the
   * store dependency graph has no cycles.
   *
-  * Held relations: a derived relation small enough to broadcast can instead
-  * be held on the driver as a `LocalRelation` ([[held]]), under the same
-  * key. A query over it plans no scan, and Catalyst folds a filter, project
-  * or limit over it into another local relation, which collects with no
-  * Spark job at all.
+  * Memo: a driver-side value derived once per source version (a fitted
+  * model, a collected report, a term table) is held under the same key and
+  * that path's lock ([[memo]]); resolving a new version drops the older
+  * value of the same kind and dir. A held relation ([[held]]) is a memo of
+  * a derived relation small enough to broadcast, kept as a `LocalRelation`:
+  * a query over it plans no scan, and Catalyst folds a filter, project or
+  * limit over it into another local relation, which collects with no Spark
+  * job at all. Stores, memos and held relations are one key space, so this
+  * object alone decides what a version is and when it is superseded.
   */
 object DerivedStore {
 
@@ -85,11 +89,41 @@ object DerivedStore {
     Tables.parquetCached(spark,
       ensure(spark, kind, dir, source)(graft.sinks.AtomicSwap.replace(spark, df, _)))
 
+  /** The memoized value per (kind, source dir): its version key and value. */
+  private val memos = new java.util.concurrent.ConcurrentHashMap[(String, String), (String, Any)]()
+
+  /** `compute` once per content version of `$dir/$source`, held on the
+    * driver under the store key (kind, dir, source version) and taken under
+    * that path's lock; resolving a new version drops the older value of the
+    * same kind and dir. Nothing is written, and a compute that throws
+    * memoizes nothing.
+    */
+  def memo[A](spark: SparkSession, kind: String, dir: String, source: String)
+             (compute: => A): A = memoUsable(spark, kind, dir, source)((_: A) => true)(compute)
+
+  /** [[memo]], recomputing a current value that `usable` rejects. */
+  private def memoUsable[A](spark: SparkSession, kind: String, dir: String, source: String)
+                           (usable: A => Boolean)(compute: => A): A = {
+    val key = path(spark, kind, dir, source)
+    def current: Option[A] = Option(memos.get((kind, dir)))
+      .collect { case (k, v) if k == key => v.asInstanceOf[A] }.filter(usable)
+    current.getOrElse(locks.computeIfAbsent(key, _ => new Object).synchronized {
+      current.getOrElse {
+        val v = compute
+        memos.put((kind, dir), (key, v))
+        v
+      }
+    })
+  }
+
+  /** The version keys memoized for (kind, dir): at most one. */
+  private[graft] def memoVersions(kind: String, dir: String): Seq[String] =
+    Option(memos.get((kind, dir))).map(_._1).toSeq
+
   /** A relation held on the driver: its rows in build order and the same
     * rows as a `LocalRelation` of the session that built it.
     */
-  final class Held private[DerivedStore] (private[DerivedStore] val key: String,
-                                          val df: DataFrame, val rows: IndexedSeq[Row]) {
+  final class Held private[DerivedStore] (val df: DataFrame, val rows: IndexedSeq[Row]) {
     /** The rows as a broadcast variable, for lookups inside a plan's tasks:
       * made once per held version on first use (no Spark job), and freed by
       * Spark's cleaner once the version is dropped and unreachable.
@@ -98,41 +132,22 @@ object DerivedStore {
       df.sparkSession.sparkContext.broadcast(rows)
   }
 
-  /** The held relation per (kind, source dir): only its current version. */
-  private val heldByDir = new java.util.concurrent.ConcurrentHashMap[(String, String), Held]()
-
-  /** `df` collected once per content version of `$dir/$source` and held on
-    * the driver, keyed like a store (kind, dir, source version); resolving a
-    * new version drops the older one of the same kind and dir. Held only
-    * while the source's listed bytes are below
-    * `spark.sql.autoBroadcastJoinThreshold`, the size Spark itself would
-    * ship to every task; above it (or with the threshold at -1) this is
-    * `None` and the caller keeps its parquet plan. Nothing is written.
+  /** `df` collected and [[memo]]ized on the driver, for the session that
+    * asks (another session collects again), while the source's listed bytes
+    * are below `spark.sql.autoBroadcastJoinThreshold`,
+    * the size Spark itself would ship to every task; above it (or with the
+    * threshold at -1) this is `None` and the caller keeps its parquet plan.
     */
   def held(spark: SparkSession, kind: String, dir: String, source: String)
           (df: => DataFrame): Option[Held] = {
     val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
     val bytes = Tables.listedBytes(spark, s"$dir/$source")
     if (bytes < 0 || bytes >= limit) None
-    else {
-      val key = path(spark, kind, dir, source)
-      def current: Option[Held] = Option(heldByDir.get((kind, dir)))
-        .filter(h => h.key == key && (h.df.sparkSession eq spark))
-      current.orElse(Some(locks.computeIfAbsent(key, _ => new Object).synchronized {
-        current.getOrElse {
-          val d = df
-          val rows = d.collect()
-          val h = new Held(key,
-            spark.createDataFrame(java.util.Arrays.asList(rows: _*), d.schema),
-            rows.toIndexedSeq)
-          heldByDir.put((kind, dir), h)
-          h
-        }
-      }))
-    }
+    else Some(memoUsable(spark, kind, dir, source)((h: Held) => h.df.sparkSession eq spark) {
+      val d = df
+      val rows = d.collect()
+      new Held(spark.createDataFrame(java.util.Arrays.asList(rows: _*), d.schema),
+        rows.toIndexedSeq)
+    })
   }
-
-  /** The version keys held for (kind, dir): at most one. */
-  private[graft] def heldVersions(kind: String, dir: String): Seq[String] =
-    Option(heldByDir.get((kind, dir))).map(_.key).toSeq
 }

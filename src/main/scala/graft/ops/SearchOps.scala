@@ -137,36 +137,34 @@ object SearchOps {
     * aggregate over the few matching postings rows, partial top-k. At
     * 100 TB the probe reads the query terms' postings, not the corpus.
     *
-    * `lang`: with the [[keywordColumns]] held, the top-k is cut FIRST and
-    * the ≤ k rows it keeps take their lang from the held columns, no join:
-    * 2 jobs (3 with the join). The inner join dropped nothing, since every
-    * posting's doc_id is a row of the same documents version.
+    * `lang` is attached to the top-k ([[topWithLang]]): 2 jobs with the
+    * keyword columns held, 3 without. Joining after the cut drops nothing,
+    * since every posting's doc_id is a row of the same documents version.
     */
   def matchQueryIndexed(spark: SparkSession, dir: String,
                         q: String = "data stream window",
-                        k: Int = 20): DataFrame = {
-    val hits = presenceHits(spark, dir, analyzeQuery(q).distinct)
-      .select(col("doc_id"), col("hits").as("score"))
-    topWithLang(spark, dir, hits, k)(
-      hits.join(Tables.documents(spark, dir).select(col("doc_id"), col("lang")),
-          Seq("doc_id"))
-        .select(col("doc_id"), col("lang"), col("score"))
-        .orderBy(col("score").desc, col("doc_id").asc)
-        .limit(k))
-  }
+                        k: Int = 20): DataFrame =
+    topWithLang(spark, dir, presenceHits(spark, dir, analyzeQuery(q).distinct)
+      .select(col("doc_id"), col("hits").as("score")), k)
 
   /** The top-k of `(doc_id, score)` hits by (score desc, doc_id asc) as
-    * `(doc_id, lang, score)`, lang taken from the held [[keywordColumns]]
-    * in the top-k's own projection; `joined`, the face's join plan, when
-    * the columns are not held.
+    * `(doc_id, lang, score)`. The top-k is cut FIRST: with the
+    * [[keywordColumns]] held, the ≤ k rows it keeps take their lang from
+    * them in the top-k's own projection, no join. Unheld, the ≤ k rows are
+    * broadcast against documents and the join ends in a bounded top-k: a
+    * plain sort there costs a range-sampling job and a shuffle.
     */
-  private def topWithLang(spark: SparkSession, dir: String, hits: DataFrame, k: Int)
-                         (joined: => DataFrame): DataFrame =
-    keywordColumns(spark, dir).map(kw =>
-      hits.orderBy(col("score").desc, col("doc_id").asc)
-        .select(col("doc_id"), langOf(kw).as("lang"), col("score"))
-        .limit(k))
-      .getOrElse(joined)
+  private def topWithLang(spark: SparkSession, dir: String, hits: DataFrame,
+                          k: Int): DataFrame = {
+    val ranked = hits.orderBy(col("score").desc, col("doc_id").asc)
+    keywordColumns(spark, dir)
+      .map(kw => ranked.select(col("doc_id"), langOf(kw).as("lang"), col("score")))
+      .getOrElse(Tables.documents(spark, dir).select(col("doc_id"), col("lang"))
+        .join(broadcast(ranked.limit(k)), Seq("doc_id"))
+        .select(col("doc_id"), col("lang"), col("score"))
+        .orderBy(col("score").desc, col("doc_id").asc))
+      .limit(k)
+  }
 
   /** One IN-pushed probe of the postings store aggregated to the
     * per-doc DISTINCT-TERM presence count — the shared leg beneath
@@ -978,7 +976,8 @@ object SearchOps {
     val posts = servedMultiFieldPostings(spark, dir)
     val terms = analyzeQuery(q).distinct.sorted
     require(terms.nonEmpty, s"query '$q' analyzed to no terms")
-    val expanded = resolveFuzzyCandidates(spark, servedMultiFieldDict(spark, dir), terms)
+    val expanded = resolveFuzzyCandidates(spark, dir, "mfterms",
+      servedMultiFieldDict(spark, dir), terms)
     val candRows = terms.flatMap { t =>
       MultiFieldBoosts.flatMap { case (f, b) =>
         expanded(t).map(tok => (t, f, tok, b)) } :+
@@ -994,24 +993,8 @@ object SearchOps {
       .agg(max(col("boost")).as("w")) // ES best_fields: max boost among hits
       .groupBy(col("doc_id"))
       .agg(sum(col("w")).as("score"))
-    cutThenLang(spark, dir, scored, k)
+    topWithLang(spark, dir, scored, k)
   }
-
-  /** [[topWithLang]] for the fuzzy faces: 4 jobs with the keyword columns
-    * held. Unheld, the ≤ k hits are broadcast against documents and the
-    * join ends in a bounded top-k (5 jobs): a plain sort there costs a
-    * range-sampling job and a shuffle (7).
-    */
-  private def cutThenLang(spark: SparkSession, dir: String, scored: DataFrame,
-                          k: Int): DataFrame =
-    topWithLang(spark, dir, scored, k) {
-      val top = scored.orderBy(col("score").desc, col("doc_id").asc).limit(k)
-      Tables.documents(spark, dir).select(col("doc_id"), col("lang"))
-        .join(broadcast(top), Seq("doc_id"))
-        .select(col("doc_id"), col("lang"), col("score"))
-        .orderBy(col("score").desc, col("doc_id").asc)
-        .limit(k)
-    }
 
   /** Served field-tagged postings behind [[multiFieldFuzzyIndexed]]. The
     * title field is analyzed from the SAME 48-char slice as the scan face
@@ -1168,19 +1151,19 @@ object SearchOps {
     * table is 0.6 MB). Above it every face keeps its parquet plan.
     */
   private def keywordColumns(spark: SparkSession, dir: String): Option[DerivedStore.Held] =
-    DerivedStore.held(spark, "keywords", dir, "documents.parquet")(
-      Tables.documents(spark, dir).select(col("doc_id"), col("lang"), col("n_chars"))
-        .coalesce(1).sortWithinPartitions(col("doc_id")))
+    DerivedStore.held(spark, "keywords", dir, "documents.parquet") {
+      val d = Tables.documents(spark, dir)
+      // a (doc_id, text) table holds doc_id alone, which [[docCount]] counts
+      d.select(Seq("doc_id", "lang", "n_chars").filter(d.columns.contains).map(col): _*)
+        .coalesce(1).sortWithinPartitions(col("doc_id"))
+    }
 
-  /** Corpus size N, held per documents version like the keyword columns
-    * (kept apart from them: the ranking faces need no column but doc_id);
-    * a count job when the documents are above the threshold.
+  /** Corpus size N: the row count of the held [[keywordColumns]] (one row
+    * per document), a count job when the documents are above the threshold.
     */
-  private def docCount(spark: SparkSession, dir: String): Long = {
-    def n = Tables.documents(spark, dir).agg(count(lit(1)))
-    DerivedStore.held(spark, "doccount", dir, "documents.parquet")(n)
-      .map(_.rows.head.getLong(0)).getOrElse(n.head.getLong(0))
-  }
+  private def docCount(spark: SparkSession, dir: String): Long =
+    keywordColumns(spark, dir).map(_.rows.size.toLong)
+      .getOrElse(Tables.documents(spark, dir).agg(count(lit(1))).head.getLong(0))
 
   /** `lang` of a doc_id column, looked up in the held keyword columns by a
     * binary search on doc_id (null for an id the held version lacks). Put
@@ -1326,23 +1309,22 @@ object SearchOps {
     * pattern: inverted-index-as-relation (SURVEY §4 "custom" row).
     */
   def postingsIndex(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(analyze(col("text"))).as("token"))
-      .groupBy("token", "doc_id")
-      .agg(count(lit(1)).as("tf"))
+    graft.streaming.IncrementalPostings.postingsOf(
+      Tables.documents(spark, dir).select(col("doc_id"), col("text")))
 
   /** The postings STORE the index-backed query faces serve from. In a
     * real deployment this is the table
     * [[graft.streaming.IncrementalPostings]] maintains tick by tick;
     * queries never re-analyze the corpus — they read the index. The first
     * touch per dir builds the store through the SAME upsert machinery a CDC
-    * tick uses ([[graft.streaming.IncrementalPostings.postingsOf]] IS the
-    * [[postingsIndex]] derivation, so the rows are bit-identical and every
-    * DuckDB oracle replays unchanged); after that, q_keywords,
-    * q_inverted_search, q_search_ranked, and q_search_fuzzy_idx share that
-    * ONE analyze pass and plan as parquet scans with the term IN-list
-    * pushed into the scan (PlanSpec pins the shape). At warehouse scale the
-    * store is token-bucketed and a query reads only its terms' buckets.
+    * tick uses ([[postingsIndex]] is
+    * [[graft.streaming.IncrementalPostings.postingsOf]] over the documents,
+    * so the rows are bit-identical and every DuckDB oracle replays
+    * unchanged); after that, q_keywords, q_inverted_search,
+    * q_search_ranked, and q_search_fuzzy_idx share that ONE analyze pass
+    * and plan as parquet scans with the term IN-list pushed into the scan
+    * (PlanSpec pins the shape). At warehouse scale the store is
+    * token-bucketed and a query reads only its terms' buckets.
     */
   def servedPostings(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.IncrementalPostings.load(spark,
@@ -1390,8 +1372,8 @@ object SearchOps {
     * Scale shape: the IN-list prunes postings before anything groups (token-
     * bucketed index ⇒ k-bucket read); df/idf is a ≤|terms|-row aggregate
     * broadcast back; one hash-agg by doc_id; TakeOrderedAndProject for the
-    * top-k. N is a number in the plan ([[docCount]], held per documents
-    * version), not a count job plus a broadcast.
+    * top-k. N is a number in the plan ([[docCount]], the held keyword
+    * columns' row count), not a count job plus a broadcast.
     */
   def rankedSearch(spark: SparkSession, dir: String,
                    q: String = "data stream window", k: Int = 20): DataFrame =
@@ -2706,7 +2688,6 @@ object SearchOps {
                          q: String = "streem qery", k: Int = 20): DataFrame = {
     import spark.implicits._
     val postings = servedPostings(spark, dir)
-    val stores = servedFuzzyDict(spark, dir)
     val terms = analyzeQuery(q).distinct.sorted
     require(terms.nonEmpty, s"query '$q' analyzed to no terms")
     // The verified (term, token) set is QUERY-RESULT-sized — bounded by the
@@ -2715,14 +2696,10 @@ object SearchOps {
     // IN-list PUSHED into the store scan (static pruning; at scale the
     // token-bucketed store reads only those buckets). The round-7 shape
     // re-derived the dictionary per call and chained broadcast builds —
-    // 9 jobs, 0.14 cpuSec: pure dispatch floor.
-    // Per-TERM expansion cache: a term's candidate set is a deterministic
-    // function of (dictionary version, term, fuzz budget) — the exact thing
-    // a search server memoizes (Lucene caches the per-term automaton walk;
-    // ES caches query rewrites). Keyed by the version-stamped store path,
-    // so a rewritten corpus re-expands. Unseen terms pay one resolution
-    // job; repeated terms resolve driver-side.
-    val expanded = resolveFuzzyCandidates(spark, stores, terms)
+    // 9 jobs, 0.14 cpuSec: pure dispatch floor. Expansions are memoized
+    // per term and documents version (see [[resolveFuzzyCandidates]]).
+    val expanded = resolveFuzzyCandidates(spark, dir, "fuzzyterms",
+      servedFuzzyDict(spark, dir), terms)
     val verifiedPairs = terms.flatMap(t => expanded(t).map(tok => (t, tok)))
     val tokens = verifiedPairs.map(_._2).distinct.toSeq
     val verifiedDf = verifiedPairs.toSeq.toDF("term", "token")
@@ -2732,36 +2709,35 @@ object SearchOps {
       .join(broadcast(verifiedDf), Seq("token"))
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("term")).cast("int").as("score"))
-    cutThenLang(spark, dir, scored, k)
+    topWithLang(spark, dir, scored, k)
   }
 
-  /** (gram-store path, term) → verified candidate tokens. Bounded by the
-    * distinct terms queried per JVM; the store path carries the corpus
-    * content version, so stale expansions are never served.
+  /** Each term's verified fuzzy candidates in the (dict, grams) `stores`
+    * of `dir` — the expansion step shared by [[fuzzySearchIndexed]] and
+    * [[multiFieldFuzzyIndexed]]. A term's candidate set is a deterministic
+    * function of (dictionary version, term, fuzz budget), the thing a
+    * search server memoizes (Lucene caches the per-term automaton walk), so
+    * each dictionary `kind` keeps a term table per documents version
+    * ([[DerivedStore.memo]], together with the store paths it was filled
+    * from). Unseen terms pay ONE resolution job for the whole batch;
+    * repeated terms resolve driver-side.
     */
-  private val fuzzyCandCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Array[String]]()
-
-  /** Resolve each term's verified fuzzy candidates against a (dict, grams)
-    * store pair of paths, memoized per (gram-store path, term) — the
-    * expansion step shared by [[fuzzySearchIndexed]] and
-    * [[multiFieldFuzzyIndexed]]. Unseen terms pay ONE resolution job for
-    * the whole batch; repeated terms resolve driver-side (the Lucene
-    * automaton-walk cache analog).
-    */
-  private def resolveFuzzyCandidates(spark: SparkSession, stores: (String, String),
-      terms: Seq[String]): Map[String, Array[String]] = {
-    val (dictPath, gramPath) = stores
-    val missing = terms.filterNot(t => fuzzyCandCache.containsKey((gramPath, t)))
+  private def resolveFuzzyCandidates(spark: SparkSession, dir: String, kind: String,
+      stores: => (String, String), terms: Seq[String]): Map[String, Array[String]] = {
+    val (dictPath, gramPath, known) =
+      DerivedStore.memo(spark, kind, dir, "documents.parquet") {
+        val (d, g) = stores
+        (d, g, scala.collection.concurrent.TrieMap.empty[String, Array[String]])
+      }
+    val missing = terms.filterNot(known.contains)
     if (missing.nonEmpty) {
       val resolved = fuzzyVerified(spark, Tables.parquetCached(spark, gramPath),
           Tables.parquetCached(spark, dictPath), missing)
         .collect().map(r => (r.getString(0), r.getString(1)))
         .groupBy(_._1).map { case (t, ps) => t -> ps.map(_._2) }
-      missing.foreach(t =>
-        fuzzyCandCache.put((gramPath, t), resolved.getOrElse(t, Array.empty)))
+      missing.foreach(t => known.put(t, resolved.getOrElse(t, Array.empty)))
     }
-    terms.map(t => t -> fuzzyCandCache.get((gramPath, t))).toMap
+    terms.map(t => t -> known(t)).toMap
   }
 
   /** Served term-dictionary + character-bigram-postings store paths per

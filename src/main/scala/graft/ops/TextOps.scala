@@ -479,14 +479,13 @@ object TextOps {
     // cells on the driver. The round-7 shape (cache + count +
     // localCheckpoint + release around a broadcast-scalar join) spent 7
     // jobs — 0.9 cpuSec but up to 2.3 s wall — on materialization hygiene
-    // for a result this small; collect-once is 1 aggregate job, and the
-    // artifact is SERVED per (dir, content version) like every other model
-    // store, so steady state is 0 cluster jobs.
+    // for a result this small; collect-once is 1 aggregate job, memoized
+    // per documents version ([[DerivedStore.memo]]), so steady state is 0
+    // cluster jobs.
     // Share arithmetic is one IEEE double division per cell, the same op
     // the oracle's `CAST(n_tokens AS DOUBLE) / total` performs.
-    val cells = corpusMixCells.computeIfAbsent(
-      s"$dir@${Tables.contentVersion(spark, s"$dir/documents.parquet")}",
-      _ => Tables.documents(spark, dir)
+    val cells = DerivedStore.memo(spark, "corpusmix", dir, "documents.parquet")(
+      Tables.documents(spark, dir)
         .groupBy("lang", "source").agg(
           count(lit(1)).as("n_docs"),
           sum(metrics.getField("n_tokens")).as("n_tokens"),
@@ -499,14 +498,6 @@ object TextOps {
         r.getAs[Long]("n_chars_sum"), r.getAs[Long]("n_tokens") / total))
       .toDF("lang", "source", "n_docs", "n_tokens", "n_chars_sum", "token_share")
   }
-
-  /** Collected (lang, source) cells per (dir, content version) — in-memory
-    * because the artifact is ≤ ~10³ tiny rows (a parquet store would cost
-    * more to read than to hold); version-keyed so a rewritten corpus
-    * re-aggregates instead of serving stale totals.
-    */
-  private val corpusMixCells =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[org.apache.spark.sql.Row]]()
 
   /** Corpus-wide top duplicated n-grams — the boilerplate REPORT the
     * dedup fractions summarize: WHICH trigrams dominate the corpus, with
@@ -523,24 +514,20 @@ object TextOps {
     * absorbs the Zipf head before the exchange.
     */
   def topNgrams(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
-    // bounded (k-row) report: computed once per (dir, content version, k)
-    // and served from the same driver-side version-keyed artifact cache
-    // [[corpusMix]] uses — a boilerplate report is a maintained ARTIFACT
-    // (refreshed when the corpus version changes), not a per-call
-    // derivation. Within the build the vocabulary cache is collected and
-    // RELEASED eagerly (r10 ADVICE: no per-call executor-cache
-    // accumulation; the k-row driver-side entry is the whole footprint).
-    val key = s"$dir@${Tables.contentVersion(spark, s"$dir/documents.parquet")}@$k"
-    val (rows, schema) = topNgramRows.computeIfAbsent(key, _ => {
+    // bounded (k-row) report, memoized per (k, documents version) like
+    // [[corpusMix]] ([[DerivedStore.memo]]): a boilerplate report is a
+    // maintained ARTIFACT (refreshed when the corpus version changes), not
+    // a per-call derivation. Within the build the vocabulary cache is
+    // collected and RELEASED eagerly (r10 ADVICE: no per-call
+    // executor-cache accumulation; the k-row driver-side value is the whole
+    // footprint).
+    val (rows, schema) = DerivedStore.memo(spark, s"topngrams-$k", dir, "documents.parquet") {
       val (counts, res) = topNgramsPlan(spark, dir, k)
       val out = DedupOps.releasingBounded(counts)(res)
       (out.collect(), out.schema)
-    })
+    }
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
-
-  private val topNgramRows = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType)]()
 
   /** The LAZY plan face of [[topNgrams]] — `(persisted intermediate,
     * result)`, the seam PlanSpec pins the two-pass shape through.

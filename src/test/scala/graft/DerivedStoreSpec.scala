@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 /** The derived-store registry: one build per cold store however many
   * threads ask, builders free to resolve their own dependencies, nothing
   * memoized by a failed build, crash debris promoted instead of rebuilt,
-  * and a key no two source dirs share.
+  * a key no two source dirs share, and no version key built anywhere else.
   */
 class DerivedStoreSpec extends SparkSpecBase {
   import spark.implicits._
@@ -117,5 +117,23 @@ class DerivedStoreSpec extends SparkSpecBase {
     // the name keeps its shape: kind, then a 64-bit hex tag with no '-'
     Seq(pa, pb).foreach(p =>
       assert(Paths.get(p).getFileName.toString.matches("graft-postings-[0-9a-f]{16}"), p))
+  }
+
+  test("only Tables and DerivedStore read a content version; no ops object owns a concurrent map") {
+    import scala.jdk.CollectionConverters._
+    def sources(dir: String): Seq[java.nio.file.Path] = {
+      val walk = Files.walk(Paths.get(dir))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    def text(p: java.nio.file.Path) = new String(Files.readAllBytes(p), "UTF-8")
+    val main = sources("src/main/scala")
+    assert(main.exists(_.endsWith("graft/DerivedStore.scala")), "scan found no sources")
+    val versionReaders = main.filter(p => text(p).contains("contentVersion("))
+      .map(_.getFileName.toString).toSet
+    assert(versionReaders === Set("Tables.scala", "DerivedStore.scala"))
+    val opsMaps = sources("src/main/scala/graft/ops")
+      .filter(p => text(p).contains("ConcurrentHashMap")).map(_.getFileName.toString)
+    assert(opsMaps.isEmpty, s"ops files with their own concurrent map: $opsMaps")
   }
 }

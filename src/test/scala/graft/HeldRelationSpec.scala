@@ -1,14 +1,15 @@
 package graft
 
-import graft.ops.SearchOps
+import graft.ops.{SearchOps, SimilarityOps, TextOps}
 import graft.sinks.AtomicSwap
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row}
 
-/** Driver-held relations behind the served search faces: a documents
-  * rewrite is served at once and leaves one held version per (kind, dir),
-  * and with holding off (broadcast threshold -1) every face answers with
-  * the same rows from its parquet plan.
+/** Driver-held relations and memoized values behind the served faces: a
+  * documents or embeddings rewrite is served at once and leaves one
+  * memoized version per (kind, dir), and with holding off (broadcast
+  * threshold -1) every search face answers with the same rows from its
+  * parquet plan.
   */
 class HeldRelationSpec extends SparkSpecBase {
   import spark.implicits._
@@ -23,30 +24,61 @@ class HeldRelationSpec extends SparkSpecBase {
   }
 
   private def docs(rs: (Long, String, String)*): DataFrame =
-    rs.map { case (id, lang, text) => (id, lang, text.length, text) }
-      .toDF("doc_id", "lang", "n_chars", "text")
+    rs.map { case (id, lang, text) => (id, lang, "web", text.length, text) }
+      .toDF("doc_id", "lang", "source", "n_chars", "text")
+
+  /** Six 64-dim vectors with components `offset + (i * a + j * b) % 50`,
+    * scaled by `scale`.
+    */
+  private def vectors(offset: Double, scale: Double, a: Int, b: Int): DataFrame =
+    (0 until 6).map(i => (i.toLong,
+      Seq.tabulate(64)(j => ((offset + (i * a + j * b) % 50) * scale).toFloat), i % 3))
+      .toDF("vec_id", "embedding", "label")
+
+  /** (lang, n_docs, n_chars_sum) per corpus-mix cell. */
+  private def mix(dir: String): Set[(String, Long, Long)] =
+    TextOps.corpusMix(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(2), r.getLong(4))).toSet
 
   test("a documents rewrite is served by term, terms agg and match at once; one held version per kind and dir") {
     val dir = Files.createTempDirectory("held-version").toAbsolutePath.toString
     val path = s"$dir/documents.parquet"
+    val embPath = s"$dir/embeddings.parquet"
     AtomicSwap.replace(spark, docs((1L, "en", "alpha beta"), (2L, "fr", "beta gamma")), path)
+    AtomicSwap.replace(spark, vectors(0, 0.02, 7, 13), embPath)
     assert(rows(SearchOps.termLookup(spark, dir, 1L)) === Seq(Row(1L, "en", 10)))
     assert(rows(SearchOps.termsAgg(spark, dir, 10)) ===
       Seq(Row("beta", 2L), Row("alpha", 1L), Row("gamma", 1L)))
     assert(rows(SearchOps.matchQueryIndexed(spark, dir, "delta gamma", 10)) === Seq(Row(2L, "fr", 1)))
-    val before = Seq("keywords", "tokentotals").map(DerivedStore.heldVersions(_, dir))
-    assert(before.forall(_.size == 1), s"expected one held version each: $before")
+    assert(mix(dir) === Set(("en", 1L, 10L), ("fr", 1L, 10L)))
+    assert(rows(TextOps.topNgrams(spark, dir, 5)) === Nil) // no document has three words
+    // "deltaa" is one edit from "delta", a token only the rewrite adds
+    assert(rows(SearchOps.fuzzySearchIndexed(spark, dir, "deltaa", 10)) === Nil)
+    // query vector 3 ranks first only under a model fitted to its version
+    // (this one's, or the rewrite's components, which are all above it)
+    assert(rows(SimilarityOps.annSq8(spark, dir, 3L, shortlist = 1, k = 1)) ===
+      Seq(Row(3L, 0, 1.0)))
+    val kinds = Seq("keywords", "tokentotals", "corpusmix", "topngrams-5", "fuzzyterms",
+      "sq8model")
+    val before = kinds.map(DerivedStore.memoVersions(_, dir))
+    assert(before.forall(_.size == 1), s"expected one memoized version each: $before")
 
     AtomicSwap.replace(spark, docs((1L, "de", "alpha beta"), (2L, "fr", "beta gamma"),
       (3L, "es", "delta delta gamma")), path)
+    AtomicSwap.replace(spark, vectors(2, 1.0, 5, 11), embPath)
     assert(rows(SearchOps.termLookup(spark, dir, 1L)) === Seq(Row(1L, "de", 10)))
     assert(rows(SearchOps.termLookup(spark, dir, 3L)) === Seq(Row(3L, "es", 17)))
     assert(rows(SearchOps.termsAgg(spark, dir, 10)) ===
       Seq(Row("beta", 2L), Row("delta", 2L), Row("gamma", 2L), Row("alpha", 1L)))
     assert(rows(SearchOps.matchQueryIndexed(spark, dir, "delta gamma", 10)) ===
       Seq(Row(3L, "es", 2), Row(2L, "fr", 1)))
-    val after = Seq("keywords", "tokentotals").map(DerivedStore.heldVersions(_, dir))
-    assert(after.forall(_.size == 1), s"expected one held version each: $after")
+    assert(mix(dir) === Set(("de", 1L, 10L), ("fr", 1L, 10L), ("es", 1L, 17L)))
+    assert(rows(TextOps.topNgrams(spark, dir, 5)) === Seq(Row("delta delta gamma", 1L, 1L)))
+    assert(rows(SearchOps.fuzzySearchIndexed(spark, dir, "deltaa", 10)) === Seq(Row(3L, "es", 1)))
+    assert(rows(SimilarityOps.annSq8(spark, dir, 3L, shortlist = 1, k = 1)) ===
+      Seq(Row(3L, 0, 1.0)))
+    val after = kinds.map(DerivedStore.memoVersions(_, dir))
+    assert(after.forall(_.size == 1), s"expected one memoized version each: $after")
     assert(after.zip(before).forall { case (a, b) => a != b }, "the rewrite must resolve a new version")
   }
 
