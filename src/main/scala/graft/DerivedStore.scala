@@ -7,23 +7,26 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * and only read after that. This object alone knows a store's key, its
   * root and the build-once policy.
   *
-  * Key: `$root/graft-$kind-$tag`, one path per (kind, source dir, source
-  * content version). A source rewrite yields a NEW path, so a stale store is
-  * never read again, and a shared root lets a later JVM reuse a finished
-  * build. The kind string is the store's layout identity: a builder whose
-  * layout or schema changes gets a new kind (`postingsbkt2` → `postingsbkt3`).
+  * Key: `$root/graft-$kind-$tag`, one path per (kind, source dir, content
+  * version of each source table the store reads). A rewrite of any source
+  * yields a NEW path, so a stale store is never read again, and a shared
+  * root lets a later JVM reuse a finished build. The kind string is the
+  * store's layout identity: a builder whose layout or schema changes gets a
+  * new kind (`postingsbkt2` → `postingsbkt3`).
   *
-  * Build once: a JVM-wide set of resolved paths is the fast path. On a miss
-  * the caller takes THAT path's lock (never a global one: cold stores build
-  * in parallel), promotes a complete staging a crash left behind, and
-  * builds only if nothing lives at the path. A builder may resolve the
-  * stores it depends on inline: it holds only its own path's lock, and the
-  * store dependency graph has no cycles.
+  * Build once: the path last resolved per (kind, dir) is the fast path. On
+  * a miss the caller takes the lock of that (kind, dir) (never a global
+  * one: cold stores build in parallel), promotes a complete staging a crash
+  * left behind, and builds only if nothing lives at the path. A builder may
+  * resolve the stores it depends on inline: it holds only its own kind's
+  * lock, and the store dependency graph has no cycles. Resolving a new
+  * version replaces the older entry, so a source rewritten every tick
+  * leaves one entry per (kind, dir) behind.
   *
   * Memo: a driver-side value derived once per source version (a fitted
   * model, a collected report, a term table) is held under the same key and
-  * that path's lock ([[memo]]); resolving a new version drops the older
-  * value of the same kind and dir. A held relation ([[held]]) is a memo of
+  * lock ([[memo]]); resolving a new version drops the older value of the
+  * same kind and dir. A held relation ([[held]]) is a memo of
   * a derived relation small enough to broadcast, kept as a `LocalRelation`:
   * a query over it plans no scan, and Catalyst folds a filter, project or
   * limit over it into another local relation, which collects with no Spark
@@ -43,14 +46,25 @@ object DerivedStore {
     root.toString
   }
 
-  private val resolved = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val locks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+  /** The path last resolved per (kind, dir), and one lock per (kind, dir). */
+  private val resolved = new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val locks = new java.util.concurrent.ConcurrentHashMap[(String, String), AnyRef]()
 
-  /** The store's location for the CURRENT content of `$dir/$source`. */
-  def path(spark: SparkSession, kind: String, dir: String, source: String): String = {
+  private def lock(kind: String, dir: String): AnyRef =
+    locks.computeIfAbsent((kind, dir), _ => new Object)
+
+  /** The (resolved, locks) entries held for source dir `dir`. */
+  private[graft] def registrySizes(dir: String): (Int, Int) = {
+    import scala.jdk.CollectionConverters._
+    (resolved.keySet.asScala.count(_._2 == dir), locks.keySet.asScala.count(_._2 == dir))
+  }
+
+  /** The store's location for the CURRENT content of `$dir/<each source>`. */
+  def path(spark: SparkSession, kind: String, dir: String, sources: String*): String = {
+    require(sources.nonEmpty, s"store $kind names no source")
     val root = spark.conf.getOption("spark.graft.store.dir").getOrElse(localRoot)
-    val version = Tables.contentVersion(spark, s"$dir/$source")
-    s"$root/graft-$kind-${tag(s"$dir@$version")}"
+    val versions = sources.map(s => Tables.contentVersion(spark, s"$dir/$s"))
+    s"$root/graft-$kind-${tag(s"$dir@${versions.mkString("+")}")}"
   }
 
   /** 64 bits of SHA-256 in hex: wide enough that two source dirs never
@@ -69,45 +83,46 @@ object DerivedStore {
     * `IncrementalPostings.upsert`, `IncrementalVectors.upsert`). A build
     * that throws memoizes nothing: the next call builds again.
     */
-  def ensure(spark: SparkSession, kind: String, dir: String, source: String)
+  def ensure(spark: SparkSession, kind: String, dir: String, sources: String*)
             (build: String => Unit): String = {
-    val p = path(spark, kind, dir, source)
-    if (!resolved.contains(p)) locks.computeIfAbsent(p, _ => new Object).synchronized {
-      if (!resolved.contains(p)) {
+    val p = path(spark, kind, dir, sources: _*)
+    if (resolved.get((kind, dir)) != p) lock(kind, dir).synchronized {
+      if (resolved.get((kind, dir)) != p) {
         graft.sinks.AtomicSwap.recover(spark, p)
         if (!graft.sinks.AtomicSwap.fs(spark, p).exists(new org.apache.hadoop.fs.Path(p)))
           build(p)
-        resolved.add(p)
+        resolved.put((kind, dir), p)
       }
     }
     p
   }
 
   /** A one-relation parquet store: `df` written once, then served. */
-  def parquet(spark: SparkSession, kind: String, dir: String, source: String)
+  def parquet(spark: SparkSession, kind: String, dir: String, sources: String*)
              (df: => DataFrame): DataFrame =
     Tables.parquetCached(spark,
-      ensure(spark, kind, dir, source)(graft.sinks.AtomicSwap.replace(spark, df, _)))
+      ensure(spark, kind, dir, sources: _*)(graft.sinks.AtomicSwap.replace(spark, df, _)))
 
   /** The memoized value per (kind, source dir): its version key and value. */
   private val memos = new java.util.concurrent.ConcurrentHashMap[(String, String), (String, Any)]()
 
-  /** `compute` once per content version of `$dir/$source`, held on the
-    * driver under the store key (kind, dir, source version) and taken under
-    * that path's lock; resolving a new version drops the older value of the
-    * same kind and dir. Nothing is written, and a compute that throws
-    * memoizes nothing.
+  /** `compute` once per content version of the `sources` of `dir`, held on
+    * the driver under the store key (kind, dir, source versions) and taken
+    * under that (kind, dir)'s lock; resolving a new version drops the older
+    * value of the same kind and dir. Nothing is written, and a compute that
+    * throws memoizes nothing.
     */
-  def memo[A](spark: SparkSession, kind: String, dir: String, source: String)
-             (compute: => A): A = memoUsable(spark, kind, dir, source)((_: A) => true)(compute)
+  def memo[A](spark: SparkSession, kind: String, dir: String, sources: String*)
+             (compute: => A): A =
+    memoUsable(spark, kind, dir, sources: _*)((_: A) => true)(compute)
 
   /** [[memo]], recomputing a current value that `usable` rejects. */
-  private def memoUsable[A](spark: SparkSession, kind: String, dir: String, source: String)
+  private def memoUsable[A](spark: SparkSession, kind: String, dir: String, sources: String*)
                            (usable: A => Boolean)(compute: => A): A = {
-    val key = path(spark, kind, dir, source)
+    val key = path(spark, kind, dir, sources: _*)
     def current: Option[A] = Option(memos.get((kind, dir)))
       .collect { case (k, v) if k == key => v.asInstanceOf[A] }.filter(usable)
-    current.getOrElse(locks.computeIfAbsent(key, _ => new Object).synchronized {
+    current.getOrElse(lock(kind, dir).synchronized {
       current.getOrElse {
         val v = compute
         memos.put((kind, dir), (key, v))

@@ -962,39 +962,42 @@ object SearchOps {
     *     tokens never enter the fuzzy dictionary)
     *
     * A query expands each term ONCE against the union dictionary (field
-    * membership is resolved by the postings join, so per-field dictionaries
-    * would buy nothing), crosses the verified tokens with the field-boost
-    * table, and scores docs as Σ_term max(matched-field boost) — exactly
-    * the scan face's Σ greatest(per-field match × boost) on the rows it
-    * keeps. The corpus is only touched through the pushed token IN-list;
-    * at scale the token-bucketed store reads only those buckets.
+    * membership is resolved per postings row, so per-field dictionaries
+    * would buy nothing) and scores docs as Σ_term max(matched-field boost)
+    * — exactly the scan face's Σ greatest(per-field match × boost) on the
+    * rows it keeps. The expansions are literals of one doc-keyed aggregate
+    * over the pushed token IN-list: one exchange, no join, 2 jobs warm. The
+    * IN-list is on the token alone, so a row whose token is a candidate
+    * but whose field does not take it (a lang row of a fuzzy candidate)
+    * scores null, and a doc of such rows only scores 0 and is dropped.
+    * At scale the token-bucketed store reads only those buckets.
     * SearchSpec pins result equality with the scan face.
     */
   def multiFieldFuzzyIndexed(spark: SparkSession, dir: String,
       q: String = "custommer streem windoe", k: Int = 20): DataFrame = {
-    import spark.implicits._
-    val posts = servedMultiFieldPostings(spark, dir)
     val terms = analyzeQuery(q).distinct.sorted
     require(terms.nonEmpty, s"query '$q' analyzed to no terms")
-    val expanded = resolveFuzzyCandidates(spark, dir, "mfterms",
+    val expanded = fuzzyCandidates(spark, dir, "mfterms", MultiFieldSources,
       servedMultiFieldDict(spark, dir), terms)
-    val candRows = terms.flatMap { t =>
-      MultiFieldBoosts.flatMap { case (f, b) =>
-        expanded(t).map(tok => (t, f, tok, b)) } :+
-        ((t, "lang", t, 1.0)) // keyword field: exact term only, never fuzzy
-    }
-    val tokens = candRows.map(_._3).distinct
-    val candDf = candRows.toDF("term", "field", "token", "boost")
-    // the candidate table is a local relation, but broadcasting it still
-    // starts one job (its rows are collected through an RDD)
-    val scored = posts.filter(col("token").isInCollection(tokens))
-      .join(broadcast(candDf), Seq("field", "token"))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(max(col("boost")).as("w")) // ES best_fields: max boost among hits
+    val fieldBoost = MultiFieldBoosts.tail.foldLeft(
+      when(col("field") === MultiFieldBoosts.head._1, lit(MultiFieldBoosts.head._2))) {
+      case (c, (f, b)) => c.when(col("field") === f, lit(b)) }
+    // ES best_fields: a term scores the largest boost among the fields it
+    // hits; the keyword field lang takes the exact term only, never fuzzy
+    val partials = terms.map(t => coalesce(max(
+      when(col("field") === "lang", when(col("token") === t, lit(1.0)))
+        .when(col("token").isin(expanded(t): _*), fieldBoost)), lit(0.0)))
+    val scored = servedMultiFieldPostings(spark, dir)
+      .filter(col("token").isInCollection((terms ++ terms.flatMap(expanded)).distinct))
       .groupBy(col("doc_id"))
-      .agg(sum(col("w")).as("score"))
+      .agg(partials.reduce(_ + _).as("score"))
+      .filter(col("score") > 0)
     topWithLang(spark, dir, scored, k)
   }
+
+  /** The tables the multi-field stores read: the names field comes from
+    * customer, so a customer rewrite is a new version too. */
+  private val MultiFieldSources = Seq("documents.parquet", "customer.parquet")
 
   /** Served field-tagged postings behind [[multiFieldFuzzyIndexed]]. The
     * title field is analyzed from the SAME 48-char slice as the scan face
@@ -1004,7 +1007,7 @@ object SearchOps {
     */
   private[graft] def servedMultiFieldPostings(spark: SparkSession,
                                               dir: String): DataFrame =
-    DerivedStore.parquet(spark, "mfpostings", dir, "documents.parquet") {
+    DerivedStore.parquet(spark, "mfpostings", dir, MultiFieldSources: _*) {
       def tagged(f: String, toks: Column): Column =
         transform(toks, t => struct(lit(f).as("field"), t.as("token")))
       val names = Tables.customer(spark, dir)
@@ -1027,11 +1030,11 @@ object SearchOps {
     */
   private def servedMultiFieldDict(spark: SparkSession,
                                    dir: String): (String, String) = {
-    val pd = DerivedStore.ensure(spark, "mfdict", dir, "documents.parquet")(
+    val pd = DerivedStore.ensure(spark, "mfdict", dir, MultiFieldSources: _*)(
       AtomicSwap.replace(spark, servedMultiFieldPostings(spark, dir)
         .filter(col("field") =!= "lang").select(col("token")).distinct()
         .withColumn("tok_len", length(col("token"))), _))
-    (pd, DerivedStore.ensure(spark, "mfgrams", dir, "documents.parquet")(
+    (pd, DerivedStore.ensure(spark, "mfgrams", dir, MultiFieldSources: _*)(
       AtomicSwap.replace(spark, dictGrams(Tables.parquetCached(spark, pd)), _)))
   }
 
@@ -1327,10 +1330,13 @@ object SearchOps {
     * token-bucketed and a query reads only its terms' buckets.
     */
   def servedPostings(spark: SparkSession, dir: String): DataFrame =
-    graft.streaming.IncrementalPostings.load(spark,
-      DerivedStore.ensure(spark, "postings", dir, "documents.parquet")(
-        graft.streaming.IncrementalPostings.upsert(spark, _,
-          Tables.documents(spark, dir).select(col("doc_id"), col("text")))))
+    graft.streaming.IncrementalPostings.load(spark, servedPostingsPath(spark, dir))
+
+  /** The path of the [[servedPostings]] store, built first if absent. */
+  private def servedPostingsPath(spark: SparkSession, dir: String): String =
+    DerivedStore.ensure(spark, "postings", dir, "documents.parquet")(
+      graft.streaming.IncrementalPostings.upsert(spark, _,
+        Tables.documents(spark, dir).select(col("doc_id"), col("text"))))
 
   /** Search via the postings index instead of a corpus scan. */
   def postingsSearch(postings: DataFrame, q: String, k: Int = 20): DataFrame = {
@@ -1370,43 +1376,47 @@ object SearchOps {
     * both engines and could flip last-ulp bits run to run.
     *
     * Scale shape: the IN-list prunes postings before anything groups (token-
-    * bucketed index ⇒ k-bucket read); df/idf is a ≤|terms|-row aggregate
-    * broadcast back; one hash-agg by doc_id; TakeOrderedAndProject for the
-    * top-k. N is a number in the plan ([[docCount]], the held keyword
-    * columns' row count), not a count job plus a broadcast.
+    * bucketed index ⇒ k-bucket read); one hash-agg by doc_id;
+    * TakeOrderedAndProject for the top-k. N and each term's df are numbers
+    * in the plan ([[rankedScores]]), so a warm query is 2 jobs: no count
+    * job, no df aggregate, no idf broadcast.
     */
   def rankedSearch(spark: SparkSession, dir: String,
                    q: String = "data stream window", k: Int = 20): DataFrame =
-    rankedPostingsSearch(servedPostings(spark, dir), docCount(spark, dir).toDouble, q, k)
-
-  /** Ranking over an existing postings relation (token, doc_id, tf) of a
-    * corpus of `nDocs` documents — the materialized-index face of
-    * [[rankedSearch]].
-    */
-  def rankedPostingsSearch(postings: DataFrame, nDocs: Double,
-                           q: String, k: Int = 20): DataFrame =
-    rankedScores(postings, nDocs, q)
+    rankedScores(spark, dir, q)
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)
 
-  /** The unlimited (doc_id, score) relation behind [[rankedPostingsSearch]]
-    * — the seam [[searchAfter]] pages over.
+  /** The unlimited (doc_id, score) relation behind [[rankedSearch]] — the
+    * seam [[searchAfter]] pages over. Corpus size N ([[docCount]]) and each
+    * query term's document frequency are memoized per documents version
+    * ([[termTable]] kind `termdf`; the postings store is unique on
+    * (token, doc_id), so df = the term's row count), and `idf` is the
+    * literal `log(N / df)` inside the fixed-order fold: Catalyst folds it
+    * with the same double ops the df aggregate ran.
     */
-  private def rankedScores(postings: DataFrame, nDocs: Double,
-                           q: String): DataFrame = {
+  private def rankedScores(spark: SparkSession, dir: String, q: String): DataFrame = {
     val terms = analyzeQuery(q).distinct.sorted // FIXED fold order, oracle-shared
     require(terms.nonEmpty, s"query '$q' analyzed to no terms")
-    val matched = postings.filter(col("token").isInCollection(terms))
-    val idfs = matched.groupBy("token")
-      .agg(count(lit(1)).as("df")) // postings unique on (token, doc_id) ⇒ count = df
-      .select(col("token"), log(lit(nDocs) / col("df").cast("double")).as("idf"))
+    val ((postingsPath, nDocs), dfs) = termTable(spark, dir, "termdf",
+        Seq("documents.parquet"), terms, 0L)(
+        (servedPostingsPath(spark, dir), docCount(spark, dir))) { case ((path, _), missing) =>
+      graft.streaming.IncrementalPostings.load(spark, path)
+        .filter(col("token").isInCollection(missing))
+        .coalesce(1) // the misses' postings only: one task, no exchange, one job
+        .groupBy("token").agg(count(lit(1)))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
     val partials = terms.zipWithIndex.map { case (t, i) =>
-      sum(when(col("token") === t, col("tf").cast("double") * col("idf"))).as(s"_s$i")
+      // a term no document holds matches no row: its idf is never read
+      val idf = if (dfs(t) == 0L) lit(0.0) else log(lit(nDocs.toDouble) / lit(dfs(t).toDouble))
+      sum(when(col("token") === t, col("tf").cast("double") * idf)).as(s"_s$i")
     }
     val total = terms.indices
       .map(i => coalesce(col(s"_s$i"), lit(0.0)))
       .reduce(_ + _) // left fold in term order — same associativity as the SQL
-    matched.join(broadcast(idfs), Seq("token"))
+    graft.streaming.IncrementalPostings.load(spark, postingsPath)
+      .filter(col("token").isInCollection(terms))
       .groupBy("doc_id")
       .agg(partials.head, partials.tail: _*)
       .select(col("doc_id"), round(total, 6).as("score"))
@@ -1423,17 +1433,18 @@ object SearchOps {
     * TakeOrderedAndProject with an offset over the (score desc, doc_id asc)
     * order, which is total, so "after rank r" and "after the r-th hit's
     * sort tuple" are the same rows. `afterRank = 0` is the first page.
-    * No rank window, no cursor join: 4 jobs (df shuffle, idf broadcast,
-    * score shuffle, top-k), where the in-plan cursor (limit, min-struct
-    * aggregate, broadcast, nested-loop filter) and a count job for N cost
-    * 7. At warehouse scale a real client supplies the cursor as literals
-    * and the filter prunes on a score-ordered layout.
+    * No rank window, no cursor join: 2 jobs warm (score shuffle, top-k;
+    * N and df are literals, see [[rankedScores]]), where the in-plan
+    * cursor (limit, min-struct aggregate, broadcast, nested-loop filter), a
+    * count job for N and a df aggregate with its idf broadcast cost 7. At
+    * warehouse scale a real client supplies the cursor as literals and the
+    * filter prunes on a score-ordered layout.
     */
   def searchAfter(spark: SparkSession, dir: String,
                   q: String = "data stream window",
                   afterRank: Int = 5, k: Int = 10): DataFrame = {
     require(afterRank >= 0, s"afterRank $afterRank < 0")
-    rankedScores(servedPostings(spark, dir), docCount(spark, dir).toDouble, q)
+    rankedScores(spark, dir, q)
       .orderBy(col("score").desc, col("doc_id").asc)
       .offset(afterRank)
       .limit(k)
@@ -1494,7 +1505,7 @@ object SearchOps {
     * the postings CDC tick; here it is one keyed aggregate over the store
     * scan.
     *
-    * Float determinism mirrors [[rankedPostingsSearch]]: per-(doc,term)
+    * Float determinism mirrors [[rankedSearch]]: per-(doc,term)
     * weights are single IEEE expression chains over exactly-counted
     * integers (tf, df, N, dl are exact; avgdl is one division of an
     * integer-valued-double sum), and per-doc scores fold the ≤1-row term
@@ -2464,7 +2475,7 @@ object SearchOps {
     * Both phases read ONLY the served postings store. Phase 1's term frame
     * is seed-doc-sized and rides as a broadcast into phase 2, so the
     * corpus-sized side is touched once, pre-filtered to the selected
-    * terms. Unlike [[rankedPostingsSearch]] the query terms are
+    * terms. Unlike [[rankedSearch]] the query terms are
     * DATA-derived, so the fixed literal fold-order trick is unavailable —
     * per-doc scores instead accumulate in 2^20 fixed point (the
     * q_unigram_logprob device): each (term, doc) weight is one IEEE
@@ -2679,66 +2690,75 @@ object SearchOps {
     * a corpus scan); the two branches are disjoint on the bound's sign.
     *
     * Scale shape: dict and gram postings are corpus-derived ONCE (at real
-    * scale: materialized, bucketed by gram); a query joins a ≤|q-grams|-row
-    * broadcast against them, aggregates shared counts per candidate token,
-    * and runs levenshtein on that pruned set only — SearchSpec asserts the
-    * prune factor and result-equality with the scan baseline.
+    * scale: materialized, bucketed by gram); a query reads the postings of
+    * its own bigrams (an IN-list of literals), aggregates shared counts per
+    * candidate token, and runs levenshtein on that pruned set only —
+    * SearchSpec asserts the prune factor and result-equality with the scan
+    * baseline.
     */
   def fuzzySearchIndexed(spark: SparkSession, dir: String,
                          q: String = "streem qery", k: Int = 20): DataFrame = {
-    import spark.implicits._
-    val postings = servedPostings(spark, dir)
     val terms = analyzeQuery(q).distinct.sorted
     require(terms.nonEmpty, s"query '$q' analyzed to no terms")
     // The verified (term, token) set is QUERY-RESULT-sized — bounded by the
-    // gram prune, tens of tokens — so resolve it in ONE job over the served
-    // dict/gram stores and let the final postings pass run with the token
-    // IN-list PUSHED into the store scan (static pruning; at scale the
-    // token-bucketed store reads only those buckets). The round-7 shape
-    // re-derived the dictionary per call and chained broadcast builds —
-    // 9 jobs, 0.14 cpuSec: pure dispatch floor. Expansions are memoized
-    // per term and documents version (see [[resolveFuzzyCandidates]]).
-    val expanded = resolveFuzzyCandidates(spark, dir, "fuzzyterms",
+    // gram prune, tens of tokens — so resolve it over the served dict/gram
+    // stores, memoized per term and documents version ([[fuzzyCandidates]]),
+    // and let the final postings pass run with the token IN-list PUSHED
+    // into the store scan (static pruning; at scale the token-bucketed
+    // store reads only those buckets). Each term's candidates are literals
+    // of one doc-keyed aggregate, score = Σ_t max(token ∈ expanded(t)):
+    // one exchange, no join, 2 jobs warm. The round-7 shape re-derived the
+    // dictionary per call and chained broadcast builds — 9 jobs, 0.14
+    // cpuSec: pure dispatch floor.
+    val expanded = fuzzyCandidates(spark, dir, "fuzzyterms", Seq("documents.parquet"),
       servedFuzzyDict(spark, dir), terms)
-    val verifiedPairs = terms.flatMap(t => expanded(t).map(tok => (t, tok)))
-    val tokens = verifiedPairs.map(_._2).distinct.toSeq
-    val verifiedDf = verifiedPairs.toSeq.toDF("term", "token")
-    // the verified pairs are a local relation, but broadcasting them still
-    // starts one job (its rows are collected through an RDD)
-    val scored = postings.filter(col("token").isInCollection(tokens))
-      .join(broadcast(verifiedDf), Seq("token"))
+    val scored = servedPostings(spark, dir)
+      .filter(col("token").isInCollection(terms.flatMap(expanded).distinct))
       .groupBy(col("doc_id"))
-      .agg(countDistinct(col("term")).cast("int").as("score"))
+      .agg(terms.map(t => max(col("token").isin(expanded(t): _*).cast("int")))
+        .reduce(_ + _).as("score"))
     topWithLang(spark, dir, scored, k)
+  }
+
+  /** Per-term values of one source version, the per-term state a search
+    * server memoizes (Lucene caches the automaton walk and term statistics
+    * per term): each `kind` keeps a term table per version of its
+    * `sources` ([[DerivedStore.memo]]) beside the `context` it is filled
+    * from (store paths, corpus size), so one table never mixes versions.
+    * Unseen terms are resolved together by `resolve`, one Spark job for the
+    * batch; repeated terms resolve on the driver; a term `resolve` leaves
+    * out gets `absent`. Serves the fuzzy and multi-field candidates and the
+    * ranked faces' document frequencies.
+    */
+  private def termTable[C, V](spark: SparkSession, dir: String, kind: String,
+      sources: Seq[String], terms: Seq[String], absent: V)(context: => C)
+      (resolve: (C, Seq[String]) => Map[String, V]): (C, Map[String, V]) = {
+    val (ctx, known) = DerivedStore.memo(spark, kind, dir, sources: _*) {
+      (context, scala.collection.concurrent.TrieMap.empty[String, V])
+    }
+    val missing = terms.filterNot(known.contains)
+    if (missing.nonEmpty) {
+      val got = resolve(ctx, missing)
+      missing.foreach(t => known.put(t, got.getOrElse(t, absent)))
+    }
+    (ctx, terms.map(t => t -> known(t)).toMap)
   }
 
   /** Each term's verified fuzzy candidates in the (dict, grams) `stores`
     * of `dir` — the expansion step shared by [[fuzzySearchIndexed]] and
-    * [[multiFieldFuzzyIndexed]]. A term's candidate set is a deterministic
-    * function of (dictionary version, term, fuzz budget), the thing a
-    * search server memoizes (Lucene caches the per-term automaton walk), so
-    * each dictionary `kind` keeps a term table per documents version
-    * ([[DerivedStore.memo]], together with the store paths it was filled
-    * from). Unseen terms pay ONE resolution job for the whole batch;
-    * repeated terms resolve driver-side.
+    * [[multiFieldFuzzyIndexed]]: a deterministic function of (dictionary
+    * version, term, fuzz budget), so a [[termTable]] per dictionary `kind`.
     */
-  private def resolveFuzzyCandidates(spark: SparkSession, dir: String, kind: String,
-      stores: => (String, String), terms: Seq[String]): Map[String, Array[String]] = {
-    val (dictPath, gramPath, known) =
-      DerivedStore.memo(spark, kind, dir, "documents.parquet") {
-        val (d, g) = stores
-        (d, g, scala.collection.concurrent.TrieMap.empty[String, Array[String]])
-      }
-    val missing = terms.filterNot(known.contains)
-    if (missing.nonEmpty) {
-      val resolved = fuzzyVerified(spark, Tables.parquetCached(spark, gramPath),
-          Tables.parquetCached(spark, dictPath), missing)
-        .collect().map(r => (r.getString(0), r.getString(1)))
-        .groupBy(_._1).map { case (t, ps) => t -> ps.map(_._2) }
-      missing.foreach(t => known.put(t, resolved.getOrElse(t, Array.empty)))
-    }
-    terms.map(t => t -> known(t)).toMap
-  }
+  private def fuzzyCandidates(spark: SparkSession, dir: String, kind: String,
+      sources: Seq[String], stores: => (String, String),
+      terms: Seq[String]): Map[String, Seq[String]] =
+    termTable(spark, dir, kind, sources, terms, Seq.empty[String])(stores) {
+      case ((dictPath, gramPath), missing) =>
+        fuzzyVerified(Tables.parquetCached(spark, gramPath),
+            Tables.parquetCached(spark, dictPath), missing)
+          .collect().toSeq.groupBy(_.getString(0))
+          .map { case (t, rs) => t -> rs.map(_.getString(1)) }
+    }._2
 
   /** Served term-dictionary + character-bigram-postings store paths per
     * data dir — the materialized face of the fuzzy candidate index (`dict`
@@ -2772,7 +2792,7 @@ object SearchOps {
     require(terms.nonEmpty, s"query '$q' analyzed to no terms")
     // inline gram build over the given dict — the fully-lazy, composable
     // face; fuzzySearchIndexed serves the same relation from a store
-    val verified = fuzzyVerified(spark, dictGrams(dict), dict, terms)
+    val verified = fuzzyVerified(dictGrams(dict), dict, terms)
     val scored = postings.join(broadcast(verified), Seq("token"))
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("term")).cast("int").as("score"))
@@ -2789,59 +2809,57 @@ object SearchOps {
     * prune (Gravano bound) + short-term length-band branch → threshold-
     * bounded levenshtein verify. Returns the verified (term, token) pairs;
     * shared by the lazy [[fuzzyIndexedQuery]] and the served
-    * [[fuzzySearchIndexed]].
+    * [[fuzzySearchIndexed]]. Every query value (length, budget, bigram
+    * counts) is a literal of the plan, so nothing joins: over the stores
+    * the whole batch of terms resolves in one Spark job.
     */
-  private def fuzzyVerified(spark: SparkSession, grams: DataFrame,
-                            dict: DataFrame, terms: Seq[String]): DataFrame = {
-    import spark.implicits._
-    // (term, q_len, fuzz, gram, qcnt) — the query's bigram multiset, one
-    // small broadcast frame for ALL terms so the gram index is joined once
-    val qGramRows = terms.flatMap { t =>
-      val f = autoFuzz(t)
-      t.sliding(2).toSeq.filter(_.length == 2)
-        .groupBy(identity).toSeq.map { case (g, gs) =>
-          (t, t.length, f, g, gs.size)
-        }
-    }
-    val qdf = qGramRows.toDF("term", "q_len", "fuzz", "gram", "qcnt")
+  private def fuzzyVerified(grams: DataFrame, dict: DataFrame,
+                            terms: Seq[String]): DataFrame = {
+    val len = col("tok_len")
+    def band(t: String): Column = abs(len - t.length) <= autoFuzz(t)
+    def bound(t: String): Column = greatest(len, lit(t.length)) - 1 - 2 * autoFuzz(t)
+    // threshold-bounded levenshtein (early exit at 2 = the fuzziness:auto
+    // ceiling), run on the pruned set only
+    def verified(t: String): Column =
+      levenshtein(col("token"), lit(t), 2).between(0, autoFuzz(t))
+    /** (term, token) for every term of `ts` whose `keep` holds on a row. */
+    def pairs(cands: DataFrame, ts: Seq[String])(keep: String => Column): DataFrame =
+      cands.select(explode(array_compact(array(ts.map(t => when(keep(t), lit(t))): _*)))
+        .as("term"), col("token"))
 
-    val bound = greatest(col("tok_len"), col("q_len")) - 1 - lit(2) * col("fuzz")
-    // gram branch: length band in the JOIN (prunes before the aggregate),
-    // multiset-shared count per (term, token), positive-bound filter. The
-    // count filter is the classic q-gram bound (Gravano et al., VLDB 2001):
-    // one edit destroys at most q=2 bigrams, so strings within f edits
-    // share (as MULTISETS) at least max(|s|,|t|) − 1 − 2f bigrams.
-    val gramCands = grams
-      .join(broadcast(qdf),
-        grams("gram") === qdf("gram") &&
-          abs(col("tok_len") - col("q_len")) <= col("fuzz"))
-      .groupBy(col("term"), col("q_len"), col("fuzz"), col("token"), col("tok_len"))
-      .agg(sum(least(col("cnt"), col("qcnt").cast("long"))).as("shared"))
-      .filter(bound > 0 && col("shared") >= bound)
-      .select(col("term"), col("fuzz"), col("token"))
+    // gram branch: the multiset-shared count per (term, token) within the
+    // term's length band, then the positive-bound filter. The count filter
+    // is the classic q-gram bound (Gravano et al., VLDB 2001): one edit
+    // destroys at most q=2 bigrams, so strings within f edits share (as
+    // MULTISETS) at least max(|s|,|t|) − 1 − 2f bigrams. The rows that
+    // reach the aggregate are the dictionary's postings of the query's
+    // bigrams, so one partition holds them: no exchange.
+    val qGrams = terms.map(t => t -> t.sliding(2).toSeq.filter(_.length == 2)
+      .groupBy(identity).toSeq.map { case (g, gs) => (g, gs.size.toLong) }.sorted)
+      .filter(_._2.nonEmpty)
+    val gramCands = Option.when(qGrams.nonEmpty) {
+      val shared = qGrams.zipWithIndex.map { case ((t, gs), i) =>
+        val qcnt = gs.tail.foldLeft(when(col("gram") === gs.head._1, lit(gs.head._2))) {
+          case (c, (g, n)) => c.when(col("gram") === g, lit(n)) }.otherwise(lit(0L))
+        sum(when(band(t), least(col("cnt"), qcnt))).as(s"_g$i")
+      }
+      val byToken = grams
+        .filter(col("gram").isin(qGrams.flatMap(_._2.map(_._1)).distinct: _*) &&
+          qGrams.map(g => band(g._1)).reduce(_ || _))
+        .coalesce(1)
+        .groupBy(col("token"), len).agg(shared.head, shared.tail: _*)
+      val index = qGrams.map(_._1).zipWithIndex.toMap
+      pairs(byToken, qGrams.map(_._1))(t =>
+        bound(t) > 0 && col(s"_g${index(t)}") >= bound(t) && verified(t))
+    }
     // short-term branch (bound ≤ 0: the count filter can't prune — e.g. a
     // 3-letter term with 1 edit): length-banded DICTIONARY scan, disjoint
     // from the gram branch by the bound's sign. Never touches the corpus.
-    val shortMeta = terms.map(t => (t, t.length, autoFuzz(t)))
-      .toDF("term", "q_len", "fuzz")
-      .filter(col("q_len") - 1 - lit(2) * col("fuzz") <= 0)
-    val shortCands = dict
-      .join(broadcast(shortMeta),
-        abs(col("tok_len") - col("q_len")) <= col("fuzz") && bound <= 0)
-      .select(col("term"), col("fuzz"), col("token"))
-
-    // verify on the pruned set only: threshold-bounded levenshtein (early
-    // exit at 2 = the fuzziness:auto ceiling), per-term budget from the row.
-    // Catalyst pushes this predicate through the aggregate INTO the gram
-    // join condition (it references only grouping columns) — so the verify
-    // runs immediately after the gram equi-match + length band, which is
-    // the right physical plan: the equi-join already did the dictionary
-    // pruning, failing tokens never reach the shuffle, and the count bound
-    // above stays as the algorithmic guarantee (true matches always pass
-    // it, per the theorem) in lockstep with the oracle's replay.
-    gramCands.unionByName(shortCands)
-      .filter(levenshtein(col("token"), col("term"), 2).between(0, col("fuzz")))
-      .select(col("term"), col("token"))
+    val short = terms.filter(t => t.length - 1 - 2 * autoFuzz(t) <= 0)
+    val shortCands = Option.when(short.nonEmpty)(
+      pairs(dict.filter(short.map(band).reduce(_ || _)), short)(t =>
+        band(t) && bound(t) <= 0 && verified(t)))
+    (gramCands ++ shortCands).reduce(_ unionByName _)
   }
 
   // ---- DuckDB oracles: same tokenizer/stopwords/stemmers, replicated in SQL.

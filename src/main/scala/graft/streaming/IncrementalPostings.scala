@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * set — AQE decides); at warehouse scale the store is token-bucketed and
   * this becomes a MERGE, with searches reading only their terms' buckets.
   * Every search face already takes a postings DataFrame
-  * ([[SearchOps.postingsSearch]], [[SearchOps.rankedPostingsSearch]],
+  * ([[SearchOps.postingsSearch]], [[SearchOps.presenceHitsOf]],
   * [[SearchOps.fuzzyIndexedQuery]]) — they run unchanged over the
   * maintained store.
   */

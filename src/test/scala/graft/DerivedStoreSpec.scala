@@ -119,6 +119,22 @@ class DerivedStoreSpec extends SparkSpecBase {
       assert(Paths.get(p).getFileName.toString.matches("graft-postings-[0-9a-f]{16}"), p))
   }
 
+  test("documents rewrites leave one resolved path and one lock per (kind, dir)") {
+    val dir = src("registry")
+    def round(i: Int): (Int, Int) = {
+      AtomicSwap.replace(spark, (0 to i).map(j => (j.toLong, "en", "web", 12, s"alpha beta$j"))
+        .toDF("doc_id", "lang", "source", "n_chars", "text"), s"$dir/documents.parquet")
+      graft.ops.SearchOps.termLookup(spark, dir, 0L).collect()
+      graft.ops.SearchOps.termsAgg(spark, dir, 10).collect()
+      graft.ops.SearchOps.fuzzySearchIndexed(spark, dir, "alphaa", 10).collect()
+      DerivedStore.registrySizes(dir)
+    }
+    // resolved: the postings, fuzzydict and fuzzygrams stores; locks: those
+    // and the keywords, tokentotals and fuzzyterms memos
+    val sizes = (1 to 5).map(round)
+    assert(sizes === Seq.fill(5)((3, 6)), "(resolved, locks) entries after each rewrite")
+  }
+
   test("only Tables and DerivedStore read a content version; no ops object owns a concurrent map") {
     import scala.jdk.CollectionConverters._
     def sources(dir: String): Seq[java.nio.file.Path] = {

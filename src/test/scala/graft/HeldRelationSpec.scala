@@ -82,6 +82,20 @@ class HeldRelationSpec extends SparkSpecBase {
     assert(after.zip(before).forall { case (a, b) => a != b }, "the rewrite must resolve a new version")
   }
 
+  test("a customer rewrite alone is served by the multi-field face at once") {
+    val dir = Files.createTempDirectory("held-customer").toAbsolutePath.toString
+    def customers(names: String*): DataFrame =
+      names.zipWithIndex.map { case (n, i) => (i + 1L, n) }.toDF("c_custkey", "c_name")
+    AtomicSwap.replace(spark, docs((0L, "en", "alpha beta"), (1L, "fr", "beta gamma")),
+      s"$dir/documents.parquet")
+    AtomicSwap.replace(spark, customers("Ann", "Bob"), s"$dir/customer.parquet")
+    // "zeldaa" is one edit from "zelda", a name of doc 0 only the rewrite adds
+    assert(rows(SearchOps.multiFieldFuzzyIndexed(spark, dir, "zeldaa", 10)) === Nil)
+    AtomicSwap.replace(spark, customers("Ann", "Bob", "Zelda"), s"$dir/customer.parquet")
+    assert(rows(SearchOps.multiFieldFuzzyIndexed(spark, dir, "zeldaa", 10)) ===
+      Seq(Row(0L, "en", 1.5)))
+  }
+
   test("with the broadcast threshold at -1 every face serves the held path's rows from parquet") {
     val faces: Seq[(String, () => DataFrame)] = Seq(
       "term" -> (() => SearchOps.termLookup(spark, sf, 42L)),
@@ -102,7 +116,7 @@ class HeldRelationSpec extends SparkSpecBase {
         (rows(d), plan(d))
       }
       assert(parquetRows === heldRows, s"$face: parquet plan and held path disagree")
-      // the ranking faces differ only in where N comes from (a count job)
+      // the ranking faces hold N and df as plan literals either way
       if (!Set("ranked", "searchafter")(face))
         assert(parquetPlan != plan(held), s"$face: threshold -1 must leave the held path")
     }

@@ -355,9 +355,21 @@ class PlanSpec extends SparkSpecBase {
       s"expected a local-relation scan of the collected cells:\n$p")
   }
 
-  test("rankedSearch: served from the postings STORE — pushed term IN-list, broadcast idf join, partial top-k") {
+  /** The shape of the served ranked and fuzzy faces: the query's values
+    * (df, candidate tokens) are literals, so nothing joins, and the one
+    * shuffle is the doc-keyed aggregate's.
+    */
+  private def assertJoinFreeOneDocExchange(p: String): Unit = {
+    val finalPlan = p.split("== Initial Plan ==").head
+    assert(!finalPlan.contains("Join") && !finalPlan.contains("CartesianProduct"),
+      s"expected no join of any kind in:\n$p")
+    assert(finalPlan.linesIterator.count(_.contains("Exchange hashpartitioning(doc_id")) == 1,
+      s"expected exactly one doc_id exchange in:\n$p")
+  }
+
+  test("rankedSearch: served from the postings STORE — pushed term IN-list, df and idf as literals (no join), one doc_id exchange, partial top-k") {
     val p = plan(SearchOps.rankedSearch(spark, sf))
-    assert(p.contains("BroadcastHashJoin"), s"expected broadcast idf join in:\n$p")
+    assertJoinFreeOneDocExchange(p)
     assert(!p.contains("ru_en_analyze"),
       s"store-served search must not re-analyze the corpus:\n$p")
     assert(p.contains("PushedFilters: [In(token"),
@@ -425,7 +437,7 @@ class PlanSpec extends SparkSpecBase {
       s"expected the verified-token IN-list pushed into the store scan:\n$p")
     assert(!p.contains("levenshtein") && !p.contains("ru_en_analyze"),
       s"candidate resolution must not ride in the scoring plan:\n$p")
-    assert(p.contains("BroadcastHashJoin"), s"expected broadcast joins in:\n$p")
+    assertJoinFreeOneDocExchange(p)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"fuzzy index path must never plan a product join:\n$p")
     assert(p.contains("TakeOrderedAndProject"), s"expected partial top-k in:\n$p")
@@ -441,7 +453,7 @@ class PlanSpec extends SparkSpecBase {
       s"expected the verified-token IN-list pushed into the store scan:\n$p")
     assert(!p.contains("levenshtein") && !p.contains("ru_en_analyze"),
       s"candidate resolution / analysis must not ride in the scoring plan:\n$p")
-    assert(p.contains("BroadcastHashJoin"), s"expected broadcast joins in:\n$p")
+    assertJoinFreeOneDocExchange(p)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"indexed multifield must never plan a product join:\n$p")
     assert(p.contains("TakeOrderedAndProject"), s"expected partial top-k in:\n$p")

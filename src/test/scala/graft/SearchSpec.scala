@@ -998,6 +998,28 @@ class SearchSpec extends SparkSpecBase {
     assert(langOnly.map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet === scanLang)
   }
 
+  test("multiFieldFuzzyIndexed ≡ multiFieldFuzzy when a fuzzy expansion reaches a lang code") {
+    // "fr" is a body/title word of doc 0 AND the lang of doc 1: the typo
+    // "frr" expands to it, so the token-only IN-list pulls doc 1's lang
+    // posting, which must score nothing (lang takes the exact term only)
+    val dir = java.nio.file.Files.createTempDirectory("mf-lang-reach").toAbsolutePath.toString
+    Seq((0L, "en", "fr stream data"), (1L, "fr", "window agg"), (2L, "de", "stream window"))
+      .toDF("doc_id", "lang", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    Seq((1L, "Customer#000000001"), (4L, "Customer#000000004"))
+      .toDF("c_custkey", "c_name")
+      .write.parquet(s"$dir/customer.parquet")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
+    for (q <- Seq("frr", "fr frr", "frr windoe")) {
+      val scan = rows(SearchOps.multiFieldFuzzy(spark, dir, q, 100))
+      assert(scan.nonEmpty, s"'$q': vacuous query")
+      assert(rows(SearchOps.multiFieldFuzzyIndexed(spark, dir, q, 100)) === scan, s"'$q'")
+    }
+    assert(rows(SearchOps.multiFieldFuzzyIndexed(spark, dir, "frr", 100)) ===
+      Set((0L, "en", 2.0)))
+  }
+
   test("searchAfter: page 2 continues exactly where the ranked page 1 ends — disjoint, ordered, tiled") {
     val sf = "/root/testdata/sf0.001"
     val all = graft.ops.SearchOps.rankedSearch(spark, sf, k = 15).collect()

@@ -22,6 +22,11 @@ It also prints a no-regression verdict per metric against the metric's
 the tree's median is worse than the parent's by more than the bound,
 `unresolved` when the parent's own spread (IQR / median) exceeds the bound
 and not every tree run beats every parent run, `ok` otherwise.
+
+For `search` it then prints each side's per-face latency: the median and
+quartiles over the runs of each run's median per face, read from the
+`lat_face`/`lat_ms` samples of the run's `.bench_out` artifact in that
+side's tree, so a `tail_ms` change shows which faces moved.
 """
 import argparse
 import atexit
@@ -92,6 +97,34 @@ def run_side(tree, workload, seed, seconds):
     return json.loads(lines[-1])
 
 
+def face_medians(tree, workload, seed):
+    """Median latency (ms) per face of one plain run, from the `lat_face` and
+    `lat_ms` samples of its artifact in `tree`."""
+    path = os.path.join(tree, ".bench_out", f"result-{workload}-seed{seed}-trace0.json")
+    with open(path) as f:
+        plain = json.load(f)["phases"]["plain"]
+    by_face = {}
+    for face, ms in zip(plain["lat_face"], plain["lat_ms"]):
+        by_face.setdefault(face, []).append(ms)
+    return {face: statistics.median(ms) for face, ms in by_face.items()}
+
+
+def face_table(parent, change):
+    """Lines of per-face latency: per side, the (q1, median, q3) over runs of
+    each run's face median; `parent` and `change` are lists of the
+    face_medians of each run."""
+    lines = [f"  {'face':<12} {'parent median [q1, q3] ms':>30} {'change median [q1, q3] ms':>30}"]
+    faces = sorted({f for run in parent + change for f in run})
+    for face in faces:
+        cells = []
+        for runs in (parent, change):
+            xs = [run[face] for run in runs if face in run]
+            q = quartiles(xs) if xs else None
+            cells.append(f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]" if q else "-")
+        lines.append(f"  {face:<12} {cells[0]:>30} {cells[1]:>30}")
+    return lines
+
+
 def parent_checkout(commit):
     """The parent's tree: a detached worktree, removed at exit."""
     tree = tempfile.mkdtemp(prefix="ab-parent-", dir="/tmp")
@@ -119,13 +152,16 @@ def main(argv=None):
     parent_tree = parent_checkout(a.parent)
     runs = {}
     for w in a.workloads.split(","):
-        runs[w] = {"parent": [], "change": [], "seeds": []}
+        runs[w] = {"parent": [], "change": [], "seeds": [],
+                   "faces": {"parent": [], "change": []}}
         for i in range(a.pairs):
             seed = a.seed0 + i
             sides = [("parent", parent_tree), ("change", ROOT)]
             for side, tree in (sides if i % 2 == 0 else sides[::-1]):
                 res = run_side(tree, w, seed, seconds)
                 runs[w][side].append(res)
+                if w == "search":
+                    runs[w]["faces"][side].append(face_medians(tree, w, seed))
                 p50 = res["metrics"]["p50_ms"]["value"]
                 print(f"{w} pair {i} seed {seed} {side}: p50_ms {p50:.0f} failed {res['failed']}",
                       file=sys.stderr, flush=True)
@@ -148,6 +184,9 @@ def main(argv=None):
             print(f"  {name:<10} {fmt(v['parent']):>30} {fmt(v['change']):>30}"
                   f" {v['wins']:>3}/{v['pairs']:<2}  {'holds' if v['holds'] else '-':<6}"
                   f" {v['regression']} (bound {bound:g})")
+        if r["faces"]["parent"]:
+            print("  per-face latency, over the runs' medians:")
+            print("\n".join(face_table(r["faces"]["parent"], r["faces"]["change"])))
     if a.out:
         with open(a.out, "w") as f:
             json.dump({"summary": summary, "runs": runs}, f, indent=1)

@@ -1,6 +1,8 @@
 """Tests of the A/B pair verdict: python3 -m unittest discover -s tools -p 'test_*.py'"""
+import json
 import os
 import sys
+import tempfile
 import unittest
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -69,6 +71,32 @@ class RegressionTest(unittest.TestCase):
         self.assertEqual(ab_pairs.regression(parent, change, "lower", 0.25), "ok")
         higher = [p + 200 for p in parent]
         self.assertEqual(ab_pairs.regression(parent, higher, "higher", 0.25), "ok")
+
+
+class FaceLatencyTest(unittest.TestCase):
+    def test_face_medians_read_the_runs_artifact(self):
+        with tempfile.TemporaryDirectory() as tree:
+            os.makedirs(os.path.join(tree, ".bench_out"))
+            plain = {"lat_face": ["match", "fuzzy", "match", "match", "fuzzy"],
+                     "lat_ms": [300.0, 900.0, 100.0, 200.0, 700.0]}
+            path = os.path.join(tree, ".bench_out", "result-search-seed7-trace0.json")
+            with open(path, "w") as f:
+                json.dump({"phases": {"plain": plain}}, f)
+            self.assertEqual(ab_pairs.face_medians(tree, "search", 7),
+                             {"match": 200.0, "fuzzy": 800.0})
+
+    def test_face_table_shows_each_sides_median_and_quartiles(self):
+        parent = [{"match": 300.0, "fuzzy": 900.0}, {"match": 320.0, "fuzzy": 1000.0},
+                  {"match": 310.0, "fuzzy": 950.0}]
+        change = [{"match": 305.0, "fuzzy": 500.0}, {"match": 300.0, "fuzzy": 520.0},
+                  {"match": 315.0}]
+        lines = ab_pairs.face_table(parent, change)
+        self.assertEqual(len(lines), 3)  # header, fuzzy, match
+        fuzzy = lines[1].split()
+        self.assertEqual(fuzzy[0], "fuzzy")
+        self.assertEqual(fuzzy[1], "950")     # parent median
+        self.assertEqual(fuzzy[4], "510")     # change median of the runs that served fuzzy
+        self.assertTrue(lines[2].split()[0] == "match")
 
 
 if __name__ == "__main__":
