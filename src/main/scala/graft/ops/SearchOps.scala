@@ -527,8 +527,8 @@ object SearchOps {
     * frequency summed over expansions. Closes the last gap in the
     * match/phrase family (match → match_phrase → match_phrase_prefix).
     *
-    * Scale shape: the expansion set comes from the term DICTIONARY (the
-    * served vocab store — ~√corpus-sized, Lucene's term browse), collected
+    * Scale shape: the expansion set comes from the term DICTIONARY
+    * ([[termDict]] — ~√corpus-sized, Lucene's term browse), collected
     * driver-side (≤ maxExpansions rows, a model-artifact read) so the
     * positional read can bucket-route on the expansions exactly like the
     * fixed terms; the intersection is then [[phraseSearchIndexed]]'s plan
@@ -546,9 +546,9 @@ object SearchOps {
     val fixed = ph.init
     val prefix = ph.last
     // bounded collect: ≤ maxExpansions dictionary rows (ES's
-    // max_expansions contract), read from the vocab store — never the
+    // max_expansions contract), read from the dictionary — never the
     // corpus — so the expansions can join the driver-side bucket routing
-    val expansions = servedVocabDf(spark, dir)
+    val expansions = termDict(spark, dir)
       .filter(col("token").startsWith(prefix))
       .select(col("token")).orderBy(col("token").asc)
       .limit(maxExpansions)
@@ -957,8 +957,8 @@ object SearchOps {
     *   mfpostings (field, token, doc_id)  ← one corpus pass, all four
     *     fields flattened through a single explode (title/body/names
     *     analyzed, lang as a keyword posting)
-    *   mfdict / mfgrams                   ← union dictionary over the three
-    *     FUZZY fields + its bigram postings (lang is exact-only, so its
+    *   mftermdict                         ← [[dictOf]] the three FUZZY
+    *     fields, bigram multisets included (lang is exact-only, so its
     *     tokens never enter the fuzzy dictionary)
     *
     * A query expands each term ONCE against the union dictionary (field
@@ -978,7 +978,7 @@ object SearchOps {
     val terms = analyzeQuery(q).distinct.sorted
     require(terms.nonEmpty, s"query '$q' analyzed to no terms")
     val expanded = fuzzyCandidates(spark, dir, "mfterms", MultiFieldSources,
-      servedMultiFieldDict(spark, dir), terms)
+      multiFieldTermDict(spark, dir), terms)
     val fieldBoost = MultiFieldBoosts.tail.foldLeft(
       when(col("field") === MultiFieldBoosts.head._1, lit(MultiFieldBoosts.head._2))) {
       case (c, (f, b)) => c.when(col("field") === f, lit(b)) }
@@ -1002,8 +1002,8 @@ object SearchOps {
   /** Served field-tagged postings behind [[multiFieldFuzzyIndexed]]. The
     * title field is analyzed from the SAME 48-char slice as the scan face
     * (the cut can mint tokens absent from the body — e.g. a word truncated
-    * mid-way — which is exactly why the body-only fuzzydict store cannot
-    * serve this query).
+    * mid-way — which is exactly why the body [[termDict]] cannot serve
+    * this query).
     */
   private[graft] def servedMultiFieldPostings(spark: SparkSession,
                                               dir: String): DataFrame =
@@ -1025,18 +1025,14 @@ object SearchOps {
         .distinct()
     }
 
-  /** (dict, grams) store paths of the union fuzzy dictionary over the
-    * multi-field postings (lang excluded: it is exact-only).
+  /** The union fuzzy dictionary of the multi-field postings (lang
+    * excluded: it is exact-only): [[dictOf]] with tf = the number of fuzzy
+    * fields of a document that hold the token.
     */
-  private def servedMultiFieldDict(spark: SparkSession,
-                                   dir: String): (String, String) = {
-    val pd = DerivedStore.ensure(spark, "mfdict", dir, MultiFieldSources: _*)(
-      AtomicSwap.replace(spark, servedMultiFieldPostings(spark, dir)
-        .filter(col("field") =!= "lang").select(col("token")).distinct()
-        .withColumn("tok_len", length(col("token"))), _))
-    (pd, DerivedStore.ensure(spark, "mfgrams", dir, MultiFieldSources: _*)(
-      AtomicSwap.replace(spark, dictGrams(Tables.parquetCached(spark, pd)), _)))
-  }
+  private[graft] def multiFieldTermDict(spark: SparkSession, dir: String): DataFrame =
+    DerivedStore.parquet(spark, "mftermdict", dir, MultiFieldSources: _*)(
+      dictOf(servedMultiFieldPostings(spark, dir).filter(col("field") =!= "lang")
+        .groupBy(col("token"), col("doc_id")).agg(count(lit(1)).as("tf"))))
 
   /** Deterministic Cyrillic phrase panel — the mixed-language FIXTURE for
     * the Russian analyzer half (the test corpus is English-only). Each
@@ -1196,20 +1192,11 @@ object SearchOps {
     * `analyze` law), so the DuckDB oracle is unchanged. The aggregate is
     * dictionary-keyed (vocabulary-sized, ~√corpus), then TakeOrdered k.
     *
-    * Below the broadcast threshold the per-token totals are held on the
-    * driver per documents version, already in (n desc, token asc) order,
-    * and a query is a limit over that local relation: no Spark job (2 for
-    * the aggregate over the store).
+    * The counts are the term dictionary's `ttf` ([[topTerms]]): no Spark
+    * job while the dictionary is held.
     */
-  def termsAgg(spark: SparkSession, dir: String, k: Int = 100): DataFrame = {
-    def totals = servedPostings(spark, dir)
-      .groupBy("token")
-      .agg(sum(col("tf")).as("n"))
-    DerivedStore.held(spark, "tokentotals", dir, "documents.parquet")(
-      totals.coalesce(1).sortWithinPartitions(col("n").desc, col("token").asc))
-      .map(_.df.limit(k))
-      .getOrElse(totals.orderBy(col("n").desc, col("token").asc).limit(k))
-  }
+  def termsAgg(spark: SparkSession, dir: String, k: Int = 100): DataFrame =
+    topTerms(spark, dir, k).select(col("token"), col("ttf").as("n"))
 
   /** ES `terms_set` query — match documents containing at least
     * `minimum_should_match` of the given terms (the "m-of-n" query bool
@@ -1282,12 +1269,10 @@ object SearchOps {
     * (ES's `max_doc_count`, default 1), ordered ascending by doc count.
     * ES implements it with a CuckooFilter sketch precisely because a
     * naive "terms agg ordered asc" must materialize the whole vocabulary;
-    * here the postings store makes it exact AND cheap: doc frequency is
-    * `count(1)` over the store's unique (token, doc_id) grain — a
-    * dictionary-keyed aggregate (vocabulary-sized, ~√corpus) with the
-    * max_doc_count filter applied before anything sorts, so the top-k cut
-    * sees only the rare tail, not the dictionary. `k` bounds the face for
-    * the oracle; ES's own default cap is unbounded-ish (size 10 buckets).
+    * here the term dictionary's `df` ([[termDict]]) makes it exact AND
+    * cheap: the max_doc_count filter applies before anything sorts, so the
+    * top-k cut sees only the rare tail. `k` bounds the face for the
+    * oracle; ES's own default cap is unbounded-ish (size 10 buckets).
     *
     * The registered face runs max_doc_count=300: the rotated synthetic
     * vocabulary has NO true hapaxes (every corpus term's df ≥ 0.6% of
@@ -1299,12 +1284,11 @@ object SearchOps {
     */
   def rareTermsAgg(spark: SparkSession, dir: String,
                    maxDocCount: Long = 1L, k: Int = 100): DataFrame =
-    servedPostings(spark, dir)
-      .groupBy("token")
-      .agg(count(lit(1)).as("doc_count"))
-      .filter(col("doc_count") <= maxDocCount)
-      .orderBy(col("doc_count").asc, col("token").asc)
+    termDict(spark, dir)
+      .filter(col("df") <= maxDocCount)
+      .orderBy(col("df").asc, col("token").asc)
       .limit(k)
+      .select(col("token"), col("df").as("doc_count"))
 
   /** The scale path for repeated interactive search: a materialized postings
     * relation (token, doc_id, tf). Search = semi-join on query tokens —
@@ -1330,13 +1314,55 @@ object SearchOps {
     * token-bucketed and a query reads only its terms' buckets.
     */
   def servedPostings(spark: SparkSession, dir: String): DataFrame =
-    graft.streaming.IncrementalPostings.load(spark, servedPostingsPath(spark, dir))
+    graft.streaming.IncrementalPostings.load(spark,
+      DerivedStore.ensure(spark, "postings", dir, "documents.parquet")(
+        graft.streaming.IncrementalPostings.upsert(spark, _,
+          Tables.documents(spark, dir).select(col("doc_id"), col("text")))))
 
-  /** The path of the [[servedPostings]] store, built first if absent. */
-  private def servedPostingsPath(spark: SparkSession, dir: String): String =
-    DerivedStore.ensure(spark, "postings", dir, "documents.parquet")(
-      graft.streaming.IncrementalPostings.upsert(spark, _,
-        Tables.documents(spark, dir).select(col("doc_id"), col("text"))))
+  /** The term dictionary of (token, doc_id, tf) postings unique on (token,
+    * doc_id): per token `(token, tok_len, df, ttf, grams)`, `grams` its
+    * bigram multiset. Suggesters, terms aggregations, idf and the fuzzy
+    * index all read it, as Lucene reads its term dictionary.
+    */
+  private[graft] def dictOf(postings: DataFrame): DataFrame =
+    postings.groupBy(col("token"))
+      .agg(count(lit(1)).as("df"), sum(col("tf")).as("ttf"))
+      .select(col("token"), length(col("token")).as("tok_len"), col("df"),
+        col("ttf"), bigramsOf(col("token")).as("grams"))
+
+  /** A token's character-bigram multiset: `(gram, cnt)` per distinct bigram
+    * in first-occurrence order (`aaaa` → `aa:3`), empty below two chars. */
+  private def bigramsOf(token: Column): Column = {
+    val all = when(length(token) >= 2, transform(sequence(lit(1), length(token) - 1),
+      i => token.substr(i, lit(2)))).otherwise(array().cast("array<string>"))
+    transform(array_distinct(all), g => struct(g.as("gram"),
+      size(filter(all, x => x === g)).cast("long").as("cnt")))
+  }
+
+  /** [[dictOf]] the [[servedPostings]] store in (ttf desc, token asc)
+    * order, held on the driver per documents version like [[keywordColumns]].
+    */
+  private def heldTermDict(spark: SparkSession, dir: String): Option[DerivedStore.Held] =
+    DerivedStore.held(spark, "termdict", dir, "documents.parquet")(
+      dictOf(servedPostings(spark, dir)).coalesce(1)
+        .sortWithinPartitions(col("ttf").desc, col("token").asc))
+
+  /** The body term dictionary: the [[heldTermDict]] relation, or the
+    * `termdict` store above the broadcast threshold.
+    */
+  private[graft] def termDict(spark: SparkSession, dir: String): DataFrame =
+    heldTermDict(spark, dir).map(_.df).getOrElse(
+      DerivedStore.parquet(spark, "termdict", dir, "documents.parquet")(
+        dictOf(servedPostings(spark, dir))))
+
+  /** The `k` rows of the [[termDict]] with the largest `ttf`, ties by token:
+    * a limit over the held rows, which are in that order, so Catalyst folds
+    * it into a local relation (no Spark job); a top-k over the store above
+    * the threshold.
+    */
+  private[graft] def topTerms(spark: SparkSession, dir: String, k: Int): DataFrame =
+    heldTermDict(spark, dir).map(_.df).getOrElse(termDict(spark, dir)
+      .orderBy(col("ttf").desc, col("token").asc)).limit(k)
 
   /** Search via the postings index instead of a corpus scan. */
   def postingsSearch(postings: DataFrame, q: String, k: Int = 20): DataFrame = {
@@ -1378,8 +1404,8 @@ object SearchOps {
     * Scale shape: the IN-list prunes postings before anything groups (token-
     * bucketed index ⇒ k-bucket read); one hash-agg by doc_id;
     * TakeOrderedAndProject for the top-k. N and each term's df are numbers
-    * in the plan ([[rankedScores]]), so a warm query is 2 jobs: no count
-    * job, no df aggregate, no idf broadcast.
+    * in the plan ([[rankedScores]]), so a query is 2 jobs while the
+    * dictionary is held: no count job, no df aggregate, no idf broadcast.
     */
   def rankedSearch(spark: SparkSession, dir: String,
                    q: String = "data stream window", k: Int = 20): DataFrame =
@@ -1389,33 +1415,29 @@ object SearchOps {
 
   /** The unlimited (doc_id, score) relation behind [[rankedSearch]] — the
     * seam [[searchAfter]] pages over. Corpus size N ([[docCount]]) and each
-    * query term's document frequency are memoized per documents version
-    * ([[termTable]] kind `termdf`; the postings store is unique on
-    * (token, doc_id), so df = the term's row count), and `idf` is the
+    * query term's document frequency (the [[termDict]] rows of the query
+    * terms, looked up in the held rows, or one filtered read of the store
+    * above the threshold) are read first, and `idf` is the
     * literal `log(N / df)` inside the fixed-order fold: Catalyst folds it
     * with the same double ops the df aggregate ran.
     */
   private def rankedScores(spark: SparkSession, dir: String, q: String): DataFrame = {
     val terms = analyzeQuery(q).distinct.sorted // FIXED fold order, oracle-shared
     require(terms.nonEmpty, s"query '$q' analyzed to no terms")
-    val ((postingsPath, nDocs), dfs) = termTable(spark, dir, "termdf",
-        Seq("documents.parquet"), terms, 0L)(
-        (servedPostingsPath(spark, dir), docCount(spark, dir))) { case ((path, _), missing) =>
-      graft.streaming.IncrementalPostings.load(spark, path)
-        .filter(col("token").isInCollection(missing))
-        .coalesce(1) // the misses' postings only: one task, no exchange, one job
-        .groupBy("token").agg(count(lit(1)))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
+    val nDocs = docCount(spark, dir)
+    val dfs = heldTermDict(spark, dir)
+      .map(_.rows.filter(r => terms.contains(r.getAs[String]("token"))))
+      .getOrElse(termDict(spark, dir).filter(col("token").isInCollection(terms)).collect().toSeq)
+      .map(r => r.getAs[String]("token") -> r.getAs[Long]("df")).toMap
     val partials = terms.zipWithIndex.map { case (t, i) =>
       // a term no document holds matches no row: its idf is never read
-      val idf = if (dfs(t) == 0L) lit(0.0) else log(lit(nDocs.toDouble) / lit(dfs(t).toDouble))
+      val idf = dfs.get(t).fold(lit(0.0))(df => log(lit(nDocs.toDouble) / lit(df.toDouble)))
       sum(when(col("token") === t, col("tf").cast("double") * idf)).as(s"_s$i")
     }
     val total = terms.indices
       .map(i => coalesce(col(s"_s$i"), lit(0.0)))
       .reduce(_ + _) // left fold in term order — same associativity as the SQL
-    graft.streaming.IncrementalPostings.load(spark, postingsPath)
+    servedPostings(spark, dir)
       .filter(col("token").isInCollection(terms))
       .groupBy("doc_id")
       .agg(partials.head, partials.tail: _*)
@@ -1558,7 +1580,7 @@ object SearchOps {
         "documents.parquet")(AtomicSwap.replaceWith(spark, _) { staging =>
         val posts = servedPostings(spark, dir)
         val lens = posts.groupBy("doc_id").agg(sum("tf").cast("double").as("dl"))
-        val dfs = posts.groupBy("token").agg(count(lit(1)).as("df"))
+        val dfs = termDict(spark, dir).select(col("token"), col("df"))
         val rows = posts.join(lens, Seq("doc_id")).join(dfs, Seq("token"))
           .withColumn("tok_bucket",
             pmod(graft.ops.DedupOps.hash60(col("token")), lit(PostingsBuckets)))
@@ -1782,22 +1804,6 @@ object SearchOps {
         col("doc_id"), col("score"))
   }
 
-  /** Served (token, df, tok_len) vocabulary — the term DICTIONARY with
-    * document frequencies, aggregated once per corpus version from the
-    * postings store and served from parquet after that (the same
-    * version-stamped pattern as every other store). The suggester's whole
-    * read is a scan of THIS relation: a dictionary is ~√corpus-sized (tens
-    * of MB at 100 TB corpus scale), so per-query dictionary scans stay
-    * cheap no matter how large the corpus grows — exactly why ES serves
-    * suggestions from its term dictionary FST rather than the postings.
-    */
-  private def servedVocabDf(spark: SparkSession, dir: String): DataFrame =
-    DerivedStore.parquet(spark, "vocabdf", dir, "documents.parquet") {
-      servedPostings(spark, dir) // one row per (token, doc_id)
-        .groupBy(col("token")).agg(count(lit(1)).as("df"))
-        .withColumn("tok_len", length(col("token")))
-    }
-
   /** ES `term` suggester ("did you mean") with the default
     * `suggest_mode=missing` semantics: only query terms ABSENT from the
     * index get suggestions; for each, dictionary tokens within `maxEdits`
@@ -1806,10 +1812,12 @@ object SearchOps {
     * with the float similarity replaced by the exact integer edit distance
     * so both engines rank on identical keys — cut to `topK` per term.
     *
-    * Plan shape: the term-presence probe is a pushed token IN-list on the
-    * served vocab store (k-row collect — a model-artifact read); candidate
-    * generation is ONE vocab-store scan broadcast-hash-joined to the tiny
-    * query frame on the prefix char, with the length band and the
+    * Plan shape: the suggester reads the term dictionary ([[termDict]]) only:
+    * a dictionary is ~√corpus-sized, which is why ES serves suggestions
+    * from its term dictionary FST rather than the postings. The
+    * term-presence probe is a token IN-list on it (a ≤ k-row collect);
+    * candidate generation is ONE dictionary read broadcast-hash-joined to
+    * the tiny query frame on the prefix char, with the length band and the
     * threshold-bounded `levenshtein` (early exit above `maxEdits`) as
     * map-side filters — nothing about the corpus itself is ever scanned,
     * and the only shuffle is the per-term top-k window over the few
@@ -1822,15 +1830,15 @@ object SearchOps {
     require(maxEdits >= 1 && prefixLen >= 1 && topK >= 1)
     val terms = analyzeQuery(q).distinct
     require(terms.nonEmpty, s"query '$q' analyzed to no terms")
-    val v = servedVocabDf(spark, dir)
+    val v = termDict(spark, dir)
     val missing = terms.filterNot(vocabPresent(v, terms))
     suggestCandidates(spark, v, missing, maxEdits, prefixLen, topK)
       .orderBy(col("term").asc, col("dist").asc, col("df").desc,
         col("suggestion").asc)
   }
 
-  /** Term-presence probe: a pushed token IN-list on the vocab store, a
-    * ≤ |terms|-row collect (a model-artifact read).
+  /** Term-presence probe: a token IN-list on the dictionary, a ≤ |terms|-row
+    * collect (no Spark job while the dictionary is held).
     */
   private def vocabPresent(vocab: DataFrame, terms: Seq[String]): Set[String] =
     vocab.filter(col("token").isInCollection(terms))
@@ -1839,7 +1847,7 @@ object SearchOps {
   /** The ONE candidate-generation law both suggesters compile onto (and
     * both DuckDB oracles replay): per index-absent term, vocab tokens
     * within `maxEdits` sharing the first `prefixLen` chars, ranked
-    * (dist asc, df desc, token asc), cut to `topK`. One vocab-store scan
+    * (dist asc, df desc, token asc), cut to `topK`. One dictionary read
     * broadcast-hash-joined to the tiny query frame on the prefix, length
     * band + threshold levenshtein map-side.
     */
@@ -1916,7 +1924,7 @@ object SearchOps {
     * `Σ_pairs lp_fx(wᵢ₋₁,wᵢ)` with per-pair backoff — exact integer
     * ranking, no float ever compared.
     *
-    * Shape: candidate generation is the same single vocab-store scan as
+    * Shape: candidate generation is the same single dictionary read as
     * [[termSuggest]] (collected — bounded by positions × perTerm, a model
     * artifact); scoring reads the two LM stores with the candidate
     * pair/token IN-lists pushed into their scans, broadcasts those
@@ -1930,7 +1938,7 @@ object SearchOps {
     require(perTerm >= 1 && size >= 1)
     val terms = analyzeQuery(phrase)
     require(terms.length >= 2, s"phrase '$phrase' analyzed to < 2 terms")
-    val v = servedVocabDf(spark, dir)
+    val v = termDict(spark, dir)
     val present = vocabPresent(v, terms)
     val missing = terms.distinct.filterNot(present)
     val candMap: Map[String, Seq[String]] = if (missing.isEmpty) Map.empty
@@ -2153,15 +2161,17 @@ object SearchOps {
   /** ES `completion` suggester — prefix autocomplete over the INDEXED
     * vocabulary ranked by document frequency (the search-box analog of the
     * admin `q_prefix_search`, which autocompletes a stored COLUMN instead).
-    * One scan of the served vocab store with the prefix pushed as a
-    * `StringStartsWith` parquet filter + a partial top-k — at scale ES
-    * serves this from an FST; the vocab store is the relational same.
+    * One read of the term dictionary ([[termDict]]) with the prefix filter
+    * (pushed as a `StringStartsWith` parquet filter into the store above the
+    * threshold) + a partial top-k — at scale ES serves this from an FST;
+    * the dictionary is the relational same.
     */
   def completeSuggest(spark: SparkSession, dir: String,
                       prefix: String = "s", size: Int = 10): DataFrame = {
     require(prefix.nonEmpty && size >= 1)
-    servedVocabDf(spark, dir)
+    termDict(spark, dir)
       .filter(col("token").startsWith(prefix))
+      .coalesce(1) // a sort whose limit Catalyst dropped needs no range exchange
       .orderBy(col("df").desc, col("token").asc)
       .limit(size)
       .select(col("token").as("suggestion"), col("df"))
@@ -2352,7 +2362,7 @@ object SearchOps {
     DerivedStore.parquet(spark, "percolator", dir, "documents.parquet") {
       val w = org.apache.spark.sql.expressions.Window
         .orderBy(col("df").desc, col("token").asc)
-      val ranked = servedVocabDf(spark, dir).select(col("token"), col("df"))
+      val ranked = termDict(spark, dir).select(col("token"), col("df"))
         .withColumn("r", row_number().over(w)) // top-12: tiny, one task
         .filter(col("r") <= 12)
       val pairs = ranked.select((col("r") - 1).cast("long").as("query_id"),
@@ -2668,14 +2678,14 @@ object SearchOps {
         col("token"), round(col("score_raw"), 6).as("score"))
   }
 
-  /** Fuzzy-candidate index: character-bigram postings over the TERM
+  /** Fuzzy-candidate index: the character-bigram multisets of the TERM
     * DICTIONARY — the relational analog of ES's Levenshtein-automaton walk
     * over the term dict (the reference's fuzzy multi_match golden,
     * /root/reference/etl/json/ETLTests-2.json:94-131, is served this way by
     * Lucene). [[fuzzyQuery]] stays the scored-scan baseline; this path makes
     * an interactive fuzzy query sublinear in the corpus:
     *
-    *   dictionary (distinct tokens)  →  bigram postings (gram, token, cnt)
+    *   dictionary row (token, tok_len, grams = its bigram multiset)
     *   query term t, budget f        →  candidates = tokens sharing enough
     *     bigrams, verified with threshold-bounded levenshtein, THEN joined
     *     to the (token → doc) postings — the corpus is only ever touched
@@ -2689,10 +2699,10 @@ object SearchOps {
     * non-positive fall back to a length-banded dictionary scan (still never
     * a corpus scan); the two branches are disjoint on the bound's sign.
     *
-    * Scale shape: dict and gram postings are corpus-derived ONCE (at real
-    * scale: materialized, bucketed by gram); a query reads the postings of
-    * its own bigrams (an IN-list of literals), aggregates shared counts per
-    * candidate token, and runs levenshtein on that pruned set only —
+    * Scale shape: the dictionary ([[termDict]]) is corpus-derived ONCE; a
+    * query reads the length-banded rows, keeps the bigrams of its own (an
+    * IN-list of literals), aggregates shared counts per candidate token,
+    * and runs levenshtein on that pruned set only —
     * SearchSpec asserts the prune factor and result-equality with the scan
     * baseline.
     */
@@ -2701,8 +2711,8 @@ object SearchOps {
     val terms = analyzeQuery(q).distinct.sorted
     require(terms.nonEmpty, s"query '$q' analyzed to no terms")
     // The verified (term, token) set is QUERY-RESULT-sized — bounded by the
-    // gram prune, tens of tokens — so resolve it over the served dict/gram
-    // stores, memoized per term and documents version ([[fuzzyCandidates]]),
+    // gram prune, tens of tokens — so resolve it over the term dictionary,
+    // memoized per term and documents version ([[fuzzyCandidates]]),
     // and let the final postings pass run with the token IN-list PUSHED
     // into the store scan (static pruning; at scale the token-bucketed
     // store reads only those buckets). Each term's candidates are literals
@@ -2711,7 +2721,7 @@ object SearchOps {
     // dictionary per call and chained broadcast builds — 9 jobs, 0.14
     // cpuSec: pure dispatch floor.
     val expanded = fuzzyCandidates(spark, dir, "fuzzyterms", Seq("documents.parquet"),
-      servedFuzzyDict(spark, dir), terms)
+      termDict(spark, dir), terms)
     val scored = servedPostings(spark, dir)
       .filter(col("token").isInCollection(terms.flatMap(expanded).distinct))
       .groupBy(col("doc_id"))
@@ -2720,69 +2730,55 @@ object SearchOps {
     topWithLang(spark, dir, scored, k)
   }
 
-  /** Per-term values of one source version, the per-term state a search
-    * server memoizes (Lucene caches the automaton walk and term statistics
-    * per term): each `kind` keeps a term table per version of its
-    * `sources` ([[DerivedStore.memo]]) beside the `context` it is filled
-    * from (store paths, corpus size), so one table never mixes versions.
-    * Unseen terms are resolved together by `resolve`, one Spark job for the
-    * batch; repeated terms resolve on the driver; a term `resolve` leaves
-    * out gets `absent`. Serves the fuzzy and multi-field candidates and the
-    * ranked faces' document frequencies.
+  /** The most terms a [[TermTable]] holds: one that would pass it is
+    * cleared first, since the dictionary recomputes every entry.
     */
-  private def termTable[C, V](spark: SparkSession, dir: String, kind: String,
-      sources: Seq[String], terms: Seq[String], absent: V)(context: => C)
-      (resolve: (C, Seq[String]) => Map[String, V]): (C, Map[String, V]) = {
-    val (ctx, known) = DerivedStore.memo(spark, kind, dir, sources: _*) {
-      (context, scala.collection.concurrent.TrieMap.empty[String, V])
+  private[graft] val TermTableCap = 4096
+
+  /** Each term's fuzzy candidates in one version of a term dictionary
+    * `dict`, the per-term state a search server memoizes (Lucene caches the
+    * automaton walk per term). Unseen terms are resolved together by
+    * `resolve`, one Spark job for the batch; repeated terms resolve on the
+    * driver; a term `resolve` leaves out has no candidate.
+    */
+  private[graft] final class TermTable(val dict: DataFrame) {
+    private val known = scala.collection.concurrent.TrieMap.empty[String, Seq[String]]
+
+    def size: Int = known.size
+
+    def apply(terms: Seq[String])(resolve: (DataFrame, Seq[String]) => Map[String, Seq[String]])
+        : Map[String, Seq[String]] = {
+      val hit = terms.flatMap(t => known.get(t).map(t -> _)).toMap
+      val missing = terms.filterNot(hit.contains).distinct
+      val got = Option.when(missing.nonEmpty)(resolve(dict, missing)).getOrElse(Map.empty)
+      val fresh = missing.map(t => t -> got.getOrElse(t, Nil)).toMap
+      if (fresh.nonEmpty) known.synchronized {
+        if (known.size + fresh.size > TermTableCap) known.clear()
+        if (fresh.size <= TermTableCap) known ++= fresh
+      }
+      hit ++ fresh
     }
-    val missing = terms.filterNot(known.contains)
-    if (missing.nonEmpty) {
-      val got = resolve(ctx, missing)
-      missing.foreach(t => known.put(t, got.getOrElse(t, absent)))
-    }
-    (ctx, terms.map(t => t -> known(t)).toMap)
   }
 
-  /** Each term's verified fuzzy candidates in the (dict, grams) `stores`
-    * of `dir` — the expansion step shared by [[fuzzySearchIndexed]] and
+  /** The [[TermTable]] of `kind` over the current version of `sources` in
+    * `dir` ([[DerivedStore.memo]]), so one table never mixes versions.
+    */
+  private[graft] def termTable(spark: SparkSession, dir: String, kind: String,
+      sources: Seq[String])(dict: => DataFrame): TermTable =
+    DerivedStore.memo(spark, kind, dir, sources: _*)(new TermTable(dict))
+
+  /** Each term's verified fuzzy candidates in the term dictionary `dict` of
+    * `dir` — the expansion step shared by [[fuzzySearchIndexed]] and
     * [[multiFieldFuzzyIndexed]]: a deterministic function of (dictionary
     * version, term, fuzz budget), so a [[termTable]] per dictionary `kind`.
     */
   private def fuzzyCandidates(spark: SparkSession, dir: String, kind: String,
-      sources: Seq[String], stores: => (String, String),
+      sources: Seq[String], dict: => DataFrame,
       terms: Seq[String]): Map[String, Seq[String]] =
-    termTable(spark, dir, kind, sources, terms, Seq.empty[String])(stores) {
-      case ((dictPath, gramPath), missing) =>
-        fuzzyVerified(Tables.parquetCached(spark, gramPath),
-            Tables.parquetCached(spark, dictPath), missing)
-          .collect().toSeq.groupBy(_.getString(0))
-          .map { case (t, rs) => t -> rs.map(_.getString(1)) }
-    }._2
-
-  /** Served term-dictionary + character-bigram-postings store paths per
-    * data dir — the materialized face of the fuzzy candidate index (`dict`
-    * = (token, tok_len); `grams` = (token, tok_len, gram, cnt), at
-    * warehouse scale bucketed by gram). Derived from the SAME served
-    * postings store the scoring pass reads, so the dictionary can never
-    * drift from the corpus it indexes.
-    */
-  private def servedFuzzyDict(spark: SparkSession, dir: String): (String, String) = {
-    val pd = DerivedStore.ensure(spark, "fuzzydict", dir, "documents.parquet")(
-      AtomicSwap.replace(spark, servedPostings(spark, dir).select(col("token")).distinct()
-        .withColumn("tok_len", length(col("token"))), _))
-    (pd, DerivedStore.ensure(spark, "fuzzygrams", dir, "documents.parquet")(
-      AtomicSwap.replace(spark, dictGrams(Tables.parquetCached(spark, pd)), _)))
-  }
-
-  /** Character-bigram postings over a (token, tok_len) dictionary. */
-  private def dictGrams(dict: DataFrame): DataFrame = dict
-    .filter(col("tok_len") >= 2)
-    .select(col("token"), col("tok_len"),
-      explode(transform(sequence(lit(1), col("tok_len") - 1),
-        i => col("token").substr(i, lit(2)))).as("gram"))
-    .groupBy(col("token"), col("tok_len"), col("gram"))
-    .agg(count(lit(1)).as("cnt"))
+    termTable(spark, dir, kind, sources)(dict)(terms) { (d, missing) =>
+      fuzzyVerified(d, missing).collect().toSeq.groupBy(_.getString(0))
+        .map { case (t, rs) => t -> rs.map(_.getString(1)) }
+    }
 
   /** The materialized-index face: search over prebuilt postings + dict. */
   def fuzzyIndexedQuery(spark: SparkSession, postings: DataFrame,
@@ -2790,9 +2786,9 @@ object SearchOps {
                         q: String, k: Int = 20): DataFrame = {
     val terms = analyzeQuery(q).distinct.sorted
     require(terms.nonEmpty, s"query '$q' analyzed to no terms")
-    // inline gram build over the given dict — the fully-lazy, composable
-    // face; fuzzySearchIndexed serves the same relation from a store
-    val verified = fuzzyVerified(dictGrams(dict), dict, terms)
+    // inline gram build over the given (token, tok_len) dict — the
+    // fully-lazy, composable face; fuzzySearchIndexed reads [[termDict]]
+    val verified = fuzzyVerified(dict.withColumn("grams", bigramsOf(col("token"))), terms)
     val scored = postings.join(broadcast(verified), Seq("token"))
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("term")).cast("int").as("score"))
@@ -2805,16 +2801,15 @@ object SearchOps {
       .orderBy(col("score").desc, col("doc_id").asc)
   }
 
-  /** The fuzzy candidate pipeline: query bigram multiset → gram-count
-    * prune (Gravano bound) + short-term length-band branch → threshold-
-    * bounded levenshtein verify. Returns the verified (term, token) pairs;
-    * shared by the lazy [[fuzzyIndexedQuery]] and the served
-    * [[fuzzySearchIndexed]]. Every query value (length, budget, bigram
-    * counts) is a literal of the plan, so nothing joins: over the stores
-    * the whole batch of terms resolves in one Spark job.
+  /** The fuzzy candidate pipeline over a (token, tok_len, grams) dictionary:
+    * query bigram multiset → gram-count prune (Gravano bound) + short-term
+    * length-band branch → threshold-bounded levenshtein verify. Returns the
+    * verified (term, token) pairs; shared by the lazy [[fuzzyIndexedQuery]]
+    * and the served [[fuzzySearchIndexed]]. Every query value (length,
+    * budget, bigram counts) is a literal of the plan, so nothing joins: the
+    * whole batch of terms resolves in one Spark job.
     */
-  private def fuzzyVerified(grams: DataFrame, dict: DataFrame,
-                            terms: Seq[String]): DataFrame = {
+  private def fuzzyVerified(dict: DataFrame, terms: Seq[String]): DataFrame = {
     val len = col("tok_len")
     def band(t: String): Column = abs(len - t.length) <= autoFuzz(t)
     def bound(t: String): Column = greatest(len, lit(t.length)) - 1 - 2 * autoFuzz(t)
@@ -2832,8 +2827,8 @@ object SearchOps {
     // is the classic q-gram bound (Gravano et al., VLDB 2001): one edit
     // destroys at most q=2 bigrams, so strings within f edits share (as
     // MULTISETS) at least max(|s|,|t|) − 1 − 2f bigrams. The rows that
-    // reach the aggregate are the dictionary's postings of the query's
-    // bigrams, so one partition holds them: no exchange.
+    // reach the aggregate are the banded tokens' bigrams among the query's,
+    // so one partition holds them: no exchange.
     val qGrams = terms.map(t => t -> t.sliding(2).toSeq.filter(_.length == 2)
       .groupBy(identity).toSeq.map { case (g, gs) => (g, gs.size.toLong) }.sorted)
       .filter(_._2.nonEmpty)
@@ -2843,9 +2838,9 @@ object SearchOps {
           case (c, (g, n)) => c.when(col("gram") === g, lit(n)) }.otherwise(lit(0L))
         sum(when(band(t), least(col("cnt"), qcnt))).as(s"_g$i")
       }
-      val byToken = grams
-        .filter(col("gram").isin(qGrams.flatMap(_._2.map(_._1)).distinct: _*) &&
-          qGrams.map(g => band(g._1)).reduce(_ || _))
+      val byToken = dict.filter(qGrams.map(g => band(g._1)).reduce(_ || _))
+        .select(col("token"), len, inline(col("grams")))
+        .filter(col("gram").isin(qGrams.flatMap(_._2.map(_._1)).distinct: _*))
         .coalesce(1)
         .groupBy(col("token"), len).agg(shared.head, shared.tail: _*)
       val index = qGrams.map(_._1).zipWithIndex.toMap

@@ -1211,18 +1211,17 @@ object TextOps {
     *
     * Served shape: token occurrences come from the maintained postings
     * store (no re-tokenization — the same store BM25/MLT/sig-terms read);
-    * the top-K vocab is a TakeOrderedAndProject over the store's token
-    * aggregate (never a global rank window) and rides a broadcast into a
-    * left join marking covered rows; one keyed aggregate per (lang,
-    * source) finishes. Coverage crosses engines in 2^20 fixed point (the
+    * the top-K vocab is the term dictionary's ([[SearchOps.topTerms]]: a
+    * limit over the held dictionary, a TakeOrderedAndProject over the store,
+    * never a global rank window) and rides a broadcast into a left join
+    * marking covered rows; one keyed aggregate per (lang, source)
+    * finishes. Coverage crosses engines in 2^20 fixed point (the
     * exact-integer sums divide once, then an exact power-of-two shift) —
     * the q_sig_terms lesson applied from day one.
     */
   def vocabCoverage(spark: SparkSession, dir: String, topK: Int = 100): DataFrame = {
     val p = SearchOps.servedPostings(spark, dir) // (token, doc_id, tf)
-    val vocab = p.groupBy("token").agg(sum("tf").as("cnt"))
-      .orderBy(col("cnt").desc, col("token").asc)
-      .limit(topK)
+    val vocab = SearchOps.topTerms(spark, dir, topK)
       .select(col("token"), lit(1).as("in_vocab"))
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("source"))

@@ -16,13 +16,6 @@ class HeldRelationSpec extends SparkSpecBase {
 
   private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
 
-  private def withThreshold[A](v: String)(body: => A): A = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, v)
-    try body finally spark.conf.set(key, prev)
-  }
-
   private def docs(rs: (Long, String, String)*): DataFrame =
     rs.map { case (id, lang, text) => (id, lang, "web", text.length, text) }
       .toDF("doc_id", "lang", "source", "n_chars", "text")
@@ -58,7 +51,7 @@ class HeldRelationSpec extends SparkSpecBase {
     // (this one's, or the rewrite's components, which are all above it)
     assert(rows(SimilarityOps.annSq8(spark, dir, 3L, shortlist = 1, k = 1)) ===
       Seq(Row(3L, 0, 1.0)))
-    val kinds = Seq("keywords", "tokentotals", "corpusmix", "topngrams-5", "fuzzyterms",
+    val kinds = Seq("keywords", "termdict", "corpusmix", "topngrams-5", "fuzzyterms",
       "sq8model")
     val before = kinds.map(DerivedStore.memoVersions(_, dir))
     assert(before.forall(_.size == 1), s"expected one memoized version each: $before")
@@ -82,6 +75,34 @@ class HeldRelationSpec extends SparkSpecBase {
     assert(after.zip(before).forall { case (a, b) => a != b }, "the rewrite must resolve a new version")
   }
 
+  test("a documents rewrite is served by the term dictionary's readers at once") {
+    val dir = Files.createTempDirectory("held-dict").toAbsolutePath.toString
+    val path = s"$dir/documents.parquet"
+    AtomicSwap.replace(spark, docs((1L, "en", "alpha beta"), (2L, "fr", "beta gamma")), path)
+    assert(rows(SearchOps.completeSuggest(spark, dir, "de", 10)) === Nil)
+    // "deltb" is one edit from "delta", a token only the rewrite adds
+    assert(rows(SearchOps.termSuggest(spark, dir, "deltb")) === Nil)
+    assert(rows(SearchOps.rareTermsAgg(spark, dir, 1L, 10)) ===
+      Seq(Row("alpha", 1L), Row("gamma", 1L)))
+    // N = 2, df(gamma) = 1: idf ln 2
+    assert(rows(SearchOps.rankedSearch(spark, dir, "gamma", 10)) === Seq(Row(2L, 0.693147)))
+    val before = DerivedStore.memoVersions("termdict", dir)
+
+    AtomicSwap.replace(spark, docs((1L, "de", "alpha beta"), (2L, "fr", "beta gamma"),
+      (3L, "es", "delta delta gamma")), path)
+    assert(rows(SearchOps.completeSuggest(spark, dir, "de", 10)) === Seq(Row("delta", 1L)))
+    assert(rows(SearchOps.termSuggest(spark, dir, "deltb")) ===
+      Seq(Row("deltb", "delta", 1, 1L)))
+    assert(rows(SearchOps.rareTermsAgg(spark, dir, 1L, 10)) ===
+      Seq(Row("alpha", 1L), Row("delta", 1L)))
+    // N = 3, df(gamma) = 2: idf ln 1.5 (a stale df of 1 would score ln 3)
+    assert(rows(SearchOps.rankedSearch(spark, dir, "gamma", 10)) ===
+      Seq(Row(2L, 0.405465), Row(3L, 0.405465)))
+    val after = DerivedStore.memoVersions("termdict", dir)
+    assert(before.size == 1 && after.size == 1 && before != after,
+      s"expected one held dictionary per version: $before then $after")
+  }
+
   test("a customer rewrite alone is served by the multi-field face at once") {
     val dir = Files.createTempDirectory("held-customer").toAbsolutePath.toString
     def customers(names: String*): DataFrame =
@@ -100,6 +121,8 @@ class HeldRelationSpec extends SparkSpecBase {
     val faces: Seq[(String, () => DataFrame)] = Seq(
       "term" -> (() => SearchOps.termLookup(spark, sf, 42L)),
       "termsagg" -> (() => SearchOps.termsAgg(spark, sf, 100)),
+      "complete" -> (() => SearchOps.completeSuggest(spark, sf, "s", 10)),
+      "rareterms" -> (() => SearchOps.rareTermsAgg(spark, sf, 300L, 100)),
       "match" -> (() => SearchOps.matchQueryIndexed(spark, sf, "data stream window", 20)),
       "ranked" -> (() => SearchOps.rankedSearch(spark, sf, "data stream window", 20)),
       "searchafter" -> (() => SearchOps.searchAfter(spark, sf, "data stream window", 5, 10)),

@@ -587,11 +587,18 @@ class PlanSpec extends SparkSpecBase {
   }
 
   test("vocabCoverage: vocab is a partial top-k (never a global rank window) riding a broadcast") {
-    val p = plan(graft.ops.TextOps.vocabCoverage(spark, sf))
+    // over the termdict store the top-K is a TakeOrderedAndProject; over
+    // the held dictionary, already in top-K order, it is a folded limit
+    val p = withThreshold("-1")(plan(graft.ops.TextOps.vocabCoverage(spark, sf)))
+    val held = plan(graft.ops.TextOps.vocabCoverage(spark, sf))
     assert(p.contains("TakeOrderedAndProject"),
       s"expected the vocab top-K as TakeOrderedAndProject in:\n$p")
-    assert(!p.contains("Window"), s"no rank window may appear:\n$p")
-    assert(p.contains("BroadcastHashJoin"), s"expected broadcast vocab join in:\n$p")
+    assert(held.contains("LocalTableScan") && !held.contains("Sort"),
+      s"expected the held top-K as a local relation, unsorted, in:\n$held")
+    for (q <- Seq(p, held)) {
+      assert(!q.contains("Window"), s"no rank window may appear:\n$q")
+      assert(q.contains("BroadcastHashJoin"), s"expected broadcast vocab join in:\n$q")
+    }
   }
 
   test("functionScore trio: popularity SERVED from the store — no lineitem aggregate in any plan") {
@@ -808,12 +815,20 @@ class PlanSpec extends SparkSpecBase {
     assert(!ps.contains("ru_en_analyze"), s"suggester must not re-analyze:\n$ps")
     assert(ps.contains("BroadcastHashJoin"), s"prefix join must broadcast the query frame:\n$ps")
     assert(ps.contains("levenshtein"), s"threshold levenshtein must gate map-side:\n$ps")
-    // completeSuggest: StartsWith pushed into the vocab store scan; top-k partial
-    val pc = plan(graft.ops.SearchOps.completeSuggest(spark, sf))
+    // completeSuggest: StartsWith pushed into the termdict store scan; top-k
+    // partial. Over the held dictionary no file is scanned at all
+    val pc = withThreshold("-1")(plan(graft.ops.SearchOps.completeSuggest(spark, sf)))
     assert(pc.contains("StringStartsWith") || pc.contains("StartsWith"),
       s"prefix must push into the store scan:\n$pc")
     assert(pc.contains("TakeOrderedAndProject"), s"size cut must be a partial top-k:\n$pc")
     assert(!pc.contains("documents.parquet"), s"completion must not scan the corpus:\n$pc")
+    // and, with the limit dropped by Catalyst, sorts its one partition
+    // without a range exchange
+    val pcHeld = plan(graft.ops.SearchOps.completeSuggest(spark, sf))
+    assert(pcHeld.contains("LocalTableScan") && !pcHeld.contains("FileScan"),
+      s"completion over the held dictionary must scan no file:\n$pcHeld")
+    assert(!pcHeld.contains("rangepartitioning"),
+      s"completion over the held dictionary must not range-exchange:\n$pcHeld")
     // wildcardSearch: postings-store only; LIKE evaluated map-side; no corpus
     val pw = plan(graft.ops.SearchOps.wildcardSearch(spark, sf))
     assert(!pw.contains("documents.parquet"), s"wildcard must not scan the corpus:\n$pw")

@@ -741,7 +741,7 @@ class SearchSpec extends SparkSpecBase {
     // scan predicate over the raw dictionary or corpus
     val plan = q.queryExecution.optimizedPlan.toString()
     val levPos = plan.indexOf("levenshtein")
-    val gramGenPos = plan.indexOf("explode(transform(sequence")
+    val gramGenPos = plan.indexOf("inline(grams")
     assert(levPos >= 0 && gramGenPos >= 0,
       s"expected levenshtein + gram expansion in:\n$plan")
     assert(levPos < gramGenPos, // top-down print: verify above the expansion
@@ -1018,6 +1018,72 @@ class SearchSpec extends SparkSpecBase {
     }
     assert(rows(SearchOps.multiFieldFuzzyIndexed(spark, dir, "frr", 100)) ===
       Set((0L, "en", 2.0)))
+  }
+
+  test("dictOf: df, ttf, char length and bigram multiset per token; mftermdict holds no lang token") {
+    import org.apache.spark.sql.Row
+    val postings = Seq(("данн", 1L, 2), ("данн", 2L, 1), ("stream", 1L, 3),
+      ("aaaa", 2L, 1), ("x", 3L, 4), ("поток", 3L, 1)).toDF("token", "doc_id", "tf")
+    val dict = SearchOps.dictOf(postings).collect().map(r => r.getAs[String]("token") -> r).toMap
+    val expected = postings.groupBy("token")
+      .agg(count(lit(1)).as("df"), sum("tf").as("ttf")).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(dict.keySet === expected.keySet)
+    def grams(t: String): Map[String, Long] =
+      dict(t).getAs[Seq[Row]]("grams").map(g => g.getAs[String]("gram") -> g.getAs[Long]("cnt")).toMap
+    for ((t, r) <- dict) {
+      assert((r.getAs[Long]("df"), r.getAs[Long]("ttf")) === expected(t), t)
+      assert(r.getAs[Int]("tok_len") === t.length, t) // chars, not UTF-8 bytes
+      assert(grams(t) === t.sliding(2).filter(_.length == 2).toSeq.groupBy(identity)
+        .map { case (g, gs) => g -> gs.size.toLong }, t)
+    }
+    assert(dict("поток").getAs[Int]("tok_len") === 5)
+    assert(grams("данн") === Map("да" -> 1L, "ан" -> 1L, "нн" -> 1L))
+    assert(dict("aaaa").getAs[Seq[Row]]("grams").map(g => (g.getString(0), g.getLong(1))) ===
+      Seq(("aa", 3L)))
+    assert(grams("x").isEmpty)
+    assert(SearchOps.dictOf(postings.filter(lit(false))).collect().isEmpty)
+
+    // the multi-field dictionary: every non-lang token, no lang code
+    val dir = java.nio.file.Files.createTempDirectory("mf-dict").toAbsolutePath.toString
+    Seq((0L, "zq", "alpha stream"), (1L, "vk", "window beta"))
+      .toDF("doc_id", "lang", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    Seq((1L, "Zelda")).toDF("c_custkey", "c_name").write.parquet(s"$dir/customer.parquet")
+    val mf = SearchOps.servedMultiFieldPostings(spark, dir)
+    def tokens(df: org.apache.spark.sql.DataFrame) = df.select("token").as[String].collect().toSet
+    assert(tokens(mf.filter(col("field") === "lang")) === Set("zq", "vk"))
+    val mfDict = SearchOps.multiFieldTermDict(spark, dir)
+    assert(tokens(mfDict) === tokens(mf.filter(col("field") =!= "lang")))
+    assert(tokens(mfDict).contains("zelda") && !tokens(mfDict).exists(Set("zq", "vk")))
+  }
+
+  test("termTable holds at most TermTableCap terms past overflow and answers every term") {
+    val dir = java.nio.file.Files.createTempDirectory("term-table-cap").toAbsolutePath.toString
+    Seq((0L, "alpha")).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val cap = SearchOps.TermTableCap
+    val table = SearchOps.termTable(spark, dir, "termtablecap",
+      Seq("documents.parquet"))(spark.emptyDataFrame)
+    var resolved = 0
+    // job-free: a term ending in 0 has one candidate, every other none
+    def resolve(dict: org.apache.spark.sql.DataFrame, ts: Seq[String]): Map[String, Seq[String]] = {
+      resolved += ts.size
+      ts.filter(_.endsWith("0")).map(t => t -> Seq(t.toUpperCase)).toMap
+    }
+    def want(ts: Seq[String]) = ts.map(t => t -> (if (t.endsWith("0")) Seq(t.toUpperCase) else Nil)).toMap
+    val terms = (0 until 2 * cap + 7).map(i => s"t$i")
+    for (batch <- terms.grouped(100)) {
+      assert(table(batch)(resolve) === want(batch))
+      assert(table.size <= cap, s"${table.size} terms held, cap $cap")
+    }
+    assert(resolved === terms.size, "each term resolves once")
+    val last = terms.takeRight(7)
+    assert(table(last)(resolve) === want(last))
+    assert(resolved === terms.size, "a held term resolves on the driver")
+    // one batch wider than the cap is answered, and not held
+    val wide = (0 to cap).map(i => s"w$i")
+    assert(table(wide)(resolve) === want(wide))
+    assert(table.size <= cap, s"${table.size} terms held, cap $cap")
   }
 
   test("searchAfter: page 2 continues exactly where the ranked page 1 ends — disjoint, ordered, tiled") {

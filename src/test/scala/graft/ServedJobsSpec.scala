@@ -73,7 +73,7 @@ class ServedJobsSpec extends SparkSpecBase {
 
   /** (face, query holding one term never queried before, most jobs). */
   private val coldFaces: Seq[(String, String => DataFrame, Int)] = Seq(
-    ("searchafter", t => SearchOps.searchAfter(spark, sf01, s"data stream $t", 5, 10), 3),
+    ("searchafter", t => SearchOps.searchAfter(spark, sf01, s"data stream $t", 5, 10), 2),
     ("fuzzy", t => SearchOps.fuzzySearchIndexed(spark, sf01, s"streem $t", 20), 3),
     ("multifield", t => SearchOps.multiFieldFuzzyIndexed(spark, sf01, s"custommer $t", 20), 3))
 

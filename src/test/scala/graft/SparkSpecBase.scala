@@ -31,4 +31,14 @@ abstract class SparkSpecBase extends AnyFunSuite {
   protected def causeChain(t: Throwable): String =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
       .map(x => Option(x.getMessage).getOrElse("")).mkString(" | ")
+
+  /** `body` with `spark.sql.autoBroadcastJoinThreshold` at `v`: at -1 no
+    * relation is held on the driver and every face plans over its stores.
+    */
+  protected def withThreshold[A](v: String)(body: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, v)
+    try body finally spark.conf.set(key, prev)
+  }
 }
