@@ -148,17 +148,18 @@ object DerivedStore {
   }
 
   /** `df` collected and [[memo]]ized on the driver, for the session that
-    * asks (another session collects again), while the source's listed bytes
-    * are below `spark.sql.autoBroadcastJoinThreshold`,
-    * the size Spark itself would ship to every task; above it (or with the
-    * threshold at -1) this is `None` and the caller keeps its parquet plan.
+    * asks (another session collects again), while the `sources` together
+    * list fewer bytes than `spark.sql.autoBroadcastJoinThreshold`, the size
+    * Spark itself would ship to every task; above it (or with the threshold
+    * at -1, or a source absent) this is `None` and the caller keeps its
+    * parquet plan. A rewrite of any source is a new version, as for [[memo]].
     */
-  def held(spark: SparkSession, kind: String, dir: String, source: String)
+  def held(spark: SparkSession, kind: String, dir: String, sources: String*)
           (df: => DataFrame): Option[Held] = {
     val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val bytes = Tables.listedBytes(spark, s"$dir/$source")
-    if (bytes < 0 || bytes >= limit) None
-    else Some(memoUsable(spark, kind, dir, source)((h: Held) => h.df.sparkSession eq spark) {
+    val bytes = sources.map(s => Tables.listedBytes(spark, s"$dir/$s"))
+    if (bytes.exists(_ < 0) || bytes.sum >= limit) None
+    else Some(memoUsable(spark, kind, dir, sources: _*)((h: Held) => h.df.sparkSession eq spark) {
       val d = df
       val rows = d.collect()
       new Held(spark.createDataFrame(java.util.Arrays.asList(rows: _*), d.schema),

@@ -150,6 +150,30 @@ object Tables {
     catch { case _: java.io.FileNotFoundException => -1L }
   }
 
+  /** Whether `df` reads one unbucketed file relation that Spark plans as ONE
+    * split: its listed files, packed one `spark.sql.files.openCostInBytes`
+    * apart, fit in the split size Spark derives from
+    * `spark.sql.files.maxPartitionBytes`, the open cost and the session's
+    * parallelism (`FilePartition.maxSplitBytes`, the size the file scan
+    * splits and packs by). False for any other input.
+    */
+  private[graft] def oneSplit(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation,
+      LogicalRelation}
+    df.queryExecution.analyzed.collectLeaves() match {
+      case Seq(l: LogicalRelation) => l.relation match {
+        case r: HadoopFsRelation if r.bucketSpec.isEmpty =>
+          val parts = r.location.listFiles(Nil, Nil)
+          val lens = parts.flatMap(_.files.map(_.getLen))
+          val open = df.sparkSession.sessionState.conf.filesOpenCostInBytes
+          lens.sum + open * (lens.size - 1).max(0) <=
+            FilePartition.maxSplitBytes(df.sparkSession, parts)
+        case _ => false
+      }
+      case _ => false
+    }
+  }
+
   /** [[documents]] with the compute-spread guard — use at scan faces whose
     * per-row work (analyze / hash / score) dominates the row bytes.
     */

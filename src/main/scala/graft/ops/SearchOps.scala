@@ -5,6 +5,7 @@ import graft.sinks.AtomicSwap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Full-text-search operators: the Spark re-expression of the reference's
   * Elasticsearch query surface (reference: etl/json/es_movies.json:4-40
@@ -137,9 +138,11 @@ object SearchOps {
     * aggregate over the few matching postings rows, partial top-k. At
     * 100 TB the probe reads the query terms' postings, not the corpus.
     *
-    * `lang` is attached to the top-k ([[topWithLang]]): 2 jobs with the
-    * keyword columns held, 3 without. Joining after the cut drops nothing,
-    * since every posting's doc_id is a row of the same documents version.
+    * `lang` is attached to the top-k ([[topWithLang]]). With the keyword
+    * columns held and the postings store read as one split
+    * ([[scoringInput]]) the query is one stage and one Spark job: scan,
+    * aggregate, top-k. Joining after the cut drops nothing, since every
+    * posting's doc_id is a row of the same documents version.
     */
   def matchQueryIndexed(spark: SparkSession, dir: String,
                         q: String = "data stream window",
@@ -150,9 +153,11 @@ object SearchOps {
   /** The top-k of `(doc_id, score)` hits by (score desc, doc_id asc) as
     * `(doc_id, lang, score)`. The top-k is cut FIRST: with the
     * [[keywordColumns]] held, the ≤ k rows it keeps take their lang from
-    * them in the top-k's own projection, no join. Unheld, the ≤ k rows are
-    * broadcast against documents and the join ends in a bounded top-k: a
-    * plain sort there costs a range-sampling job and a shuffle.
+    * them in the top-k's own projection, no join and no job of its own, so
+    * the query's job count is its hits' (1 over a one-split store). Unheld,
+    * the ≤ k rows are broadcast against documents and the join ends in a
+    * bounded top-k: a plain sort there costs a range-sampling job and a
+    * shuffle.
     */
   private def topWithLang(spark: SparkSession, dir: String, hits: DataFrame,
                           k: Int): DataFrame = {
@@ -185,11 +190,20 @@ object SearchOps {
   private[graft] def presenceHitsOf(postings: DataFrame,
                                     terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "presence probe needs at least one analyzed term")
-    postings
-      .filter(col("token").isInCollection(terms))
+    scoringInput(postings.filter(col("token").isInCollection(terms)))
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("int").as("hits"))
   }
+
+  /** `rows`, a pushed read of a served store under a doc-keyed scoring
+    * aggregate, on one partition when Spark reads that store as one split
+    * ([[Tables.oneSplit]]): the aggregate then needs no doc_id exchange, and
+    * the query is one stage and one Spark job. A store of several splits
+    * keeps its exchange. Only the served scoring aggregates take this: a
+    * single task loses where per-row compute dominates (the scan faces).
+    */
+  private def scoringInput(rows: DataFrame): DataFrame =
+    if (Tables.oneSplit(rows)) rows.coalesce(1) else rows
 
   /** ES `bool` compound query — the container every production ES query
     * ships in (the reference's searches are single-clause only because the
@@ -547,12 +561,16 @@ object SearchOps {
     val prefix = ph.last
     // bounded collect: ≤ maxExpansions dictionary rows (ES's
     // max_expansions contract), read from the dictionary — never the
-    // corpus — so the expansions can join the driver-side bucket routing
-    val expansions = termDict(spark, dir)
-      .filter(col("token").startsWith(prefix))
-      .select(col("token")).orderBy(col("token").asc)
-      .limit(maxExpansions)
-      .collect().map(_.getString(0)).toSeq
+    // corpus — so the expansions can join the driver-side bucket routing;
+    // the held dictionary is filtered and sorted on the driver (no job)
+    val expansions = heldTermDict(spark, dir)
+      .map(_.rows.map(_.getAs[String]("token")).filter(_.startsWith(prefix))
+        .sortBy(UTF8String.fromString)(Utf8Order).take(maxExpansions))
+      .getOrElse(termDict(spark, dir)
+        .filter(col("token").startsWith(prefix))
+        .select(col("token")).orderBy(col("token").asc)
+        .limit(maxExpansions)
+        .collect().map(_.getString(0)).toSeq)
     val pp = positionalFor(spark, dir, (fixed ++ expansions).distinct)
     val fixedParts = fixed.zipWithIndex.map { case (t, i) =>
       pp.filter(col("token") === t)
@@ -966,7 +984,10 @@ object SearchOps {
     * would buy nothing) and scores docs as Σ_term max(matched-field boost)
     * — exactly the scan face's Σ greatest(per-field match × boost) on the
     * rows it keeps. The expansions are literals of one doc-keyed aggregate
-    * over the pushed token IN-list: one exchange, no join, 2 jobs warm. The
+    * over the pushed token IN-list: no join, and over a one-split store
+    * ([[scoringInput]]) no exchange either. With the dictionary held, a
+    * term's expansion is a projection folded on the driver
+    * ([[fuzzyCandidates]]), so a query is 1 Spark job, warm or cold. The
     * IN-list is on the token alone, so a row whose token is a candidate
     * but whose field does not take it (a lang row of a fuzzy candidate)
     * scores null, and a doc of such rows only scores 0 and is dropped.
@@ -978,7 +999,7 @@ object SearchOps {
     val terms = analyzeQuery(q).distinct.sorted
     require(terms.nonEmpty, s"query '$q' analyzed to no terms")
     val expanded = fuzzyCandidates(spark, dir, "mfterms", MultiFieldSources,
-      multiFieldTermDict(spark, dir), terms)
+      heldMultiFieldTermDict(spark, dir), multiFieldTermDict(spark, dir), terms)
     val fieldBoost = MultiFieldBoosts.tail.foldLeft(
       when(col("field") === MultiFieldBoosts.head._1, lit(MultiFieldBoosts.head._2))) {
       case (c, (f, b)) => c.when(col("field") === f, lit(b)) }
@@ -987,8 +1008,8 @@ object SearchOps {
     val partials = terms.map(t => coalesce(max(
       when(col("field") === "lang", when(col("token") === t, lit(1.0)))
         .when(col("token").isin(expanded(t): _*), fieldBoost)), lit(0.0)))
-    val scored = servedMultiFieldPostings(spark, dir)
-      .filter(col("token").isInCollection((terms ++ terms.flatMap(expanded)).distinct))
+    val scored = scoringInput(servedMultiFieldPostings(spark, dir)
+      .filter(col("token").isInCollection((terms ++ terms.flatMap(expanded)).distinct)))
       .groupBy(col("doc_id"))
       .agg(partials.reduce(_ + _).as("score"))
       .filter(col("score") > 0)
@@ -1027,12 +1048,23 @@ object SearchOps {
 
   /** The union fuzzy dictionary of the multi-field postings (lang
     * excluded: it is exact-only): [[dictOf]] with tf = the number of fuzzy
-    * fields of a document that hold the token.
+    * fields of a document that hold the token. Held on the driver while
+    * documents and customer together are below the broadcast threshold
+    * ([[heldMultiFieldTermDict]]), else the `mftermdict` store.
     */
   private[graft] def multiFieldTermDict(spark: SparkSession, dir: String): DataFrame =
-    DerivedStore.parquet(spark, "mftermdict", dir, MultiFieldSources: _*)(
-      dictOf(servedMultiFieldPostings(spark, dir).filter(col("field") =!= "lang")
-        .groupBy(col("token"), col("doc_id")).agg(count(lit(1)).as("tf"))))
+    heldMultiFieldTermDict(spark, dir).map(_.df).getOrElse(
+      DerivedStore.parquet(spark, "mftermdict", dir, MultiFieldSources: _*)(
+        multiFieldDictOf(spark, dir)))
+
+  private def heldMultiFieldTermDict(spark: SparkSession,
+                                     dir: String): Option[DerivedStore.Held] =
+    DerivedStore.held(spark, "mftermdict", dir, MultiFieldSources: _*)(
+      multiFieldDictOf(spark, dir))
+
+  private def multiFieldDictOf(spark: SparkSession, dir: String): DataFrame =
+    dictOf(servedMultiFieldPostings(spark, dir).filter(col("field") =!= "lang")
+      .groupBy(col("token"), col("doc_id")).agg(count(lit(1)).as("tf")))
 
   /** Deterministic Cyrillic phrase panel — the mixed-language FIXTURE for
     * the Russian analyzer half (the test corpus is English-only). Each
@@ -1271,7 +1303,8 @@ object SearchOps {
     * naive "terms agg ordered asc" must materialize the whole vocabulary;
     * here the term dictionary's `df` ([[termDict]]) makes it exact AND
     * cheap: the max_doc_count filter applies before anything sorts, so the
-    * top-k cut sees only the rare tail. `k` bounds the face for the
+    * top-k cut sees only the rare tail. Over the held dictionary filter,
+    * sort and cut run on the driver: no Spark job. `k` bounds the face for the
     * oracle; ES's own default cap is unbounded-ish (size 10 buckets).
     *
     * The registered face runs max_doc_count=300: the rotated synthetic
@@ -1284,10 +1317,18 @@ object SearchOps {
     */
   def rareTermsAgg(spark: SparkSession, dir: String,
                    maxDocCount: Long = 1L, k: Int = 100): DataFrame =
-    termDict(spark, dir)
+    heldTermDict(spark, dir).map { h =>
+      // sorted on the driver: over a local relation a Spark sort starts jobs
+      val (tok, df) = (h.df.schema.fieldIndex("token"), h.df.schema.fieldIndex("df"))
+      val rare = h.rows.filter(_.getLong(df) <= maxDocCount)
+        .sortBy(r => (r.getLong(df), UTF8String.fromString(r.getString(tok))))(
+          Ordering.Tuple2(Ordering.Long, Utf8Order))
+        .take(k)
+      spark.createDataFrame(java.util.Arrays.asList(rare: _*), h.df.schema)
+    }.getOrElse(termDict(spark, dir)
       .filter(col("df") <= maxDocCount)
       .orderBy(col("df").asc, col("token").asc)
-      .limit(k)
+      .limit(k))
       .select(col("token"), col("df").as("doc_count"))
 
   /** The scale path for repeated interactive search: a materialized postings
@@ -1355,6 +1396,9 @@ object SearchOps {
       DerivedStore.parquet(spark, "termdict", dir, "documents.parquet")(
         dictOf(servedPostings(spark, dir))))
 
+  /** Spark's string order (UTF-8 bytes), for sorting held rows on the driver. */
+  private val Utf8Order: Ordering[UTF8String] = Ordering.fromLessThan(_.compareTo(_) < 0)
+
   /** The `k` rows of the [[termDict]] with the largest `ttf`, ties by token:
     * a limit over the held rows, which are in that order, so Catalyst folds
     * it into a local relation (no Spark job); a top-k over the store above
@@ -1404,8 +1448,10 @@ object SearchOps {
     * Scale shape: the IN-list prunes postings before anything groups (token-
     * bucketed index ⇒ k-bucket read); one hash-agg by doc_id;
     * TakeOrderedAndProject for the top-k. N and each term's df are numbers
-    * in the plan ([[rankedScores]]), so a query is 2 jobs while the
-    * dictionary is held: no count job, no df aggregate, no idf broadcast.
+    * in the plan ([[rankedScores]]), so while the dictionary is held there
+    * is no count job, no df aggregate and no idf broadcast, and over a
+    * one-split store ([[scoringInput]]) no doc_id exchange: 1 job, also for
+    * a term never queried before.
     */
   def rankedSearch(spark: SparkSession, dir: String,
                    q: String = "data stream window", k: Int = 20): DataFrame =
@@ -1437,8 +1483,7 @@ object SearchOps {
     val total = terms.indices
       .map(i => coalesce(col(s"_s$i"), lit(0.0)))
       .reduce(_ + _) // left fold in term order — same associativity as the SQL
-    servedPostings(spark, dir)
-      .filter(col("token").isInCollection(terms))
+    scoringInput(servedPostings(spark, dir).filter(col("token").isInCollection(terms)))
       .groupBy("doc_id")
       .agg(partials.head, partials.tail: _*)
       .select(col("doc_id"), round(total, 6).as("score"))
@@ -1455,8 +1500,9 @@ object SearchOps {
     * TakeOrderedAndProject with an offset over the (score desc, doc_id asc)
     * order, which is total, so "after rank r" and "after the r-th hit's
     * sort tuple" are the same rows. `afterRank = 0` is the first page.
-    * No rank window, no cursor join: 2 jobs warm (score shuffle, top-k;
-    * N and df are literals, see [[rankedScores]]), where the in-plan
+    * No rank window, no cursor join: 1 job, warm or cold (N and df are
+    * literals and a one-split store plans no score shuffle, see
+    * [[rankedScores]]), where the in-plan
     * cursor (limit, min-struct aggregate, broadcast, nested-loop filter), a
     * count job for N and a df aggregate with its idf broadcast cost 7. At
     * warehouse scale a real client supplies the cursor as literals and the
@@ -2651,27 +2697,26 @@ object SearchOps {
     *
     * Scale shape: reads the SERVED postings store (one analyze pass per
     * JVM+dir, shared with q_inverted_search / q_search_ranked /
-    * q_search_fuzzy_idx) — df comes from a count window over the token
-    * exchange of the store scan (a groupBy + join-back would scan the store
-    * twice; a cache was measured slower than either at this size). N rides
-    * along as a column-pruned count-only broadcast. Then the rank window
-    * partitioned by doc_id — the same key distribution the df window's
-    * exchange used, never a global window.
+    * q_search_fuzzy_idx) once. Each token's df is the term dictionary's
+    * ([[termDict]]): a map literal of the held rows, or a join with the
+    * `termdict` store above the broadcast threshold. N ([[docCount]]) is a
+    * literal, as in [[rankedScores]]. Then the rank window partitioned by
+    * doc_id — one doc-keyed exchange, never a global window.
     */
   def keywords(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
     val postings = servedPostings(spark, dir)
-    val nDocs = Tables.documents(spark, dir)
-      .agg(count(lit(1)).cast("double").as("n_docs"))
-    val byToken = org.apache.spark.sql.expressions.Window.partitionBy("token")
+    val nDocs = lit(docCount(spark, dir).toDouble)
     val byDoc = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id")
       .orderBy(col("score_raw").desc, col("token").asc)
-    postings
-      .withColumn("df", count(lit(1)).over(byToken)) // postings unique on (token, doc_id)
-      .crossJoin(broadcast(nDocs))
+    heldTermDict(spark, dir)
+      .map(h => postings.withColumn("df", typedLit(h.rows.map(r =>
+        r.getAs[String]("token") -> r.getAs[Long]("df")).toMap).apply(col("token"))))
+      .getOrElse(postings.join(termDict(spark, dir).select(col("token"), col("df")),
+        Seq("token")))
       .select(col("doc_id"), col("token"),
         (col("tf").cast("double") *
-          log(col("n_docs") / col("df").cast("double"))).as("score_raw"))
+          log(nDocs / col("df").cast("double"))).as("score_raw"))
       .withColumn("rank", row_number().over(byDoc))
       .filter(col("rank") <= k)
       .select(col("doc_id"), col("rank").cast("long").as("rank"),
@@ -2712,18 +2757,19 @@ object SearchOps {
     require(terms.nonEmpty, s"query '$q' analyzed to no terms")
     // The verified (term, token) set is QUERY-RESULT-sized — bounded by the
     // gram prune, tens of tokens — so resolve it over the term dictionary,
-    // memoized per term and documents version ([[fuzzyCandidates]]),
-    // and let the final postings pass run with the token IN-list PUSHED
-    // into the store scan (static pruning; at scale the token-bucketed
-    // store reads only those buckets). Each term's candidates are literals
-    // of one doc-keyed aggregate, score = Σ_t max(token ∈ expanded(t)):
-    // one exchange, no join, 2 jobs warm. The round-7 shape re-derived the
-    // dictionary per call and chained broadcast builds — 9 jobs, 0.14
-    // cpuSec: pure dispatch floor.
+    // folded on the driver over the held dictionary, else memoized per term
+    // and documents version ([[fuzzyCandidates]]), and let the final
+    // postings pass run with the token IN-list PUSHED into the store scan
+    // (static pruning; at scale the token-bucketed store reads only those
+    // buckets). Each term's candidates are literals of one doc-keyed
+    // aggregate, score = Σ_t max(token ∈ expanded(t)): no join, and over a
+    // one-split store ([[scoringInput]]) no exchange, so 1 job, warm or
+    // cold. The round-7 shape re-derived the dictionary per call and
+    // chained broadcast builds — 9 jobs, 0.14 cpuSec: pure dispatch floor.
     val expanded = fuzzyCandidates(spark, dir, "fuzzyterms", Seq("documents.parquet"),
-      termDict(spark, dir), terms)
-    val scored = servedPostings(spark, dir)
-      .filter(col("token").isInCollection(terms.flatMap(expanded).distinct))
+      heldTermDict(spark, dir), termDict(spark, dir), terms)
+    val scored = scoringInput(servedPostings(spark, dir)
+      .filter(col("token").isInCollection(terms.flatMap(expanded).distinct)))
       .groupBy(col("doc_id"))
       .agg(terms.map(t => max(col("token").isin(expanded(t): _*).cast("int")))
         .reduce(_ + _).as("score"))
@@ -2767,18 +2813,28 @@ object SearchOps {
       sources: Seq[String])(dict: => DataFrame): TermTable =
     DerivedStore.memo(spark, kind, dir, sources: _*)(new TermTable(dict))
 
-  /** Each term's verified fuzzy candidates in the term dictionary `dict` of
-    * `dir` — the expansion step shared by [[fuzzySearchIndexed]] and
-    * [[multiFieldFuzzyIndexed]]: a deterministic function of (dictionary
-    * version, term, fuzz budget), so a [[termTable]] per dictionary `kind`.
+  /** Each term's verified fuzzy candidates in the term dictionary of `dir`
+    * — the expansion step shared by [[fuzzySearchIndexed]] and
+    * [[multiFieldFuzzyIndexed]]. Over the `held` dictionary it is one
+    * projection, a column per term of the rule [[fuzzyVerified]] keeps a
+    * token by (within the term's length band and levenshtein budget), which
+    * Catalyst folds into a local relation on the driver: no Spark job, and
+    * the same set, since the band and the q-gram bound only prune. Unheld,
+    * [[fuzzyVerified]] runs over the `dict` store, and as a deterministic
+    * function of (dictionary version, term, fuzz budget) it is memoized in
+    * a [[termTable]] per dictionary `kind`.
     */
   private def fuzzyCandidates(spark: SparkSession, dir: String, kind: String,
-      sources: Seq[String], dict: => DataFrame,
+      sources: Seq[String], held: Option[DerivedStore.Held], dict: => DataFrame,
       terms: Seq[String]): Map[String, Seq[String]] =
-    termTable(spark, dir, kind, sources)(dict)(terms) { (d, missing) =>
+    held.map { h =>
+      val rows = h.df.select(col("token") +: terms.map(fuzzyMatch): _*).collect()
+      terms.zipWithIndex.map { case (t, i) =>
+        t -> rows.collect { case r if r.getBoolean(i + 1) => r.getString(0) }.toSeq }.toMap
+    }.getOrElse(termTable(spark, dir, kind, sources)(dict)(terms) { (d, missing) =>
       fuzzyVerified(d, missing).collect().toSeq.groupBy(_.getString(0))
         .map { case (t, rs) => t -> rs.map(_.getString(1)) }
-    }
+    })
 
   /** The materialized-index face: search over prebuilt postings + dict. */
   def fuzzyIndexedQuery(spark: SparkSession, postings: DataFrame,
@@ -2811,12 +2867,7 @@ object SearchOps {
     */
   private def fuzzyVerified(dict: DataFrame, terms: Seq[String]): DataFrame = {
     val len = col("tok_len")
-    def band(t: String): Column = abs(len - t.length) <= autoFuzz(t)
     def bound(t: String): Column = greatest(len, lit(t.length)) - 1 - 2 * autoFuzz(t)
-    // threshold-bounded levenshtein (early exit at 2 = the fuzziness:auto
-    // ceiling), run on the pruned set only
-    def verified(t: String): Column =
-      levenshtein(col("token"), lit(t), 2).between(0, autoFuzz(t))
     /** (term, token) for every term of `ts` whose `keep` holds on a row. */
     def pairs(cands: DataFrame, ts: Seq[String])(keep: String => Column): DataFrame =
       cands.select(explode(array_compact(array(ts.map(t => when(keep(t), lit(t))): _*)))
@@ -2836,26 +2887,36 @@ object SearchOps {
       val shared = qGrams.zipWithIndex.map { case ((t, gs), i) =>
         val qcnt = gs.tail.foldLeft(when(col("gram") === gs.head._1, lit(gs.head._2))) {
           case (c, (g, n)) => c.when(col("gram") === g, lit(n)) }.otherwise(lit(0L))
-        sum(when(band(t), least(col("cnt"), qcnt))).as(s"_g$i")
+        sum(when(fuzzBand(t), least(col("cnt"), qcnt))).as(s"_g$i")
       }
-      val byToken = dict.filter(qGrams.map(g => band(g._1)).reduce(_ || _))
+      val byToken = dict.filter(qGrams.map(g => fuzzBand(g._1)).reduce(_ || _))
         .select(col("token"), len, inline(col("grams")))
         .filter(col("gram").isin(qGrams.flatMap(_._2.map(_._1)).distinct: _*))
         .coalesce(1)
         .groupBy(col("token"), len).agg(shared.head, shared.tail: _*)
       val index = qGrams.map(_._1).zipWithIndex.toMap
       pairs(byToken, qGrams.map(_._1))(t =>
-        bound(t) > 0 && col(s"_g${index(t)}") >= bound(t) && verified(t))
+        bound(t) > 0 && col(s"_g${index(t)}") >= bound(t) && fuzzyMatch(t))
     }
     // short-term branch (bound ≤ 0: the count filter can't prune — e.g. a
     // 3-letter term with 1 edit): length-banded DICTIONARY scan, disjoint
     // from the gram branch by the bound's sign. Never touches the corpus.
     val short = terms.filter(t => t.length - 1 - 2 * autoFuzz(t) <= 0)
     val shortCands = Option.when(short.nonEmpty)(
-      pairs(dict.filter(short.map(band).reduce(_ || _)), short)(t =>
-        band(t) && bound(t) <= 0 && verified(t)))
+      pairs(dict.filter(short.map(fuzzBand).reduce(_ || _)), short)(t =>
+        bound(t) <= 0 && fuzzyMatch(t)))
     (gramCands ++ shortCands).reduce(_ unionByName _)
   }
+
+  /** A dictionary row's `tok_len` within term `t`'s fuzz budget of its length. */
+  private def fuzzBand(t: String): Column = abs(col("tok_len") - t.length) <= autoFuzz(t)
+
+  /** A dictionary row's token is a fuzzy match of term `t`: within the
+    * length band, and within `autoFuzz(t)` edits by threshold-bounded
+    * levenshtein (early exit at 2 = the fuzziness:auto ceiling).
+    */
+  private def fuzzyMatch(t: String): Column =
+    fuzzBand(t) && levenshtein(col("token"), lit(t), 2).between(0, autoFuzz(t))
 
   // ---- DuckDB oracles: same tokenizer/stopwords/stemmers, replicated in SQL.
   private val duckStops =

@@ -39,6 +39,7 @@ class HeldRelationSpec extends SparkSpecBase {
     val embPath = s"$dir/embeddings.parquet"
     AtomicSwap.replace(spark, docs((1L, "en", "alpha beta"), (2L, "fr", "beta gamma")), path)
     AtomicSwap.replace(spark, vectors(0, 0.02, 7, 13), embPath)
+    AtomicSwap.replace(spark, Seq((1L, "Ann")).toDF("c_custkey", "c_name"), s"$dir/customer.parquet")
     assert(rows(SearchOps.termLookup(spark, dir, 1L)) === Seq(Row(1L, "en", 10)))
     assert(rows(SearchOps.termsAgg(spark, dir, 10)) ===
       Seq(Row("beta", 2L), Row("alpha", 1L), Row("gamma", 1L)))
@@ -47,11 +48,12 @@ class HeldRelationSpec extends SparkSpecBase {
     assert(rows(TextOps.topNgrams(spark, dir, 5)) === Nil) // no document has three words
     // "deltaa" is one edit from "delta", a token only the rewrite adds
     assert(rows(SearchOps.fuzzySearchIndexed(spark, dir, "deltaa", 10)) === Nil)
+    assert(rows(SearchOps.multiFieldFuzzyIndexed(spark, dir, "deltaa", 10)) === Nil)
     // query vector 3 ranks first only under a model fitted to its version
     // (this one's, or the rewrite's components, which are all above it)
     assert(rows(SimilarityOps.annSq8(spark, dir, 3L, shortlist = 1, k = 1)) ===
       Seq(Row(3L, 0, 1.0)))
-    val kinds = Seq("keywords", "termdict", "corpusmix", "topngrams-5", "fuzzyterms",
+    val kinds = Seq("keywords", "termdict", "mftermdict", "corpusmix", "topngrams-5",
       "sq8model")
     val before = kinds.map(DerivedStore.memoVersions(_, dir))
     assert(before.forall(_.size == 1), s"expected one memoized version each: $before")
@@ -68,11 +70,17 @@ class HeldRelationSpec extends SparkSpecBase {
     assert(mix(dir) === Set(("de", 1L, 10L), ("fr", 1L, 10L), ("es", 1L, 17L)))
     assert(rows(TextOps.topNgrams(spark, dir, 5)) === Seq(Row("delta delta gamma", 1L, 1L)))
     assert(rows(SearchOps.fuzzySearchIndexed(spark, dir, "deltaa", 10)) === Seq(Row(3L, "es", 1)))
+    // "delta" is in doc 3's title (boost 2) and body (boost 1)
+    assert(rows(SearchOps.multiFieldFuzzyIndexed(spark, dir, "deltaa", 10)) ===
+      Seq(Row(3L, "es", 2.0)))
     assert(rows(SimilarityOps.annSq8(spark, dir, 3L, shortlist = 1, k = 1)) ===
       Seq(Row(3L, 0, 1.0)))
     val after = kinds.map(DerivedStore.memoVersions(_, dir))
     assert(after.forall(_.size == 1), s"expected one memoized version each: $after")
     assert(after.zip(before).forall { case (a, b) => a != b }, "the rewrite must resolve a new version")
+    // over the held dictionaries the fuzzy expansions need no term table
+    assert(DerivedStore.memoVersions("fuzzyterms", dir).isEmpty)
+    assert(DerivedStore.memoVersions("mfterms", dir).isEmpty)
   }
 
   test("a documents rewrite is served by the term dictionary's readers at once") {
@@ -123,12 +131,19 @@ class HeldRelationSpec extends SparkSpecBase {
       "termsagg" -> (() => SearchOps.termsAgg(spark, sf, 100)),
       "complete" -> (() => SearchOps.completeSuggest(spark, sf, "s", 10)),
       "rareterms" -> (() => SearchOps.rareTermsAgg(spark, sf, 300L, 100)),
+      // six dictionary tokens start with "s": the cut keeps the first three
+      "phraseprefix" -> (() => SearchOps.phrasePrefixSearch(spark, sf, "data s", 20, 3)),
       "match" -> (() => SearchOps.matchQueryIndexed(spark, sf, "data stream window", 20)),
       "ranked" -> (() => SearchOps.rankedSearch(spark, sf, "data stream window", 20)),
       "searchafter" -> (() => SearchOps.searchAfter(spark, sf, "data stream window", 5, 10)),
       "fuzzy" -> (() => SearchOps.fuzzySearchIndexed(spark, sf, "streem qery", 20)),
       "multifield" -> (() => SearchOps.multiFieldFuzzyIndexed(spark, sf,
-        "custommer streem windoe", 20)))
+        "custommer streem windoe", 20)),
+      // terms no other query uses, so the parquet plan resolves them cold
+      // through the term table, and the held path by its projection
+      "fuzzycold" -> (() => SearchOps.fuzzySearchIndexed(spark, sf, "wimdow straem daat", 20)),
+      "multifieldcold" -> (() => SearchOps.multiFieldFuzzyIndexed(spark, sf,
+        "custonmer wimdoe strean", 20)))
     def plan(df: DataFrame) = df.queryExecution.executedPlan.toString
     for ((face, query) <- faces) {
       val held = query()
@@ -139,8 +154,9 @@ class HeldRelationSpec extends SparkSpecBase {
         (rows(d), plan(d))
       }
       assert(parquetRows === heldRows, s"$face: parquet plan and held path disagree")
-      // the ranking faces hold N and df as plan literals either way
-      if (!Set("ranked", "searchafter")(face))
+      // the ranking faces hold N and df, and phrase-prefix its expansions,
+      // as plan literals either way
+      if (!Set("ranked", "searchafter", "phraseprefix")(face))
         assert(parquetPlan != plan(held), s"$face: threshold -1 must leave the held path")
     }
   }

@@ -355,21 +355,35 @@ class PlanSpec extends SparkSpecBase {
       s"expected a local-relation scan of the collected cells:\n$p")
   }
 
-  /** The shape of the served ranked and fuzzy faces: the query's values
-    * (df, candidate tokens) are literals, so nothing joins, and the one
-    * shuffle is the doc-keyed aggregate's.
+  private val sf01 = "/root/testdata/sf0.01"
+
+  /** The shape of the served ranked and fuzzy faces over `dir`'s stores:
+    * the query's values (df, candidate tokens) are literals, so nothing
+    * joins. The sf0.01 postings stores are one file each, which Spark reads
+    * as one split, so the doc-keyed aggregate reads one partition and plans
+    * no exchange; with split settings so small that the store reads as
+    * several splits, the one shuffle is the doc-keyed aggregate's. Returns
+    * the one-split plan.
     */
-  private def assertJoinFreeOneDocExchange(p: String): Unit = {
-    val finalPlan = p.split("== Initial Plan ==").head
-    assert(!finalPlan.contains("Join") && !finalPlan.contains("CartesianProduct"),
-      s"expected no join of any kind in:\n$p")
-    assert(finalPlan.linesIterator.count(_.contains("Exchange hashpartitioning(doc_id")) == 1,
-      s"expected exactly one doc_id exchange in:\n$p")
+  private def assertJoinFreeDocExchanges(query: String => org.apache.spark.sql.DataFrame): String = {
+    def docExchanges(p: String): Int = {
+      val finalPlan = p.split("== Initial Plan ==").head
+      assert(!finalPlan.contains("Join") && !finalPlan.contains("CartesianProduct"),
+        s"expected no join of any kind in:\n$p")
+      finalPlan.linesIterator.count(_.contains("Exchange hashpartitioning(doc_id"))
+    }
+    val p = plan(query(sf01))
+    assert(docExchanges(p) == 0, s"expected no doc_id exchange over a one-split store in:\n$p")
+    val split = withConf("spark.sql.files.maxPartitionBytes" -> "4096",
+      "spark.sql.files.openCostInBytes" -> "1024")(plan(query(sf01)))
+    assert(docExchanges(split) == 1,
+      s"expected exactly one doc_id exchange over a store of several splits in:\n$split")
+    p
   }
 
   test("rankedSearch: served from the postings STORE — pushed term IN-list, df and idf as literals (no join), one doc_id exchange, partial top-k") {
-    val p = plan(SearchOps.rankedSearch(spark, sf))
-    assertJoinFreeOneDocExchange(p)
+    // the doc_id exchange is planned only where the store reads as several splits
+    val p = assertJoinFreeDocExchanges(SearchOps.rankedSearch(spark, _))
     assert(!p.contains("ru_en_analyze"),
       s"store-served search must not re-analyze the corpus:\n$p")
     assert(p.contains("PushedFilters: [In(token"),
@@ -377,16 +391,23 @@ class PlanSpec extends SparkSpecBase {
     assert(p.contains("TakeOrderedAndProject"), s"expected partial top-k in:\n$p")
   }
 
-  test("keywords: served from the postings STORE — one store scan, df window on the token exchange") {
+  test("keywords: served from the postings STORE — one store scan, df from the term dictionary, one doc_id exchange") {
     val p = plan(SearchOps.keywords(spark, sf))
+    val finalPlan = p.split("== Initial Plan ==").head
     assert(!p.contains("ru_en_analyze"),
       s"keywords must read the maintained store, not re-analyze the corpus:\n$p")
-    // df = count over Window.partitionBy(token): exactly one exchange on
-    // token feeding the window — a groupBy+join-back shape would scan the
-    // store twice and show a join here
-    assert(p.contains("Window"), s"expected the df count window in:\n$p")
-    assert(!p.contains("BroadcastHashJoin"),
-      s"df must come from the window, not a join-back:\n$p")
+    // df is a literal of the held term dictionary and N a literal: no df
+    // window on a token exchange, no join, no broadcast; the one shuffle
+    // feeds the per-doc rank window
+    assert(finalPlan.linesIterator.count(_.contains("FileScan parquet")) == 1,
+      s"expected one scan of the postings store in:\n$p")
+    assert(!finalPlan.contains("Join") && !finalPlan.contains("BroadcastExchange"),
+      s"df and N must be literals, not joined:\n$p")
+    assert(!finalPlan.contains("hashpartitioning(token"),
+      s"df must not be counted over a token exchange:\n$p")
+    assert(finalPlan.linesIterator.count(_.contains("Exchange hashpartitioning(doc_id")) == 1,
+      s"expected exactly one doc_id exchange feeding the rank window in:\n$p")
+    assert(p.contains("Window"), s"expected the per-doc rank window in:\n$p")
   }
 
   test("dsirWeights: scoring is served from the model STORE — broadcast model join, no fit subtree") {
@@ -432,12 +453,11 @@ class PlanSpec extends SparkSpecBase {
     // the candidate pipeline resolves against the served dict/gram stores
     // BEFORE this plan exists; the scoring plan must read the postings
     // store with the verified tokens pushed, never re-derive the dictionary
-    val p = plan(SearchOps.fuzzySearchIndexed(spark, sf))
+    val p = assertJoinFreeDocExchanges(SearchOps.fuzzySearchIndexed(spark, _))
     assert(p.contains("PushedFilters: [In(token"),
       s"expected the verified-token IN-list pushed into the store scan:\n$p")
     assert(!p.contains("levenshtein") && !p.contains("ru_en_analyze"),
       s"candidate resolution must not ride in the scoring plan:\n$p")
-    assertJoinFreeOneDocExchange(p)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"fuzzy index path must never plan a product join:\n$p")
     assert(p.contains("TakeOrderedAndProject"), s"expected partial top-k in:\n$p")
@@ -448,12 +468,11 @@ class PlanSpec extends SparkSpecBase {
     // happens BEFORE this plan exists; the scoring plan must read the
     // mfpostings store with the token IN-list pushed and never re-derive
     // an analyzed field or join the corpus wide
-    val p = plan(SearchOps.multiFieldFuzzyIndexed(spark, sf))
+    val p = assertJoinFreeDocExchanges(SearchOps.multiFieldFuzzyIndexed(spark, _))
     assert(p.contains("PushedFilters: [In(token"),
       s"expected the verified-token IN-list pushed into the store scan:\n$p")
     assert(!p.contains("levenshtein") && !p.contains("ru_en_analyze"),
       s"candidate resolution / analysis must not ride in the scoring plan:\n$p")
-    assertJoinFreeOneDocExchange(p)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"indexed multifield must never plan a product join:\n$p")
     assert(p.contains("TakeOrderedAndProject"), s"expected partial top-k in:\n$p")

@@ -35,10 +35,13 @@ abstract class SparkSpecBase extends AnyFunSuite {
   /** `body` with `spark.sql.autoBroadcastJoinThreshold` at `v`: at -1 no
     * relation is held on the driver and every face plans over its stores.
     */
-  protected def withThreshold[A](v: String)(body: => A): A = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, v)
-    try body finally spark.conf.set(key, prev)
+  protected def withThreshold[A](v: String)(body: => A): A =
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> v)(body)
+
+  /** `body` with the session confs `kvs` set, each restored after. */
+  protected def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.get(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 }
