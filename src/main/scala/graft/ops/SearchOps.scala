@@ -1640,6 +1640,7 @@ object SearchOps {
         rows.repartition(col("tok_bucket"))
           .sortWithinPartitions("tok_bucket", "token", "doc_id")
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .option("compression", AtomicSwap.Codec)
           .partitionBy("tok_bucket").parquet(staging)
       }))
 
@@ -1669,6 +1670,7 @@ object SearchOps {
         rows.repartition(col("tok_bucket"))
           .sortWithinPartitions("tok_bucket", "token", "doc_id", "pos")
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .option("compression", AtomicSwap.Codec)
           .partitionBy("tok_bucket").parquet(staging)
       }))
 

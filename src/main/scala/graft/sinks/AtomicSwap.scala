@@ -1,6 +1,7 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.col
 
 /** Crash-safe whole-directory replacement for plain-parquet stores:
@@ -24,6 +25,13 @@ import org.apache.spark.sql.functions.col
   * rewrite-in-place sink share one audited implementation.
   */
 object AtomicSwap {
+
+  /** The parquet codec of every store this engine writes ([[stage]],
+    * [[replaceParts]], the vector store's cells, the bucketed postings
+    * stores): zstd stores are smaller than Spark's default snappy ones, and
+    * a store is read far more often than it is written.
+    */
+  private[graft] val Codec = "zstd"
 
   /** Resolve the filesystem FROM the store path, not the default FS: a
     * scheme-qualified store (s3a://bucket/store, hdfs://nn/store) must land
@@ -96,16 +104,17 @@ object AtomicSwap {
   /** [[replace]]'s Spark half; its commit seeds the store's schema. */
   def stage(spark: SparkSession, df: DataFrame, livePath: String): Staged =
     stageWith(spark, livePath) { staging =>
-      df.write.mode(SaveMode.Overwrite).parquet(staging)
+      df.write.mode(SaveMode.Overwrite).option("compression", Codec).parquet(staging)
     }.seeding(spark, livePath, df.schema)
 
   /** Keyed merge into the store at `livePath`: drop every row whose `key`
-    * is in `dirtyKeys`, append `fresh`, swap. The dirty keys are explicit,
-    * not derived from `fresh`, because a dirty key may have no fresh rows
-    * (a document rewritten to zero tokens must still lose its postings),
-    * and may repeat: the anti-join drops a row once however often its key
-    * appears, so callers pass them without a distinct (one shuffle less).
-    * Idempotent per batch: re-merging the same rows yields the same store.
+    * is in `dirtyKeys` ([[dropKeys]]), append `fresh`, swap. The dirty keys
+    * are explicit, not derived from `fresh`, because a dirty key may have
+    * no fresh rows (a document rewritten to zero tokens must still lose its
+    * postings), and may repeat: a row is dropped once however often its
+    * key appears, so callers pass them without a distinct (one shuffle
+    * less). Idempotent per batch: re-merging the same rows yields the same
+    * store.
     */
   def upsertByKey(spark: SparkSession, livePath: String, fresh: DataFrame,
                   dirtyKeys: DataFrame, key: String): Unit =
@@ -117,8 +126,8 @@ object AtomicSwap {
     recover(spark, livePath)
     val merged =
       if (!fs(spark, livePath).exists(new org.apache.hadoop.fs.Path(livePath))) fresh
-      else graft.Tables.parquetCached(spark, livePath)
-        .join(dirtyKeys, Seq(key), "left_anti").unionByName(fresh)
+      else dropKeys(graft.Tables.parquetCached(spark, livePath), dirtyKeys, key)
+        .unionByName(fresh)
     // rebalanced on the key: the write is sized by its bytes, not by its
     // input's partitions. Unhinted, it inherited the store scan's splits
     // plus the fresh rows' partitions — 7-8 tasks and files per write on
@@ -130,6 +139,36 @@ object AtomicSwap {
     // hashed on the key it stays within 0.2 % of the unhinted bytes, and
     // a key's rows stay together.
     stage(spark, merged.hint("rebalance", col(key)), livePath)
+  }
+
+  /** `store` without the rows whose `key` is among `dirtyKeys` (a frame of
+    * that one column; repeats and nulls allowed). Keys held on the driver
+    * ([[heldRows]]) drop as a filter with the keys as literals,
+    * `key IS NULL OR NOT key IN (<non-null keys>)`: no join, no shuffle,
+    * and the filter is pushed into the store scan. It drops exactly what
+    * the anti-join drops: a store row with a null key survives and a null
+    * dirty key drops nothing (a bare `NOT IN` whose list holds a null
+    * drops every row). Any other key frame is the left anti-join on `key`.
+    */
+  def dropKeys(store: DataFrame, dirtyKeys: DataFrame, key: String): DataFrame =
+    heldRows(dirtyKeys) match {
+      case Some(rows) =>
+        val keys = rows.iterator.map(_.get(0)).filter(_ != null).toSeq.distinct
+        if (keys.isEmpty) store
+        else store.filter(col(key).isNull || !col(key).isin(keys: _*))
+      case None => store.join(dirtyKeys, Seq(key), "left_anti")
+    }
+
+  /** `df`'s rows when its plan folds to a relation held on the driver (a
+    * `LocalRelation`) smaller than `spark.sql.autoBroadcastJoinThreshold`,
+    * read with no Spark job; `None` for any other plan, and always at -1.
+    */
+  private[graft] def heldRows(df: DataFrame): Option[Array[Row]] = {
+    val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation if l.stats.sizeInBytes < limit => Some(df.collect())
+      case _ => None
+    }
   }
 
   /** The staged swap with a caller-supplied writer (partitioned layouts,
@@ -151,7 +190,7 @@ object AtomicSwap {
                   (parts: (String, org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row])*): Unit =
     replaceWith(spark, livePath) { staging =>
       parts.foreach { case (name, w) =>
-        w.mode(SaveMode.Overwrite).parquet(s"$staging/$name") }
+        w.mode(SaveMode.Overwrite).option("compression", Codec).parquet(s"$staging/$name") }
       fs(spark, livePath).create(new org.apache.hadoop.fs.Path(s"$staging/_SUCCESS")).close()
     }
 

@@ -42,9 +42,11 @@ object BucketedLayout {
     * the partition column prunes whole directories at PLANNING time: a
     * one-month query over a 100 TB fact touches one directory, not the
     * table. Verified in ScaleLayoutSpec via the scan's PartitionFilters.
+    * Written with the stores' codec ([[graft.sinks.AtomicSwap.Codec]]).
     */
   def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(path)
+    df.write.mode(SaveMode.Overwrite).option("compression", graft.sinks.AtomicSwap.Codec)
+      .partitionBy(partitionCol).parquet(path)
 
   /** TRAINING-SHARD export — the last-mile write of a curation pipeline:
     * the kept corpus goes out as `nShards` deterministic, size-bounded,

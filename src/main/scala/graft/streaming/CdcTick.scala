@@ -2,10 +2,13 @@ package graft.streaming
 
 import graft.sinks.AtomicSwap
 import java.util.concurrent.{ExecutionException, Executors}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Try}
 
 /** The one CDC tick every watermarked pipeline runs — the reference's poll
@@ -15,16 +18,16 @@ import scala.util.{Failure, Try}
   *
   *   1. detect: `changes` filtered strictly past the watermark (the
   *      reference's T3 predicate with its equal-timestamp starvation quirk
-  *      fixed) and reduced to ONE persisted per-key aggregate, the latest
-  *      row of each key ([[CdcTick.Batch]]). The filtered rows themselves
-  *      are not persisted: the emptiness check, the new watermark (the max
-  *      of the per-key max `modified`), the returned key count (the
-  *      aggregate's keys) and every sink read that one cached relation, so
-  *      a live feed cannot show different rows to different consumers (a
-  *      row with modified <= new_wm appearing between two reads would
-  *      otherwise never be merged yet be permanently filtered by the
-  *      committed watermark: silent loss). The 1-row summary is the action
-  *      that materializes the cache, so the stages start from it built;
+  *      fixed) and reduced to ONE materialized per-key aggregate, the latest
+  *      row of each key ([[CdcTick.Batch]]), held on the driver when it is
+  *      small and persisted otherwise ([[CdcTick.hold]]). The filtered rows
+  *      themselves are not kept: the emptiness check, the new watermark
+  *      (the max of the per-key max `modified`), the returned key count
+  *      (the aggregate's keys) and every sink read that one relation, so a
+  *      live feed cannot show different rows to different consumers (a row
+  *      with modified <= new_wm appearing between two reads would otherwise
+  *      never be merged yet be permanently filtered by the committed
+  *      watermark: silent loss). The stages start from it built;
   *   2. absorb: [[sinks]] hands every store the batch. Each store write
   *      splits into a STAGE — all its Spark work: the build, the keyed
   *      merge, the write into staging — and a COMMIT — only the
@@ -225,7 +228,66 @@ object CdcTick {
   /** Bound on [[CdcTick.runUntilCaughtUp]]'s ticks. */
   private val MaxTicks = 100
 
-  /** One detected batch: the views sinks read of its ONE persisted
+  /** A frame several readers share, materialized once: its rows held on
+    * the driver ([[rows]], and [[df]] a `LocalRelation` of them), or, when
+    * they were not collected, [[df]] the persisted frame.
+    */
+  private[streaming] final class Hold private[CdcTick] (
+      val df: DataFrame, val rows: Option[IndexedSeq[Row]]) {
+    def release(): Unit = if (rows.isEmpty) { df.unpersist(); () }
+  }
+
+  /** `df` materialized once for several readers: collected and held on
+    * the driver as a `LocalRelation` while its rows fit in
+    * `spark.sql.autoBroadcastJoinThreshold` bytes, the size Spark itself
+    * would broadcast; persisted, as before, when they do not (the collect
+    * then stops early and its rows are dropped) or when the threshold is
+    * -1. The cap is measured on the rows rather than estimated from the
+    * plan: without column statistics the optimizer sizes a join as the
+    * product of its sides and a batch aggregate by the whole feed it
+    * filters, so an estimate would make holding follow the feed, not the
+    * batch. Each partition ships at most its share of the cap to the
+    * driver.
+    */
+  private[streaming] def hold(df: DataFrame): Hold = {
+    val cap = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    (if (cap < 0) None else collectWithin(df, cap)) match {
+      case Some(rows) =>
+        new Hold(df.sparkSession.createDataFrame(rows.asJava, df.schema), Some(rows))
+      case None => new Hold(df.persist(), None)
+    }
+  }
+
+  /** `df`'s rows when their unsafe row bytes total at most `cap`, else
+    * `None`; one collect, in which each partition stops reading once past
+    * its share of the cap.
+    */
+  private def collectWithin(df: DataFrame, cap: Long): Option[IndexedSeq[Row]] = {
+    val schema = df.schema
+    val qe = df.queryExecution
+    val parts = SQLExecution.withNewExecutionId(qe) {
+      val rdd = qe.toRdd
+      val share = cap / math.max(1, rdd.getNumPartitions)
+      rdd.mapPartitions { it =>
+        val project = UnsafeProjection.create(schema)
+        val out = Array.newBuilder[UnsafeRow]
+        var bytes = 0L
+        while (bytes <= share && it.hasNext) {
+          val r = project(it.next()).copy()
+          bytes += r.getSizeInBytes
+          out += r
+        }
+        Iterator.single(if (bytes <= share) Some(out.result()) else None)
+      }.collect()
+    }
+    if (parts.contains(None)) None
+    else {
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+      Some(parts.toIndexedSeq.flatMap(_.get).map(toRow(_).asInstanceOf[Row]))
+    }
+  }
+
+  /** One detected batch: the views sinks read of its ONE materialized
     * aggregate.
     */
   final class Batch private[streaming] (dirty: DataFrame, key: String) {
@@ -235,34 +297,45 @@ object CdcTick {
     /** Per key, the max of the (modified, payload…) struct: the latest row
       * of a key changed twice in one batch, with equal-timestamp ties kept
       * deterministic — the strictly-greater analog of the reference's
-      * last-row-wins bulk ordering. The only persisted relation of a tick;
-      * `dirty` is read once, to build it.
+      * last-row-wins bulk ordering. The only materialized relation of a
+      * tick, held on the driver when small ([[hold]]: 2 jobs under AQE, the
+      * aggregate's shuffle and the collect), else persisted; `dirty` is
+      * read once to build it (twice when the collect finds it too large).
       */
-    private val byKey: DataFrame = dirty.groupBy(col(key))
-      .agg(max(struct((col("modified") +: payload.map(col)): _*)).as("m"))
-      .persist()
+    private val byKey: Hold = hold(dirty.groupBy(col(key))
+      .agg(max(struct((col("modified") +: payload.map(col)): _*)).as("m")))
 
-    /** (rows of [[byKey]], max `modified`, non-null keys) in one job over
-      * the cache — the action that materializes it. Row count 0 is an empty
-      * batch; the max is the watermark to commit; the key count is what the
-      * tick returns, null keys excluded.
+    /** (rows of [[byKey]], max `modified`, non-null keys). Row count 0 is
+      * an empty batch; the max is the watermark to commit; the key count is
+      * what the tick returns, null keys excluded. Over held rows it is
+      * computed on the driver with no job; over the persisted aggregate it
+      * is one aggregate query (4 jobs under AQE).
       */
-    private[streaming] def summary: org.apache.spark.sql.Row =
-      byKey.agg(count(lit(1)), max(col("m").getField("modified")), count(col(key))).head
+    private[streaming] def summary: Row = byKey.rows match {
+      case Some(rows) =>
+        val wm = rows.map(_.getStruct(1).getTimestamp(0))
+          .reduceOption((a, b) => if (b.after(a)) b else a).orNull
+        Row(rows.size.toLong, wm, rows.count(!_.isNullAt(0)).toLong)
+      case None =>
+        byKey.df.agg(count(lit(1)), max(col("m").getField("modified")), count(col(key))).head
+    }
 
-    /** The LATEST row per key, projected from the cached aggregate — built
-      * before a multi-store tick's stages fork, so every store reads the one
-      * materialization.
+    /** The LATEST row per key, projected from the materialized aggregate —
+      * built before a multi-store tick's stages fork, so every store reads
+      * the one materialization. Over held rows it folds to a
+      * `LocalRelation`, so the stores see the dirty keys as literals
+      * ([[graft.sinks.AtomicSwap.dropKeys]]).
       */
     val latest: DataFrame =
-      byKey.select(col(key) +: payload.map(c => col("m").getField(c).as(c)): _*)
+      byKey.df.select(col(key) +: payload.map(c => col("m").getField(c).as(c)): _*)
 
     /** The distinct dirty keys, named `key` — [[latest]]'s keys, so a
-      * DataFrame end to end (a million-key backfill is a semi-join shuffle,
-      * never a driver collect) read from the same cache as every other sink.
+      * DataFrame end to end (a backfill too large to hold is a semi-join
+      * shuffle, never a driver collect) read from the same materialization
+      * as every other sink.
       */
     def ids: DataFrame = latest.select(col(key))
 
-    private[streaming] def release(): Unit = { byKey.unpersist(); () }
+    private[streaming] def release(): Unit = byKey.release()
   }
 }

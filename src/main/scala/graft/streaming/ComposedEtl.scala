@@ -20,17 +20,20 @@ import org.apache.spark.sql.functions._
   * rebuild and the postings recompute are O(dirty); the vector merge reads
   * and rewrites only the affected cells (≤ nlist, at most the whole store
   * when a batch touches every cell); but the doc and postings merges read
-  * and rewrite their WHOLE store every tick (anti-join + union + swap), so
-  * they are O(store). Every store write is rebalanced, so it is sized by
-  * its bytes: at this scale one file for the doc store, one for the
-  * postings store and one per affected cell, where it was one per writing
-  * task (the stores held 70 files after a perfbench run, now 10); the
-  * price is one shuffle of each merged store per tick. On the perfbench
-  * `etl` workload (2,000 ids, ~30 dirty per tick, 4 cores) a tick writes
-  * ~1.1 MB against ~0.82 MB of corpus, about 30× the changed payload
-  * (`sinks.rewrite_amp`). A table format's MERGE, or a key-bucketed layout
-  * that rewrites only the dirty keys' buckets, is what would make those
-  * two merges O(dirty).
+  * and rewrite their WHOLE store every tick (key drop + union + swap), so
+  * they are O(store). A batch small enough to hold on the driver
+  * ([[CdcTick.hold]]) reaches the stores as a `LocalRelation`: its keys
+  * drop from each store as literals ([[graft.sinks.AtomicSwap.dropKeys]],
+  * no anti-join), and its vectors are assigned to cells on the driver.
+  * Every store write is rebalanced, so it is sized by its bytes: at this
+  * scale one file for the doc store, one for the postings store and one
+  * per affected cell; the price is one shuffle of each merged store per
+  * tick. On the perfbench `etl` workload (2,000 ids, ~30 dirty per tick,
+  * 4 cores) a tick starts 17 Spark jobs (26 before batches were held)
+  * and, with the stores written as zstd, rewrites about 22× the changed
+  * payload in bytes (`sinks.rewrite_amp`; 33× as snappy). A table
+  * format's MERGE, or a key-bucketed layout that rewrites only the dirty
+  * keys' buckets, is what would make those two merges O(dirty).
   */
 class ComposedEtlPipeline(
     changes: SparkSession => DataFrame, // (id, text, label, v, modified)

@@ -60,12 +60,14 @@ object IncrementalDocPipeline {
           IngestDefaults.stampUpsert(docs, graft.Tables.parquetCached(spark, storePath))
         else IngestDefaults.stampInsert(docs)
       }
-    // the merge reads incoming TWICE (anti-join keys + union), so it caches
-    // for the write — unless the caller already persisted it: cache() would
-    // alias that persist and the unpersist below would evict it
-    val callerCached = stamped.storageLevel != StorageLevel.NONE
-    val incoming = if (callerCached) stamped else stamped.cache()
+    // the merge reads incoming TWICE (the dropped keys + union), so it is
+    // materialized once, on the driver when small (CdcTick.hold: the keys
+    // then drop as literals) — unless the caller already persisted it: a
+    // hold would alias that persist and its release would evict it
+    val held =
+      if (stamped.storageLevel != StorageLevel.NONE) None else Some(CdcTick.hold(stamped))
+    val incoming = held.fold(stamped)(_.df)
     try AtomicSwap.stageUpsertByKey(spark, storePath, incoming, incoming.select("id"), "id")
-    finally if (!callerCached) incoming.unpersist()
+    finally held.foreach(_.release())
   }
 }

@@ -14,14 +14,16 @@ import org.apache.spark.sql.functions._
   *
   * Merge rule: drop EVERY posting of a dirty doc_id (a re-written document
   * may have lost tokens — an append-only merge would leave ghosts), then
-  * append the recomputed rows. Same anti-join + union + crash-safe
+  * append the recomputed rows. Same key drop + union + crash-safe
   * [[graft.sinks.AtomicSwap]] staging the document store upsert uses, so
   * delivery is effectively-once: re-processing a batch rewrites the same
   * rows.
   *
-  * Scale shape: the anti-join shuffles on doc_id (or broadcasts the dirty
-  * set — AQE decides); at warehouse scale the store is token-bucketed and
-  * this becomes a MERGE, with searches reading only their terms' buckets.
+  * Scale shape: dirty ids held on the driver drop as a pushed literal
+  * filter; any other dirty set is an anti-join that shuffles on doc_id (or
+  * broadcasts the dirty set — AQE decides); at warehouse scale the store
+  * is token-bucketed and this becomes a MERGE, with searches reading only
+  * their terms' buckets.
   * Every search face already takes a postings DataFrame
   * ([[SearchOps.postingsSearch]], [[SearchOps.presenceHitsOf]],
   * [[SearchOps.fuzzyIndexedQuery]]) — they run unchanged over the

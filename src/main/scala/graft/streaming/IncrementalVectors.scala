@@ -72,31 +72,47 @@ object IncrementalVectors {
     val f = AtomicSwap.fs(spark, storePath)
     val root = new org.apache.hadoop.fs.Path(storePath)
     val exists = f.exists(root)
-    // PERSIST the assigned batch: stage runs two actions over it (the
-    // cell collect and the staged write), and each action re-reading a
-    // LIVE source (a CDC feed being compacted, a non-deterministic frame)
-    // could otherwise see different rows — the staged dirs and the
-    // deletion manifest must describe ONE materialization or commit could
-    // drop a never-merged live cell.
-    val fresh = assignedOf(dirtyVecs, codebook).persist()
+    // the batch's cells are read once and written once, so both must see
+    // ONE materialization: each action re-reading a LIVE source (a CDC feed
+    // being compacted, a non-deterministic frame) could otherwise see
+    // different rows, and the staged dirs and the deletion manifest must
+    // describe the same batch or commit could drop a never-merged live
+    // cell. A batch held on the driver (a tick's small batch, see
+    // CdcTick.hold) is that materialization already, and its cells are
+    // assigned on the driver as it folds; any other batch is persisted.
+    val assigned = assignedOf(dirtyVecs, codebook)
+    val held = AtomicSwap.heldRows(assigned)
+    val fresh = if (held.isDefined) assigned else assigned.persist()
     try {
       lazy val store = graft.Tables.parquetCached(spark, storePath) // recovered above
-      // no distinct: the old-cell join and the anti-join below are both
-      // indifferent to a repeated id, and a distinct costs a shuffle
+      // no distinct: the old-cell lookup and the dropped keys below are
+      // both indifferent to a repeated id, and a distinct costs a shuffle
       val dirtyIds = fresh.select(col("vec_id"))
-      // ONE collect of distinct (cell, fresh?) rows: the cells the fresh
-      // assignments land in, and the old cells of the dirty ids. Both sets
-      // are ≤ nlist — model-artifact-sized, the same class as the codebook
-      // itself, however large the batch. The old-cell lookup joins the
-      // store on vec_id; at warehouse scale that side is served by a
-      // (vec_id → cell) secondary index maintained alongside
+      // the (cell, fresh?) pairs: the cells the fresh assignments land in,
+      // and the old cells of the dirty ids. Both sets are ≤ nlist —
+      // model-artifact-sized, the same class as the codebook itself,
+      // however large the batch. At warehouse scale the old-cell lookup is
+      // served by a (vec_id → cell) secondary index maintained alongside
       // (vec_id-bucketed), not a scan.
-      val newTagged = fresh.select(col("cell"), lit(true).as("fresh"))
-      val tagged =
-        if (!exists) newTagged
-        else store.join(dirtyIds, Seq("vec_id"))
-          .select(col("cell"), lit(false).as("fresh")).unionByName(newTagged)
-      val cells = tagged.distinct().collect().map(r => (r.getInt(0), r.getBoolean(1)))
+      val cells = held match {
+        case Some(rows) =>
+          // one read of the store with the held ids pushed as an IN-list
+          val ids = rows.iterator.map(_.getAs[Any]("vec_id")).filter(_ != null).toSeq.distinct
+          val old =
+            if (!exists || ids.isEmpty) Array.empty[(Int, Boolean)]
+            else store.filter(col("vec_id").isin(ids: _*)).select(col("cell")).collect()
+              .map(r => (r.getInt(0), false))
+          old ++ rows.map(r => (r.getInt(r.fieldIndex("cell")), true))
+        case None =>
+          // ONE collect of the distinct (cell, fresh?) rows, the old cells
+          // joined from the store on vec_id
+          val newTagged = fresh.select(col("cell"), lit(true).as("fresh"))
+          val tagged =
+            if (!exists) newTagged
+            else store.join(dirtyIds, Seq("vec_id"))
+              .select(col("cell"), lit(false).as("fresh")).unionByName(newTagged)
+          tagged.distinct().collect().map(r => (r.getInt(0), r.getBoolean(1)))
+      }
       // empty dirty set is a no-op BEFORE the first-build branch: building
       // a store from zero rows would swap in a data-less parquet dir that
       // poisons every later schema read at this path
@@ -110,9 +126,8 @@ object IncrementalVectors {
           .seeding(spark, storePath, fresh.schema))
       // merged content of ONLY the affected cells: partition pruning keeps
       // the read to those cells' files; unaffected cells are untouched
-      val merged = store
-        .filter(col("cell").isin(affected: _*))
-        .join(dirtyIds, Seq("vec_id"), "left_anti")
+      val merged = AtomicSwap.dropKeys(store.filter(col("cell").isin(affected: _*)),
+          dirtyIds, "vec_id")
         .select(col("vec_id"), col("label"), col("v"), col("cell"))
         .unionByName(fresh)
       val staging = new org.apache.hadoop.fs.Path(root, ".staging")
@@ -154,7 +169,7 @@ object IncrementalVectors {
         out.close()
         commitStaged(spark, storePath)
       }, () => { f.delete(staging, true); () }).seeding(spark, storePath, fresh.schema))
-    } finally fresh.unpersist()
+    } finally if (held.isEmpty) fresh.unpersist()
   }
 
   /** A cell-partitioned write's input, rebalanced on `cell`: each cell's

@@ -159,6 +159,29 @@ class CdcTickSpec extends SparkSpecBase {
       assert(p.tick(spark) === 0L)
     }
 
+    test(s"${k.name}: the persisted path (threshold -1) converges to the held path's stores and watermark") {
+      def run(dir: String) = {
+        val feed = new Feed
+        val p = k.make(feed, dir)
+        val first = p.tick(spark)
+        feed.secondBatch()
+        // a key repeated within the batch: its later row wins on both paths
+        feed.rows :+= ((3L, "eta", 2, Seq(0.0, -0.7), ts("2024-01-01 00:00:05")))
+        val second = p.tick(spark)
+        // columns by name: the anti-join puts the key column first, the
+        // literal filter keeps the store's order
+        val stores = k.stores.map { st =>
+          val df = spark.read.parquet(s"$dir/$st")
+          df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect().map(_.toString).toSeq.sorted
+        }
+        (Seq(first, second, p.tick(spark)), stores, p.currentWatermark(spark))
+      }
+      val held = run(tmp(s"${k.name}-held"))
+      assert(held._1 === Seq(2L, 2L, 0L))
+      assert(held._3 === ts("2024-01-01 00:00:05"))
+      assert(withThreshold("-1")(run(tmp(s"${k.name}-persisted"))) === held)
+    }
+
     test(s"${k.name}: a crash between the state renames (live gone, staging complete) converges") {
       val dir = tmp(s"${k.name}-swap")
       val feed = new Feed

@@ -135,6 +135,29 @@ class ComposedEtlSpec extends SparkSpecBase {
     }
   }
 
+  test("the persisted path (threshold -1) converges to the held path's stores and watermark") {
+    def run(dir: String) = {
+      val feed = new Feed
+      feed.rows += ((1L, "alpha beta", 0, Seq(0.9, 0.1), "2024-01-01 00:00:01"))
+      feed.rows += ((2L, "beta gamma", 1, Seq(0.1, 0.9), "2024-01-01 00:00:02"))
+      assert(mkPipeline(feed, dir).tick(spark) === 2L)
+      feed.rows += ((1L, "delta", 0, Seq(-0.9, 0.1), "2024-01-01 00:00:03"))
+      feed.rows += ((3L, "epsilon", 2, Seq(0.0, -0.8), "2024-01-01 00:00:04"))
+      feed.rows += ((3L, "eta epsilon", 2, Seq(0.1, -0.8), "2024-01-01 00:00:05"))
+      intercept[RuntimeException](mkPipeline(feed, dir, failAfter = Some("postings")).tick(spark))
+      val p = mkPipeline(feed, dir)
+      assert(p.tick(spark) === 2L)
+      assert(p.tick(spark) === 0L)
+      (docsOf(dir), postingsOf(dir), vectorsOf(dir), p.currentWatermark(spark))
+    }
+    val held = run(tmp("held"))
+    assert(held._1 === Map(1L -> "DELTA", 2L -> "BETA GAMMA", 3L -> "ETA EPSILON"))
+    assert(held._2.map(_._1) === Set("delta", "beta", "gamma", "eta", "epsilon"))
+    assert(held._3.view.mapValues(_._2).toMap === Map(1L -> 2, 2L -> 1, 3L -> 3))
+    assert(held._4 === java.sql.Timestamp.valueOf("2024-01-01 00:00:05"))
+    assert(withThreshold("-1")(run(tmp("persisted"))) === held)
+  }
+
   private def dataFiles(dir: java.io.File): Seq[String] =
     dir.listFiles().toSeq.map(_.getName)
       .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))

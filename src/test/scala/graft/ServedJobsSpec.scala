@@ -1,10 +1,7 @@
 package graft
 
 import graft.ops.SearchOps
-import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import scala.jdk.CollectionConverters._
 
 /** The Spark jobs a warm, repeated query of each served search face starts,
   * construction and collect together (sf0.01; AQE on, as served). On a
@@ -14,33 +11,6 @@ import scala.jdk.CollectionConverters._
   */
 class ServedJobsSpec extends SparkSpecBase {
   private val sf01 = "/root/testdata/sf0.01"
-
-  /** Jobs started by `body` on this thread (tagged by a local property, so a
-    * straggler from an earlier test never counts), once the listener bus
-    * has stopped delivering.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val tag = s"served-jobs-${System.nanoTime}"
-    val jobs = new ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p => Option(p.getProperty("graft.test.tag")))
-          .foreach(jobs.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    sc.setLocalProperty("graft.test.tag", tag)
-    try {
-      body
-      var prev = -1
-      var i = 0
-      while (jobs.size != prev && i < 20) { prev = jobs.size; Thread.sleep(100); i += 1 }
-      jobs.asScala.count(_ == tag)
-    } finally {
-      sc.setLocalProperty("graft.test.tag", null)
-      sc.removeSparkListener(l)
-    }
-  }
 
   /** (face, query, most jobs a warm repeat may start). */
   private val faces: Seq[(String, () => DataFrame, Int)] = Seq(

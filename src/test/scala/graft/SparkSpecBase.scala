@@ -1,7 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** One shared local SparkSession for the whole forked test JVM — suites are
   * read-only over /root/testdata, so sharing is safe and saves ~10s/suite.
@@ -43,5 +46,33 @@ abstract class SparkSpecBase extends AnyFunSuite {
     val prev = kvs.map { case (k, _) => k -> spark.conf.get(k) }
     kvs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  /** Spark jobs started by `body` on this thread and on the threads it
+    * starts with this thread's local properties (tagged by one, so a
+    * straggler from an earlier test never counts), once the listener bus
+    * has stopped delivering.
+    */
+  protected def jobsOf(body: => Unit): Int = {
+    val tag = s"spec-jobs-${System.nanoTime}"
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("graft.test.tag")))
+          .foreach(jobs.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    sc.setLocalProperty("graft.test.tag", tag)
+    try {
+      body
+      var prev = -1
+      var i = 0
+      while (jobs.size != prev && i < 20) { prev = jobs.size; Thread.sleep(100); i += 1 }
+      jobs.asScala.count(_ == tag)
+    } finally {
+      sc.setLocalProperty("graft.test.tag", null)
+      sc.removeSparkListener(l)
+    }
   }
 }
